@@ -203,10 +203,12 @@ class CrawlConfig:
     # wide frontiers get the Exchange-free anti-join without opting in.
     state_backend: str = "auto"  # auto | parquet | bucketed
     # Pages-side storage bucketing for the FETCH join (the engine's biggest
-    # join: frontier ⋈ pages on url, html-heavy). Default (None): AQE
-    # broadcasts the small frontier side and the page corpus streams in
-    # place. At 100 TB neither side broadcasts and a plain equi-join would
-    # SHUFFLE THE HTML — the round's dominant cost. Set ``pages_table`` to
+    # join: frontier LEFT OUTER ⋈ pages on url, html-heavy). A left outer
+    # join can only build its right side, so a corpus under the broadcast
+    # threshold is broadcast as the PAGES side and the frontier streams; the
+    # frontier side is never the one broadcast. At 100 TB the corpus does
+    # not broadcast and a plain equi-join would SHUFFLE THE HTML — the
+    # round's dominant cost. Set ``pages_table`` to
     # the name of a session table CLUSTERED BY (url) (Iceberg
     # bucket(N, url) analogue; see Engine.create_pages_table): each round
     # the admitted frontier is staged into a table bucketed the same way
@@ -723,13 +725,17 @@ class Engine:
             page_cols.append(F.col("final_url").alias("_p_final_url"))
         pages = pages_src.select(*page_cols)
         # NOTE on the fetch join's pages side: no engine-side repartition or
-        # cache — measured slower here. Default mode: AQE broadcasts the
-        # (small) frontier side, so the html-heavy page corpus is streamed
-        # in place and never exchanged. Cluster-scale mode
-        # (cfg.pages_table): the corpus is a url-bucketed table and each
-        # round's admitted frontier is staged into the same bucketing, so
-        # the join is a storage-partitioned SMJ with ZERO Exchanges even
-        # when neither side broadcasts (tools/bucketed_fetch_ab.py).
+        # cache — measured slower here. The join is a LEFT OUTER join, which
+        # can only build its right side: when the page corpus is under the
+        # broadcast threshold (both modes, at test and benchmark scale) the
+        # plan is BroadcastHashJoin BuildRight with the PAGES side
+        # broadcast, and the frontier side streams. Above the threshold the
+        # default mode shuffles both sides on `url` — html included.
+        # Cluster-scale mode (cfg.pages_table): the corpus is a url-bucketed
+        # table and each round's admitted frontier is staged into the same
+        # bucketing, so without a broadcast the join is a
+        # storage-partitioned SMJ with ZERO Exchanges
+        # (tools/bucketed_fetch_ab.py).
 
         start = self.latest_round(root) if resume else None
         if start is not None:
@@ -1045,7 +1051,23 @@ class Engine:
             # add a cache pass per round.
 
             # fetch = left equi-join against the page universe ------------
-            fetched = admitted.join(pages, admitted["url"] == pages["_p_url"], "left")
+            # The parse and normalize UDFs run in the join's stage, so its
+            # task count is the round's Python task count. Size it from the
+            # cores and the frontier, not from the storage layout (one
+            # frontier file = one task; a bucketed table = one task per
+            # bucket however few rows it holds). A hash repartition of the
+            # html-free admitted rows costs one tiny shuffle (when the pages
+            # side does not broadcast, the join's own shuffle on url replaces
+            # it); in pages_table mode coalesce keeps the storage-partitioned
+            # join Exchange-free.
+            n_udf = min(spark.sparkContext.defaultParallelism, frontier_count)
+            if cfg.pages_table is None:
+                to_fetch = admitted.repartition(n_udf, F.col("url_hash"))
+                fetched = to_fetch.join(pages, to_fetch["url"] == pages["_p_url"], "left")
+            else:
+                fetched = admitted.join(
+                    pages, admitted["url"] == pages["_p_url"], "left"
+                ).coalesce(n_udf)
             if os.environ.get("ANT_SPARK_EXPLAIN_FETCH") == "1":
                 import io
                 from contextlib import redirect_stdout

@@ -837,10 +837,6 @@ def winnow_fingerprints(
     """
     from pyspark.sql import Window
 
-    # per-doc shingle count comes from the ARRAY SIZE before the explode
-    # (r7): the old formulation recounted it with a second, whole-partition
-    # window pass (count(*) over doc_id) after the shuffle — a full extra
-    # buffering of every row for a number already known at projection time.
     # NOTE(r7): deriving the per-doc shingle count from size(array) before
     # the explode was tried and is SLOWER — ProjectCollapsing inlines the
     # shingle-array expression into both consumers (size and posexplode),

@@ -44,6 +44,10 @@ ENGINE_CONF: dict[str, str] = {
     # pure fixed cost (atomicity is provided by the engine's own MANIFEST
     # commit, not by the _SUCCESS protocol).
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
+    # Python workers fork from a daemon that re-reads an import archive
+    # only when it changed (worker_daemon.py): the stock daemon re-reads
+    # every archive on the worker path at the start of each Python task.
+    "spark.python.daemon.module": "ant_spark.worker_daemon",
     # Keep scheduling deterministic-ish and cheap in local mode.
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.session.timeZone": "UTC",

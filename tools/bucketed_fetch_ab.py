@@ -1,8 +1,9 @@
 """A/B: plain vs url-bucketed pages side for the engine's FETCH join.
 
-The fetch join (admitted frontier ⋈ pages on url) is the engine's biggest
-join — the pages side carries the html. Locally AQE broadcasts the small
-frontier; at a 100 TB corpus neither side broadcasts and a plain equi-join
+The fetch join (admitted frontier LEFT OUTER ⋈ pages on url) is the
+engine's biggest join — the pages side carries the html. A left outer join
+can only build its right side, so locally the small PAGES side is
+broadcast; at a 100 TB corpus it does not broadcast and a plain equi-join
 SHUFFLES THE HTML every round. The cluster-scale answer is storage
 bucketing: the corpus lives in a table CLUSTERED BY (url)
 (Engine.create_pages_table; Iceberg bucket(N, url) analogue) and each
