@@ -1004,7 +1004,7 @@ def _q_crawl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Workers=1 FIFO order ([0,1,2,4,5] on the golden site).
     res = Engine(
         spark, pages, robots,
-        CrawlConfig(max_rounds=6, ordering="bfs", metrics_mode="partition"),
+        CrawlConfig(max_rounds=6, ordering="bfs"),
     ).run(seeds)
     return res.fetched_log.select("seq", "url", "status", "n_links").orderBy("seq")
 
@@ -1026,7 +1026,6 @@ def _q_crawl_render(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, pages, None,
         CrawlConfig(
             max_rounds=6, ordering="bfs", render_fn=fake_js_renderer,
-            metrics_mode="partition",
         ),
     ).run(seeds)
     return res.fetched_log.select("seq", "url", "status", "n_links").orderBy("seq")
@@ -1058,7 +1057,6 @@ def _q_crawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         CrawlConfig(
             max_rounds=12, ordering="bfs", host_rates={"example.com": 1},
             queue_policy="priority", priority_fn=prio,
-            metrics_mode="partition",
         ),
     ).run(seeds)
     return res.fetched_log.select("round", "seq", "url").orderBy("seq")
@@ -1146,7 +1144,7 @@ def _q_crawl_to_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     robots = spark.createDataFrame(robots_pdf, schema=schemas.ROBOTS)
     res = Engine(
         spark, pages, robots,
-        CrawlConfig(max_rounds=6, ordering="bfs", metrics_mode="partition"),
+        CrawlConfig(max_rounds=6, ordering="bfs"),
     ).run(seeds)
     docs = res.fetched_log.select(
         F.col("seq").alias("doc_id"), "text", F.lit("crawl").alias("source")
@@ -1218,7 +1216,6 @@ def _q_robots_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, pages, feed,
             CrawlConfig(
                 max_rounds=8, ordering="bfs", robots_max_age_seconds=ttl,
-                metrics_mode="partition",
             ),
         ).run(seeds)
         outs.append(
@@ -1250,7 +1247,7 @@ def _q_warc_tagsoup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = warc_to_pages(read_warc(spark, path))
     res = Engine(
         spark, pages, None,
-        CrawlConfig(max_rounds=6, ordering="bfs", metrics_mode="partition"),
+        CrawlConfig(max_rounds=6, ordering="bfs"),
     ).run(seeds)
     return res.fetched_log.select(
         "seq", "url", "status", "n_links", "text"
@@ -1324,7 +1321,7 @@ def _q_crawl_redirects(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = spark.createDataFrame(pd.DataFrame(rows), schema=pages_schema)
     res = Engine(
         spark, pages, None,
-        CrawlConfig(max_rounds=8, ordering="bfs", metrics_mode="partition"),
+        CrawlConfig(max_rounds=8, ordering="bfs"),
     ).run(["http://s.test/"])
     return res.fetched_log.select(
         "seq", "url", "status", "final_url", "text"

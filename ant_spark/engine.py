@@ -36,11 +36,14 @@ mode — matches the reference's Workers>1 "any order" semantics).
 
 from __future__ import annotations
 
+import io
 import json
 import math
 import os
+import re
 import tempfile
 import time
+from contextlib import redirect_stdout
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -52,7 +55,7 @@ def _trace(label: str, t0: float) -> float:
         print(f"    [trace] {label}: {time.time() - t0:.2f}s", flush=True)
     return time.time()
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ant_spark import schemas
@@ -69,6 +72,40 @@ from ant_spark.functions.urlnorm import (
 from ant_spark.operators import politeness, robots as robots_ops
 from ant_spark.operators.politeness import UNLIMITED_BUDGET
 from ant_spark.operators.dedupe import BloomSidecar, exact_new, first_occurrence
+
+
+def count_exchanges(plan: str) -> int:
+    """Exchange nodes (shuffle, broadcast or reused) in an
+    ``explain("formatted")`` plan. The formatted plan names every node
+    twice, once in the tree and once as a numbered details header; only
+    the headers are counted."""
+    return len(re.findall(r"^\(\d+\) \w*Exchange\b", plan, re.M))
+
+
+def _explain(env: str, tag: str, df: DataFrame, formatted: bool = True) -> None:
+    """Audit hook: when env var ``env`` is "1", print ``df``'s physical plan
+    after a ``[tag]`` line; a formatted plan's line also carries
+    ``Exchanges=N`` (count_exchanges). tools/explain_audit.py,
+    tools/bucketed_fetch_ab.py and tools/round_plan_dump.py parse these."""
+    if os.environ.get(env) != "1":
+        return
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted" if formatted else "simple")
+    plan = buf.getvalue()
+    head = f"[{tag}] Exchanges={count_exchanges(plan)}" if formatted else f"[{tag}]"
+    print(f"{head}\n{plan}", flush=True)
+
+
+def _stage_rows(df: DataFrame, stages: dict[str, Column]) -> DataFrame:
+    """One ``(stage, partition)`` row per row of ``df`` and stage whose
+    condition holds on that row (a row can count toward several stages);
+    ``partition`` is the row's partition of ``df``."""
+    names = F.array(*(F.when(c, F.lit(s)) for s, c in stages.items()))
+    return df.select(
+        F.explode(F.array_compact(names)).alias("stage"),
+        F.spark_partition_id().alias("partition"),
+    )
 
 
 class CrawlError(RuntimeError):
@@ -226,11 +263,6 @@ class CrawlConfig:
     # free); on a real cluster network shuffle makes it pay far earlier —
     # tune per deployment.
     bucketed_switch_rows: int = 1_000_000
-    # Stage counters: 'observe' piggybacks df.observe accumulators on the
-    # jobs that already run (zero extra Spark jobs per round; counts recorded
-    # with partition=-1); 'partition' runs the per-partition lineage job
-    # (one extra concurrent job) — the full north-rule lineage mode.
-    metrics_mode: str = "observe"  # observe | partition
     # Compact the append-only seen deltas into one base dir whenever more
     # than this many delta dirs accumulate (reference sweeper analogue,
     # antcache/disk.go:310-377; production = Iceberg compaction). Keeps the
@@ -655,10 +687,6 @@ class Engine:
         root = self._init_dirs()
         if cfg.state_backend not in ("auto", "parquet", "bucketed"):
             raise ValueError(f"unknown state_backend {cfg.state_backend!r}")
-        if cfg.metrics_mode not in ("observe", "partition"):
-            # an unknown mode would silently zero every stage counter (and
-            # frontier_count with it, ending the crawl after one round)
-            raise ValueError(f"unknown metrics_mode {cfg.metrics_mode!r}")
         self._bucketed = cfg.state_backend == "bucketed"
         if cfg.state_backend != "parquet" or cfg.pages_table is not None:
             import hashlib
@@ -926,39 +954,21 @@ class Engine:
             waiting = frontier.filter(F.col("not_before") > round_ts)
 
             # robots (broadcast join + vectorized allow test) ------------
-            # metrics_mode='observe': counters ride as CollectMetrics nodes
-            # under the persists, filled by the materialize/write jobs that
-            # run anyway — the round schedules ZERO extra jobs for metrics.
-            observe = cfg.metrics_mode == "observe"
-            obs_rb = Observation() if observe else None
-            obs_rb_aggs: list = []
+            # rb_stages / proc_stages: the round's stage counters, counted
+            # per partition over the cached frames at commit time.
+            rb_stages = {"eligible": F.lit(True)}
             if self._robots_is_empty():
                 # no robots anywhere ⇒ allow-all; skip the join + UDFs
-                rb = eligible.withColumn("crawl_delay", F.lit(None).cast("double"))
-                if observe:
-                    obs_rb_aggs = [
-                        F.count(F.lit(1)).alias("eligible"),
-                        F.sum(F.lit(0)).alias("robots_denied"),
-                    ]
-                    rb = rb.observe(obs_rb, *obs_rb_aggs)
-                rb = rb.persist()
+                rb = eligible.withColumn(
+                    "crawl_delay", F.lit(None).cast("double")
+                ).persist()
                 allowed = rb
-                denied = rb.filter(F.lit(False))
             else:
                 rb = robots_ops.with_robots(
                     eligible, self._robots_for_round(r), cfg.ua, path_of(F.col("url"))
-                )
-                if observe:
-                    obs_rb_aggs = [
-                        F.count(F.lit(1)).alias("eligible"),
-                        F.sum(
-                            F.when(~F.col("robots_allowed"), 1).otherwise(0)
-                        ).alias("robots_denied"),
-                    ]
-                    rb = rb.observe(obs_rb, *obs_rb_aggs)
-                rb = rb.persist()
+                ).persist()
                 allowed = rb.filter(F.col("robots_allowed")).drop("robots_allowed")
-                denied = rb.filter(~F.col("robots_allowed"))
+                rb_stages["robots_denied"] = ~F.col("robots_allowed")
 
             # politeness budget window -----------------------------------
             # fast path: with no rate limits and no crawl-delays anywhere,
@@ -967,7 +977,9 @@ class Engine:
             pol_off = self._politeness_static_off()
             if pol_off:
                 admitted = allowed.drop("crawl_delay")
-                deferred = spark.createDataFrame([], eligible.schema)
+                # an empty relation the optimizer drops from every union (a
+                # createDataFrame([]) would scan a Python RDD in each action)
+                deferred = eligible.filter(F.lit(False))
             else:
                 budget = politeness.host_budget_expr(
                     cfg.round_seconds,
@@ -1016,6 +1028,9 @@ class Engine:
                         admitted, int(cfg.global_rate * cfg.round_seconds), order_cols
                     )
                     deferred = deferred.unionByName(deferred2.select(*frontier.columns))
+                # read by the stage count and the frontier write: cached so
+                # the budget windows run once for it, not once per action
+                deferred = deferred.persist()
             if cfg.pages_table is not None:
                 # stage the admitted frontier into a table bucketed like the
                 # pages corpus; only the tiny frontier side is written. The
@@ -1068,19 +1083,11 @@ class Engine:
                 fetched = admitted.join(
                     pages, admitted["url"] == pages["_p_url"], "left"
                 ).coalesce(n_udf)
-            if os.environ.get("ANT_SPARK_EXPLAIN_FETCH") == "1":
-                import io
-                from contextlib import redirect_stdout
-
-                buf = io.StringIO()
-                with redirect_stdout(buf):
-                    fetched.explain("formatted")
-                plan = buf.getvalue()
-                print(
-                    f"[fetch-plan round={r} bucketed={cfg.pages_table is not None}] "
-                    f"Exchanges={plan.count('Exchange') // 2}\n{plan}",
-                    flush=True,
-                )
+            _explain(
+                "ANT_SPARK_EXPLAIN_FETCH",
+                f"fetch-plan round={r} bucketed={cfg.pages_table is not None}",
+                fetched,
+            )
             # temporary statuses (fetcher.go:63-69) recover once attempt
             # reaches ok_after_attempt; other ≥400 statuses are permanent.
             status_eff = (
@@ -1124,43 +1131,33 @@ class Engine:
                 .withColumn("parsed", self._parse_udf(parse_base, html_in))
                 .drop("html", "_p_url", "_p_status", "ok_after_attempt")
             )
-            obs_proc = Observation() if observe else None
-            obs_proc_aggs: list = []
-            if observe:
-                _se = F.col("status_eff")
-                _temp = _se.isin(503, 504, 429)
-                _n1 = lambda c: F.sum(F.when(c, 1).otherwise(0))  # noqa: E731
-                obs_cols = [
-                    _n1(_se == 200).alias("fetched"),
-                    _n1(_se == 404).alias("missing_404"),
-                    _n1(_temp & (F.col("attempt") + 1 <= cfg.max_attempts)).alias("retried"),
-                    _n1(_temp & (F.col("attempt") + 1 > cfg.max_attempts)).alias("dead_letter"),
-                    _n1((_se >= 400) & ~_se.isin(404, 503, 504, 429)).alias("perm_error"),
-                ]
-                if has_redirects:
-                    obs_cols.append(
-                        _n1(F.col("_p_final_url").isNotNull()).alias("redirected")
-                    )
-                obs_proc_aggs = obs_cols
-                processed = processed.observe(obs_proc, *obs_cols)
             processed = processed.persist()
 
-            ok = processed.filter(F.col("status_eff") == 200)
-            missing = processed.filter(F.col("status_eff") == 404)  # consumed
-            temp_fail = processed.filter(F.col("status_eff").isin(503, 504, 429))
-            perm_fail = processed.filter(
-                (F.col("status_eff") >= 400)
-                & ~F.col("status_eff").isin(404, 503, 504, 429)
-            )
+            # one status stage per processed row; 404s are consumed, dead
+            # letters and permanent errors leave the crawl (only counted)
+            _se = F.col("status_eff")
+            _temp = _se.isin(503, 504, 429)
+            proc_stages = {
+                "fetched": _se == 200,
+                "missing_404": _se == 404,
+                "retried": _temp & (F.col("attempt") + 1 <= cfg.max_attempts),
+                "dead_letter": _temp & (F.col("attempt") + 1 > cfg.max_attempts),
+                "perm_error": (_se >= 400) & ~_se.isin(404, 503, 504, 429),
+            }
+            if has_redirects:
+                # every row whose chain was followed, wherever it landed
+                # (a 200, a missing page or a 508 loop)
+                proc_stages["redirected"] = F.col("_p_final_url").isNotNull()
+
+            ok = processed.filter(proc_stages["fetched"])
             retry = (
-                temp_fail.filter(F.col("attempt") + 1 <= cfg.max_attempts)
+                processed.filter(proc_stages["retried"])
                 .select(
                     "url", "url_hash", "host", "depth", "seq", "priority",
                     (F.col("attempt") + 1).alias("attempt"),
                     (F.lit(round_ts) + _backoff_ms(F.col("attempt"), cfg.min_backoff_ms, cfg.max_backoff_ms)).alias("not_before"),
                 )
             )
-            dead = temp_fail.filter(F.col("attempt") + 1 > cfg.max_attempts)
 
             parsed = ok  # 200s already carry the fused-parse struct
 
@@ -1257,19 +1254,11 @@ class Engine:
 
             if cfg.dedupe == "exact" or self._bloom is None:
                 new_links = exact_new(links, seen)
-                if os.environ.get("ANT_SPARK_EXPLAIN_DEDUPE") == "1":
-                    import io
-                    from contextlib import redirect_stdout
-
-                    buf = io.StringIO()
-                    with redirect_stdout(buf):
-                        new_links.explain("formatted")
-                    plan = buf.getvalue()
-                    print(
-                        f"[dedupe-plan round={r} backend={cfg.state_backend}] "
-                        f"Exchanges={plan.count('Exchange')}\n{plan}",
-                        flush=True,
-                    )
+                _explain(
+                    "ANT_SPARK_EXPLAIN_DEDUPE",
+                    f"dedupe-plan round={r} backend={cfg.state_backend}",
+                    new_links,
+                )
             else:
                 # distinct url_hash probe: two distinct same-round URLs with
                 # colliding hashes must not fan out the equi-join below
@@ -1359,23 +1348,13 @@ class Engine:
                     )
                     .drop("_pj_hash", "_pj_url", "_pj_prio")
                 )
-            obs_new = Observation() if observe else None
-            obs_new_aggs: list = []
-            if observe:
-                obs_new_aggs = [F.count(F.lit(1)).alias("enqueued")]
-                new_rows = new_rows.observe(obs_new, *obs_new_aggs)
             new_rows = new_rows.persist()
-            if os.environ.get("ANT_SPARK_EXPLAIN_ROUND") == "1":
-                # audit hook: dump the full round plan (seq window + dedupe
-                # + parse) so tools/explain_audit.py can assert scale
-                # invariants, e.g. no partition-less Window in the plan.
-                import io
-                from contextlib import redirect_stdout
-
-                buf = io.StringIO()
-                with redirect_stdout(buf):
-                    new_rows.explain()
-                print(f"[round-plan round={r}]\n{buf.getvalue()}", flush=True)
+            # the full round plan (seq window + dedupe + parse), for scale
+            # invariants such as no partition-less Window
+            _explain(
+                "ANT_SPARK_EXPLAIN_ROUND", f"round-plan round={r}", new_rows,
+                formatted=False,
+            )
 
             if _TRACE:
                 tt = time.time()
@@ -1384,37 +1363,33 @@ class Engine:
                 processed.count(); tt = _trace("mat:processed(join+udf)", tt)
                 new_rows.count(); tt = _trace("mat:new_rows(dedupe+seq)", tt)
 
-            # ---- commit: state snapshots + log/metrics appends ----------
-            # Materialize the two shared caches once, then run the three
-            # independent writes as CONCURRENT Spark jobs (one session,
-            # separate threads — the scheduler interleaves their stages).
-            # r7: the log write depends only on `processed`, so it is
-            # submitted right after processed.count() and overlaps the
-            # new_rows materialization (guide §2.6). BOTH counts stay:
-            # Observation metrics on a persisted subtree finalize reliably
-            # only when the observed DF is the action target (gotcha list).
+            # ---- commit: stage counters + state snapshots + log ---------
+            # The round's counters come from the two actions that
+            # materialize its caches. First one collect() counts every stage
+            # of rb, processed (filled by this job), waiting and deferred:
+            # one union, then ONE groupBy — a groupBy per branch would give
+            # each branch its own shuffle. Then the three independent writes
+            # run as CONCURRENT Spark jobs (one session, separate threads);
+            # the log write needs only `processed`, so it overlaps the
+            # new_rows count, which materializes new_rows before the
+            # frontier and seen writes read it.
             t = time.time()
-            processed.count()
-            t = _trace("materialize:processed", t)
+            counts = (
+                _stage_rows(rb, rb_stages)
+                .unionByName(_stage_rows(processed, proc_stages))
+                .unionByName(_stage_rows(waiting, {"waiting": F.lit(True)}))
+                .unionByName(_stage_rows(deferred, {"deferred": F.lit(True)}))
+                .groupBy("stage", "partition")
+                .count()
+                .collect()
+            )
+            t = _trace("materialize:processed+counts", t)
 
             rd = self._round_dir(root, r + 1)
             log_path = os.path.join(rd, "fetched_log")
-            waiting_sel = waiting.select(*frontier.columns)
-            deferred_sel = deferred.select(*frontier.columns)
-            obs_waiting = obs_deferred = None
-            if observe:
-                # these two branches flow only into the frontier write — the
-                # write job fills them (no standalone count jobs).
-                obs_waiting, obs_deferred = Observation(), Observation()
-                waiting_sel = waiting_sel.observe(
-                    obs_waiting, F.count(F.lit(1)).alias("waiting")
-                )
-                deferred_sel = deferred_sel.observe(
-                    obs_deferred, F.count(F.lit(1)).alias("deferred")
-                )
             new_frontier = (
-                waiting_sel
-                .unionByName(deferred_sel)
+                waiting.select(*frontier.columns)
+                .unionByName(deferred.select(*frontier.columns))
                 .unionByName(retry.select(*frontier.columns))
                 .unionByName(new_rows.select(*frontier.columns))
             )
@@ -1460,111 +1435,27 @@ class Engine:
                 _trace("w:seen", t0)
                 return out
 
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                f_log = pool.submit(_w_log)
+                enqueued = (
+                    new_rows.groupBy(F.spark_partition_id().alias("partition"))
+                    .count()
+                    .collect()
+                )
+                t = _trace("materialize:new_rows", t)
+                f_frontier = pool.submit(_w_frontier)
+                f_seen = pool.submit(_w_seen)
+                f_log.result()
+                frontier2 = f_frontier.result()
+                f_seen.result()
+            # zero-count stages have no rows (a groupBy of zero rows)
             by_stage: dict[str, int] = {}
-            if cfg.metrics_mode == "partition":
-                # per-partition lineage counters — ONE job for all stages
-                # (every input is cached or a small parquet scan); runs
-                # concurrently with the commit writes below.
-                pid = F.spark_partition_id().alias("partition")
-
-                def _st(df, name):
-                    return df.groupBy(pid).agg(F.count("*").alias("n")).withColumn(
-                        "stage", F.lit(name)
-                    )
-
-                stage_counts = (
-                    _st(eligible, "eligible")
-                    .unionByName(_st(waiting, "waiting"))
-                    .unionByName(_st(denied, "robots_denied"))
-                    .unionByName(_st(deferred, "deferred"))
-                    .unionByName(_st(parsed, "fetched"))
-                    .unionByName(_st(missing, "missing_404"))
-                    .unionByName(_st(retry, "retried"))
-                    .unionByName(_st(dead, "dead_letter"))
-                    .unionByName(_st(perm_fail, "perm_error"))
-                    .unionByName(_st(new_rows, "enqueued"))
-                )
-                if has_redirects:
-                    stage_counts = stage_counts.unionByName(
-                        _st(
-                            parsed.filter(F.col("_p_final_url").isNotNull()),
-                            "redirected",
-                        )
-                    )
-                with ThreadPoolExecutor(max_workers=4) as pool:
-                    # log write needs only `processed` (already cached) —
-                    # it overlaps the new_rows materialization on this
-                    # thread; frontier/seen/counts need new_rows and are
-                    # submitted after its count.
-                    f_log = pool.submit(_w_log)
-                    new_rows.count()
-                    t = _trace("materialize:new_rows", t)
-                    f_frontier = pool.submit(_w_frontier)
-                    f_seen = pool.submit(_w_seen)
-                    f_counts = pool.submit(stage_counts.collect)
-                    f_log.result()
-                    frontier2 = f_frontier.result()
-                    f_seen.result()
-                    counts = f_counts.result()
-                for row in counts:
-                    by_stage[row["stage"]] = by_stage.get(row["stage"], 0) + row["n"]
-                    metric_rows.append((r, row["partition"], row["stage"], row["n"]))
-            else:
-                with ThreadPoolExecutor(max_workers=3) as pool:
-                    # same overlap as partition mode: log write (processed
-                    # only) runs while new_rows materializes here. The
-                    # explicit new_rows.count() stays — obs_new finalizes
-                    # reliably only with the observed DF as action target.
-                    f_log = pool.submit(_w_log)
-                    new_rows.count()
-                    t = _trace("materialize:new_rows", t)
-                    f_frontier = pool.submit(_w_frontier)
-                    f_seen = pool.submit(_w_seen)
-                    f_log.result()
-                    frontier2 = f_frontier.result()
-                    f_seen.result()
-                # harvest the observations (all filled by the jobs above /
-                # the materialize pass; sum() over zero rows yields null → 0).
-                # Observation.get on a persisted subtree can intermittently
-                # fail finalization (Spark toPyRow assertion) under load; the
-                # counters drive frontier_count/next_seq, so a failed harvest
-                # must RECOUNT from the source DF (cached or cheap), never
-                # zero out — zeros would end the crawl a round early.
-                def _take(
-                    obs: Observation | None,
-                    src: DataFrame | None = None,
-                    aggs: list | None = None,
-                ):
-                    vals: dict = {}
-                    if obs is not None:
-                        try:
-                            vals = dict(obs.get)
-                        except Exception as exc:  # pragma: no cover - race
-                            import warnings
-
-                            warnings.warn(
-                                f"ant_spark: Observation harvest failed "
-                                f"({exc!r}); recounting stage metrics from "
-                                f"the cached source", stacklevel=2,
-                            )
-                            if src is not None and aggs:
-                                vals = src.agg(*aggs).collect()[0].asDict()
-                    for stage, v in vals.items():
-                        n = int(v) if v is not None else 0
-                        if n == 0:
-                            continue  # parity with partition mode: empty
-                            # stages emit no rows (groupBy of zero rows)
-                        by_stage[stage] = by_stage.get(stage, 0) + n
-                        metric_rows.append((r, -1, stage, n))
-
-                _take(obs_rb, rb, obs_rb_aggs)
-                _take(obs_proc, processed, obs_proc_aggs)
-                _take(obs_new, new_rows, obs_new_aggs)
-                _take(obs_waiting, waiting, [F.count(F.lit(1)).alias("waiting")])
-                _take(
-                    obs_deferred, deferred,
-                    [F.count(F.lit(1)).alias("deferred")],
-                )
+            for stage, part, n in sorted(
+                [(c["stage"], c["partition"], c["count"]) for c in counts]
+                + [("enqueued", c["partition"], c["count"]) for c in enqueued]
+            ):
+                by_stage[stage] = by_stage.get(stage, 0) + n
+                metric_rows.append((r, part, stage, n))
             if not self._bucketed:
                 seen_paths.append(os.path.join(rd, "seen_delta"))
             t = _trace("commit_writes+metrics(parallel)", t)
@@ -1683,6 +1574,7 @@ class Engine:
             admitted.unpersist()
             processed.unpersist()
             new_rows.unpersist()
+            deferred.unpersist()
             frontier = frontier2
             r += 1
             rounds_run += 1

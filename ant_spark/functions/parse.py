@@ -315,23 +315,6 @@ def make_text_udf(selector: str | None = None):
     return text_udf
 
 
-def make_attr_udf(selector: str, attr: str):
-    """First matched node's attribute (reference List.Attr, list.go:84-89)."""
-    from pyspark.sql.types import StringType
-
-    @pandas_udf(StringType())
-    def attr_udf(html: pd.Series) -> pd.Series:
-        def one(h):
-            if h is None:
-                return None
-            node = compile_selector(selector).match_first(parse(h))
-            return node.attr(attr) if node is not None else None
-
-        return html.map(one)
-
-    return attr_udf
-
-
 def make_links_udf():
     from pyspark.sql.types import ArrayType, StringType
 

@@ -342,10 +342,3 @@ def revalidate(
         .when(decision.isin("replaced", "error"), F.col("_o_status"))
         .alias("serve_status"),
     )
-
-
-def cache_key(url_col: Column, method: str = "GET") -> Column:
-    """The cache key (reference murmur3 of 'METHOD:url',
-    antcache/utils.go:30-34; xxhash64 here — the key never leaves the
-    engine, so hash-function parity is not required)."""
-    return F.xxhash64(F.concat(F.lit(method + ":"), url_col))

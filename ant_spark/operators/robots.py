@@ -30,7 +30,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
 
 class Rule:
@@ -169,26 +168,6 @@ def delay_one(body: str | None, status: int | None, ua: str) -> float | None:
     if body is None or (status is not None and status >= 400):
         return None
     return _parsed(body).delay(ua)
-
-
-def make_allowed_udf(ua: str):
-    """Vectorized (body, status, path) → allowed for a fixed UA."""
-
-    @pandas_udf(BooleanType())
-    def allowed_udf(body: pd.Series, status: pd.Series, path: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                allowed_one(
-                    b,
-                    int(s) if pd.notna(s) else None,
-                    p or "/",
-                    ua,
-                )
-                for b, s, p in zip(body, status, path)
-            ]
-        )
-
-    return allowed_udf
 
 
 def make_robots_udf(ua: str):

@@ -107,15 +107,6 @@ def upper_ratio(text_col: Column) -> Column:
     return F.when(n > 0, uppers / n).otherwise(F.lit(0.0))
 
 
-def mean_word_len(text_col: Column) -> Column:
-    w = words_of(text_col)
-    return F.when(
-        F.size(w) > 0,
-        F.aggregate(w, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t))
-        / F.size(w),
-    ).otherwise(F.lit(0.0))
-
-
 def quality_score(text_col: Column) -> Column:
     """Heuristic [0,1] quality: length band + stopword presence − noise.
 
@@ -244,24 +235,6 @@ def minhash_signature(text_col: Column, n_hashes: int = 16, k: int = 3) -> Colum
 
     return F.array(
         *[F.array_min(F.transform(sh, hasher(i))) for i in range(n_hashes)]
-    )
-
-
-def minhash_bands(sig_col: Column, n_bands: int, rows_per_band: int) -> Column:
-    """Band keys for LSH bucketing: md5 of each band's concatenated rows."""
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.element_at(sig_col, b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ],
-                )
-            )
-            for b in range(n_bands)
-        ]
     )
 
 

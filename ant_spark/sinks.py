@@ -1,4 +1,4 @@
-"""Sinks — JSONL scrape output and table writers.
+"""Sinks — JSONL scrape output.
 
 Reference parity: the ``ant.JSON`` scraper (``/root/reference/json.go:28-83``)
 serializes each scraped struct as one JSON line on a shared writer (mutex-
@@ -30,12 +30,3 @@ def extracted_jsonl(extracted: DataFrame) -> DataFrame:
     return extracted.orderBy("seq").select(
         F.to_json(F.struct("url", "data")).alias("line")
     )
-
-
-def write_table(df: DataFrame, path: str, bucket_col: str | None = None,
-                n_buckets: int = 32) -> None:
-    """Parquet writer with the engine's bucketing convention: repartition by
-    the bucket column so downstream joins co-locate (the plain-parquet
-    stand-in for Iceberg `bucket(N, col)` partitioning)."""
-    w = df.repartition(n_buckets, bucket_col) if bucket_col else df
-    w.write.mode("overwrite").parquet(path)

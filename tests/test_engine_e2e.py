@@ -13,6 +13,7 @@ its failure with the full traceback, keeping per-test attribution.
 import datetime as dt
 import json
 import os
+from collections import Counter
 
 import pandas as pd
 import pytest
@@ -55,6 +56,7 @@ def _w_golden(spark, tmp):
         stages[m["stage"]] = stages.get(m["stage"], 0) + m["n"]
     assert stages["robots_denied"] == 1
     assert stages["fetched"] == 5
+    return res
 
 
 def _w_matcher(spark, tmp):
@@ -205,6 +207,7 @@ def _w_bucketed_state(spark, tmp):
         ["/", "/about.html", "/products.html", "/a.html", "/b.html"])
     urls = [r["url"] for r in res.fetched_log.collect()]
     assert sorted(set(urls)) == sorted(urls)  # exactly-once across resume
+    return res
 
 
 def _w_bucketed_pages(spark, tmp):
@@ -226,6 +229,7 @@ def _w_bucketed_pages(spark, tmp):
     visited = [r["url"].replace("http://example.com", "") or "/" for r in rows]
     assert visited == ["/", "/about.html", "/products.html", "/a.html", "/b.html"]
     assert [r["seq"] for r in rows] == [0, 1, 2, 4, 5]
+    return res
 
 
 def _w_auto_switch(spark, tmp):
@@ -372,6 +376,33 @@ def _w_resume_priority_ttl(spark, tmp):
     assert len({r["url"] for r in rows}) == len(rows)
 
 
+def _check_stage_counters(res, n_seeds):
+    """Each round's counters are per-partition rows (partition >= 0) that
+    add up to the round's MANIFEST stages, its status-200 log rows and its
+    growth of total_enqueued."""
+    rows = res.metrics.collect()
+    assert rows and all(m["partition"] >= 0 for m in rows), rows
+    per_round = {}
+    for m in rows:
+        stages = per_round.setdefault(m["round"], {})
+        stages[m["stage"]] = stages.get(m["stage"], 0) + m["n"]
+    manifests = {}
+    for name in os.listdir(res.state_dir):
+        path = os.path.join(res.state_dir, name, "MANIFEST.json")
+        if name.startswith("round=") and os.path.exists(path):
+            with open(path) as f:
+                manifests[int(name.split("=")[1])] = json.load(f)
+    ok_rows = Counter(
+        r["round"] for r in res.fetched_log.filter("status = 200").collect()
+    )
+    for r, stages in per_round.items():
+        man = manifests[r + 1]  # round r commits the manifest of round r+1
+        assert stages == man["stages"], (r, stages, man["stages"])
+        assert stages.get("fetched", 0) == ok_rows[r], r
+        before = manifests[r]["total_enqueued"] if r in manifests else n_seeds
+        assert stages.get("enqueued", 0) == man["total_enqueued"] - before, r
+
+
 _WORKERS = {
     "golden": _w_golden,
     "matcher": _w_matcher,
@@ -404,6 +435,12 @@ def e2e(spark, tmp_path_factory):
 
 def test_golden_crawl_visited_set_and_bfs_order(e2e):
     e2e["golden"].result()
+
+
+def test_stage_counters_per_partition_match_manifest(e2e):
+    # golden, bucketed seen state (resumed) and pages_table crawls
+    for name in ("golden", "bucketed_state", "bucketed_pages"):
+        _check_stage_counters(e2e[name].result(), n_seeds=1)
 
 
 def test_matcher_limits_crawl(e2e):

@@ -106,6 +106,30 @@ def _w_crawl_follows(spark, tmp):
     assert stages["fetched"] == 4
 
 
+def _w_crawl_redirect_misses(spark, tmp):
+    """`redirected` counts every followed chain, not only the 200s: one
+    chain lands off the corpus (404) and one loops (508); both still carry
+    final_url."""
+    rows = [
+        _page("http://m.test/", '<body><a href="/gone">g</a>'
+                                '<a href="/x">x</a></body>'),
+        _page("http://m.test/gone", "", 301, redirect_to="/nowhere"),
+        _page("http://m.test/x", "", 301, redirect_to="/y"),
+        _page("http://m.test/y", "", 301, redirect_to="/x"),
+    ]
+    pages = spark.createDataFrame(pd.DataFrame(rows), schema=_PAGES_SCHEMA)
+    res = Engine(
+        spark, pages, None, CrawlConfig(max_rounds=4, ordering="bfs")
+    ).run(["http://m.test/"])
+    stages = {}
+    for m in res.metrics.collect():
+        stages[m["stage"]] = stages.get(m["stage"], 0) + m["n"]
+    assert stages["redirected"] == 2
+    assert stages["missing_404"] == 1  # /gone
+    assert stages["perm_error"] == 1  # /x
+    assert stages["fetched"] == 1  # /
+
+
 def _w_crawl_parity_refetch(spark, tmp):
     """redirect_seen=False (reference byte-parity mode): the engine, like
     ant, never learns the final url — a later direct link refetches."""
@@ -204,6 +228,7 @@ def _w_resume_exactly_once(spark, tmp):
 _WORKERS = {
     "resolve_chains": _w_resolve_chains,
     "crawl_follows": _w_crawl_follows,
+    "redirect_misses": _w_crawl_redirect_misses,
     "parity_refetch": _w_crawl_parity_refetch,
     "warc_location": _w_warc_location_e2e,
     "bucketed_prestaged": _w_bucketed_prestaged,
@@ -229,6 +254,10 @@ def test_resolve_redirect_chains(redir_runs):
 
 def test_crawl_follows_redirects(redir_runs):
     redir_runs["crawl_follows"].result()
+
+
+def test_redirected_counts_chains_to_misses_and_loops(redir_runs):
+    redir_runs["redirect_misses"].result()
 
 
 def test_redirect_seen_false_reference_parity(redir_runs):

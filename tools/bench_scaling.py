@@ -205,11 +205,10 @@ _DEFAULT_TAIL = """Per-round metric breakdown and the per-sf operator timings ar
 
 ## Round-2 engine improvements (each measured, same 20k-page bench crawl)
 
-- **observe-mode stage counters** (default): metrics ride as df.observe
-  accumulators on the jobs that already run — zero extra Spark jobs per
-  round. Warm A/B at 32 cores: observe 27.7-31.2s vs per-partition-job mode
-  34.8-44.7s (~25% faster); driver-cold bench crawl 51.96s (r1) → ~35-47s.
-  Per-partition lineage stays available via `metrics_mode='partition'`.
+- **stage counters on the round's own actions**: each stage is counted per
+  partition by the actions that materialize the round's caches (one
+  union + `groupBy("stage", "partition")` collect, and a per-partition
+  count of `new_rows`) instead of a separate lineage job per round.
 - **bucketed seen-state backend** (`state_backend='bucketed'`, reached
   automatically via the `'auto'` default once the seen set crosses the
   threshold): the seen set lives in ONE table CLUSTERED BY url_hash;

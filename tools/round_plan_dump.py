@@ -17,7 +17,7 @@ Usage:
 The second argument selects which repo's ant_spark to import (defaults to
 this tool's parent repo), so the SAME scrubber runs for both versions.
 Scrubbed: expr ids (#123), plan/node ids, python UDF names, checkpoint
-tmp paths, Observation UUIDs.
+tmp paths, UUIDs.
 """
 
 from __future__ import annotations

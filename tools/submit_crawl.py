@@ -43,8 +43,6 @@ def main() -> None:
     ap.add_argument("--dedupe", default="exact")
     ap.add_argument("--state-backend", default="auto",
                     choices=["auto", "parquet", "bucketed"])
-    ap.add_argument("--metrics-mode", default="observe",
-                    choices=["observe", "partition"])
     ap.add_argument("--ua", default="antbot")
     ap.add_argument("--warc", default=None,
                     help="read the page corpus from WARC file(s)/glob "
@@ -113,7 +111,6 @@ def main() -> None:
         ordering=args.ordering,
         dedupe=args.dedupe,
         state_backend=args.state_backend,
-        metrics_mode=args.metrics_mode,
         max_rounds=args.max_rounds,
         checkpoint_dir=args.checkpoint,
         **extra,
