@@ -29,10 +29,16 @@ does, implicitly-closed formatting re-opens before later content — re-run
 PLAINTEXT-to-EOF (a stray ``</plaintext>`` is character data — the HTML5
 tokenizer has no exit from the PLAINTEXT state). It is NOT a full HTML5
 parser, but no known divergence from x/net/html remains on the covered
-construct set. The synthetic corpus generator
-(ant_spark.sources.webgraph) emits HTML inside this subset; golden tests pin
-the fixture pages' extracted text, and a tag-soup differential fuzz pins
-stream/DOM agreement over the widened alphabet.
+construct set.
+
+One tree builder, ``_TreeBuilder``, holds those rules and writes to a sink:
+``_DomSink`` builds the ``Node`` tree (``parse()``, for selectors, scrape
+specs and readability); ``_ExtractSink`` builds none and appends text and
+hrefs to buffers (``stream_extract()``, the parse-UDF hot path). Golden
+tests pin the fixture pages' text, a tag-soup differential fuzz pins the
+extract sink's buffers to ``fast_extract`` over the DOM sink's tree, and a
+tree-shape property pins the DOM on its own (parent pointers, no node
+reachable twice).
 
 Used exclusively inside Arrow-batched pandas UDFs (functions/parse.py) —
 driver code never touches per-row HTML.
@@ -117,6 +123,17 @@ _TABLE_STRUCTURAL = frozenset(
     "tr td th tbody thead tfoot caption colgroup col".split()
 )
 _TABLE_BOUNDARY = TABLE_SCOPE | frozenset(("td", "th", "caption"))
+# open element → the incoming start tags that imply its end tag (td/th,
+# which also clear the formatting list to their marker, are handled apart)
+_IMPLIED_END = {
+    "p": P_CLOSERS,
+    "li": frozenset(("li",)),
+    "dt": frozenset(("dt", "dd")),
+    "dd": frozenset(("dt", "dd")),
+    "tr": frozenset(("tr",)),
+    "option": frozenset(("option", "optgroup")),
+}
+_NEVER = re.compile(r"(?!)")  # a pattern that never matches
 
 
 class Node:
@@ -152,93 +169,140 @@ def text(node: Node | None) -> str:
 
     Text node → its data verbatim. Otherwise concatenate, depth-first, the
     data of child text nodes and the text() of child *elements*; comments and
-    doctypes contribute nothing; no trimming or whitespace folding.
+    doctypes contribute nothing; no trimming or whitespace folding. The walk
+    is iterative, so no nesting depth raises RecursionError.
     """
     if node is None:
         return ""
     if node.type == TEXT:
         return node.data
     out: list[str] = []
-    _text_into(node, out)
+    stack = node.children[::-1]
+    while stack:
+        n = stack.pop()
+        if n.type == TEXT:
+            out.append(n.data)
+        elif n.type == ELEMENT and n.children:
+            stack.extend(reversed(n.children))
     return "".join(out)
 
 
-def _text_into(node: Node, out: list[str]) -> None:
-    for c in node.children:
-        if c.type == TEXT:
-            out.append(c.data)
-        elif c.type == ELEMENT:
-            _text_into(c, out)
+def _nearest_table(stack: list):
+    """Topmost open <table>: fostered content goes just before it."""
+    for el in reversed(stack):
+        if el.tag == "table":
+            return el
+    return None
 
 
-class _DomParser(HTMLParser):
-    """Tree builder with implied html/head/body and void/implied-end tags."""
+class _TreeBuilder(HTMLParser):
+    """The tree-construction rules, written once, emitting to a sink.
+
+    The open-element stack and the active formatting list hold the sink's
+    element objects; the builder reads only their ``.tag`` and ``.attrs``.
+    Everything that differs between outputs is a sink call:
+
+    - ``element(tag, attrs, parent, table)`` opens an element under
+      ``parent``, or — foster parenting — just before the open ``table``;
+    - ``text(parent, data, table)`` appends text the same way;
+    - ``pop(stack, i)`` closes ``stack[i:]``, innermost first;
+    - ``comment(parent, data)`` and ``doctype(data)``;
+    - the adoption agency's moves: ``clone(tag, attrs, parent, table)``
+      makes a clone that will live under ``parent`` (or before ``table``),
+      ``move(node, parent, stack)`` re-parents a node (fostered from the
+      open-element ``stack`` when given), and ``split(tag, attrs, fb)``
+      clones the formatting element into ``fb`` around ``fb``'s children.
+    html/head/body are ``element`` calls too, never pushed on the stack.
+    """
 
     # widen html.parser's script/style-only raw-text handling to the full
     # HTML5 RAWTEXT/RCDATA/PLAINTEXT element set (tags inside become text)
     CDATA_CONTENT_ELEMENTS = tuple(sorted(RAWTEXT_ELEMENTS))
 
-    def __init__(self):
+    def __init__(self, sink):
         super().__init__(convert_charrefs=True)
-        self.document = Node(DOCUMENT)
-        self._stack: list[Node] = []
-        self._html: Node | None = None
-        self._head: Node | None = None
-        self._body: Node | None = None
-        self._mode = "initial"  # initial → before_body → in_body
-        # list of active formatting elements: Node refs + scope markers
+        self.sink = sink
+        self._element = sink.element
+        self._text = sink.text
+        self._pop = sink.pop
+        self._stack: list = []
+        # list of active formatting elements: element refs + scope markers
         self._afe: list = []
+        self._html = self._head = self._body = None
+
+    def build(self, html: str | bytes):
+        """Feed a whole document (bytes are decoded first); returns the sink."""
+        if isinstance(html, (bytes, bytearray, memoryview)):
+            from ant_spark.functions.encoding import decode_html
+
+            html = decode_html(html)
+        self.feed(html)
+        self.close()
+        # EOF inside a raw-text element (unclosed <plaintext>/<xmp>/…):
+        # html.parser leaves the tail buffered; HTML5 emits it as text.
+        if self.cdata_elem and self.rawdata:
+            data, self.rawdata = self.rawdata, ""
+            self.handle_data(data)
+        self._pop(self._stack, 0)
+        self._ensure_body()  # documents always end up with html/head/body
+        return self.sink
 
     # -- structure helpers -------------------------------------------------
-    def _ensure_html(self) -> Node:
+    def _ensure_html(self):
         if self._html is None:
-            self._html = Node(ELEMENT, "html")
-            self.document.append(self._html)
+            self._html = self._element("html", [], self.sink.document, None)
         return self._html
 
-    def _ensure_head(self) -> Node:
-        html = self._ensure_html()
+    def _ensure_head(self):
         if self._head is None:
-            self._head = Node(ELEMENT, "head")
-            html.append(self._head)
+            self._head = self._element("head", [], self._ensure_html(), None)
         return self._head
 
-    def _ensure_body(self) -> Node:
-        html = self._ensure_html()
-        self._ensure_head()
+    def _ensure_body(self):
+        # a body exists iff the builder is "in body" (WHATWG insertion mode)
         if self._body is None:
-            self._body = Node(ELEMENT, "body")
-            html.append(self._body)
-        self._mode = "in_body"
+            self._ensure_head()
+            self._body = self._element("body", [], self._html, None)
         return self._body
 
-    def _current(self) -> Node:
+    def _top_parent(self, tag: str):
+        """Head or body (WHATWG routing) for an element opened at top level."""
+        if self._body is None and tag in HEAD_ELEMENTS:
+            return self._ensure_head()
+        return self._ensure_body()
+
+    def _current(self):
         if self._stack:
             return self._stack[-1]
-        if self._mode == "in_body" and self._body is not None:
-            return self._body
-        return self.document
+        return self._body or self.sink.document
+
+    def _insert(self, tag: str, attrs, parent):
+        """Open an element under ``parent``, honoring table foster
+        parenting (the one rule that moves content)."""
+        if parent.tag in TABLE_SCOPE and tag not in TABLE_ALLOWED:
+            return self._element(tag, attrs, parent, _nearest_table(self._stack))
+        return self._element(tag, attrs, parent, None)
 
     # -- active formatting elements (WHATWG list + adoption agency) --------
-    def _afe_push(self, node: Node) -> None:
+    def _afe_push(self, el) -> None:
         """Push with the Noah's Ark clause: at most 3 entries with the same
         tag+attrs since the last marker (the EARLIEST such entry drops)."""
         same = []
         for e in reversed(self._afe):
             if e is _AFE_MARKER:
                 break
-            if e.tag == node.tag and e.attrs == node.attrs:
+            if e.tag == el.tag and e.attrs == el.attrs:
                 same.append(e)
         if len(same) >= 3:
             self._afe.remove(same[-1])
-        self._afe.append(node)
+        self._afe.append(el)
 
     def _afe_clear_to_marker(self) -> None:
         while self._afe:
             if self._afe.pop() is _AFE_MARKER:
                 return
 
-    def _afe_find(self, tag: str) -> Node | None:
+    def _afe_find(self, tag: str):
         """Last afe entry with this tag, not crossing a scope marker."""
         for e in reversed(self._afe):
             if e is _AFE_MARKER:
@@ -247,38 +311,25 @@ class _DomParser(HTMLParser):
                 return e
         return None
 
-    def _insert_element(self, node: Node, parent: Node) -> None:
-        """Insert honoring table foster parenting (the one rule that moves
-        content) — shared by normal insertion, reconstruction and AAA."""
-        if (
-            parent.type == ELEMENT
-            and parent.tag in TABLE_SCOPE
-            and node.tag not in TABLE_ALLOWED
-        ):
-            self._foster_insert(node, parent)
-        else:
-            parent.append(node)
-
     def _reconstruct_afe(self) -> None:
         """Re-open (clone) formatting elements that were implicitly closed
         — WHATWG 'reconstruct the active formatting elements'."""
-        afe = self._afe
+        afe, stack = self._afe, self._stack
         if not afe:
             return
         last = afe[-1]
-        if last is _AFE_MARKER or last in self._stack:
+        if last is _AFE_MARKER or last in stack:
             return
         i = len(afe) - 1
         while i > 0:
             e = afe[i - 1]
-            if e is _AFE_MARKER or e in self._stack:
+            if e is _AFE_MARKER or e in stack:
                 break
             i -= 1
         for j in range(i, len(afe)):
             entry = afe[j]
-            clone = Node(ELEMENT, entry.tag, list(entry.attrs))
-            self._insert_element(clone, self._current())
-            self._stack.append(clone)
+            clone = self._insert(entry.tag, entry.attrs, self._current())
+            stack.append(clone)
             afe[j] = clone
 
     def _adoption(self, subject: str) -> None:
@@ -286,17 +337,17 @@ class _DomParser(HTMLParser):
         x/net/html behavior for misnested formatting end tags): re-parents
         <b><i></b></i> style misnesting and splits formatting around blocks
         (<b>x<div>y</b>z → b>x, div>(b>y, z))."""
-        stack, afe = self._stack, self._afe
+        stack, afe, sink = self._stack, self._afe, self.sink
         for _ in range(8):  # outer loop
             if stack and stack[-1].tag == subject and stack[-1] not in afe:
-                stack.pop()
+                self._pop(stack, len(stack) - 1)
                 return
             fe = self._afe_find(subject)
             if fe is None:
                 # any-other-end-tag: pop to the nearest matching element
                 for i in range(len(stack) - 1, -1, -1):
                     if stack[i].tag == subject:
-                        del stack[i:]
+                        self._pop(stack, i)
                         return
                 return
             if fe not in stack:
@@ -304,18 +355,21 @@ class _DomParser(HTMLParser):
                 return
             fe_idx = stack.index(fe)
             fb = None  # furthest block: first special element below fe
-            fb_idx = -1
             for i in range(fe_idx + 1, len(stack)):
                 if stack[i].tag in _SPECIAL_ELEMENTS:
                     fb, fb_idx = stack[i], i
                     break
             if fb is None:
-                del stack[fe_idx:]
+                self._pop(stack, fe_idx)
                 afe.remove(fe)
                 return
             common = stack[fe_idx - 1] if fe_idx > 0 else self._ensure_body()
+            # clones are formatting elements: fostered under a table-scope
+            # common, like any element opened there
+            fostered = common.tag in TABLE_SCOPE
+            table = _nearest_table(stack) if fostered else None
             bookmark = afe.index(fe)
-            node = last_node = fb
+            last_node = fb
             idx = fb_idx
             inner = 0
             while True:  # inner loop
@@ -327,156 +381,42 @@ class _DomParser(HTMLParser):
                 if inner > 3 and node in afe:
                     afe.remove(node)
                 if node not in afe:
-                    del stack[idx]
+                    del stack[idx]  # never special, so never a table
                     continue
-                clone = Node(ELEMENT, node.tag, list(node.attrs))
+                clone = sink.clone(node.tag, node.attrs, common, table)
                 afe[afe.index(node)] = clone
                 stack[idx] = clone
-                node = clone
                 if last_node is fb:
                     bookmark = afe.index(clone) + 1
-                if last_node.parent is not None:
-                    last_node.parent.children.remove(last_node)
-                node.append(last_node)
-                last_node = node
-            if last_node.parent is not None:
-                last_node.parent.children.remove(last_node)
-                last_node.parent = None
-            self._insert_element(last_node, common)
-            clone = Node(ELEMENT, fe.tag, list(fe.attrs))
-            for c in fb.children:
-                c.parent = clone
-            clone.children = fb.children
-            fb.children = []
-            fb.append(clone)
+                sink.move(last_node, clone, None)
+                last_node = clone
+            fostered = fostered and last_node.tag not in TABLE_ALLOWED
+            sink.move(last_node, common, stack if fostered else None)
+            clone = sink.split(fe.tag, fe.attrs, fb)
             old = afe.index(fe)
             if old < bookmark:
                 bookmark -= 1
-            afe.remove(fe)
+            del afe[old]
             afe.insert(bookmark, clone)
             stack.remove(fe)
             stack.insert(stack.index(fb) + 1, clone)
 
-    # -- HTMLParser callbacks ----------------------------------------------
-    def handle_decl(self, decl):
-        self.document.append(Node(DOCTYPE, data=decl))
-
-    def handle_comment(self, data):
-        self._current().append(Node(COMMENT, data=data))
-
-    def handle_starttag(self, tag, attrs):
-        if tag == "html":
-            html = self._ensure_html()
-            if not html.attrs:
-                html.attrs = list(attrs)
-            return
-        if tag == "head":
-            if self._body is not None or self._stack:
-                return  # HTML5 "in body": a stray <head> start is ignored
-            head = self._ensure_head()
-            if not head.attrs:
-                head.attrs = list(attrs)
-            self._mode = "before_body"
-            return
-        if tag == "body":
-            body = self._ensure_body()
-            if not body.attrs:
-                body.attrs = list(attrs)
-            return
-
-        if not self._stack:
-            # Top-level element: route to head or body like WHATWG does.
-            if self._body is None and tag in HEAD_ELEMENTS:
-                parent = self._ensure_head()
-            else:
-                parent = self._ensure_body()
-        else:
-            parent = self._implied_end(tag)
-
-        in_head = parent is self._head
-        if tag == "a" and self._afe_find("a") is not None:
-            # WHATWG <a>-in-<a>: adoption agency closes the open one, any
-            # survivor drops from both lists before the new <a> inserts.
-            self._adoption("a")
-            prev = self._afe_find("a")
-            if prev is not None:
-                self._afe.remove(prev)
-                if prev in self._stack:
-                    self._stack.remove(prev)
-            parent = self._current()
-        if not in_head and tag not in _NO_RECONSTRUCT:
-            self._reconstruct_afe()
-            parent = self._current()
-        # implied tbody/tr synthesis ("in table"/"in table body" modes):
-        # <table><tr> gets a tbody, <table><td> gets tbody+tr — x/net/html
-        # selector paths (table > tbody > tr > td) hold on sloppy tables.
-        if parent.type == ELEMENT:
-            if tag == "tr" and parent.tag == "table":
-                parent = self._synth_open(parent, "tbody")
-            elif tag in ("td", "th"):
-                if parent.tag == "table":
-                    parent = self._synth_open(parent, "tbody")
-                if parent.tag in ("tbody", "thead", "tfoot"):
-                    parent = self._synth_open(parent, "tr")
-
-        node = Node(ELEMENT, tag, list(attrs))
-        self._insert_element(node, parent)
-        if tag not in VOID_ELEMENTS:
-            self._stack.append(node)
-        if tag in FORMATTING_ELEMENTS:
-            self._afe_push(node)
-        elif tag in _AFE_MARKER_TAGS:
-            self._afe.append(_AFE_MARKER)
-
-    def _synth_open(self, parent: Node, tag: str) -> Node:
-        """Synthesize an implied table-section element and open it."""
-        n = Node(ELEMENT, tag)
-        parent.append(n)
-        self._stack.append(n)
-        return n
-
-    def _foster_insert(self, node: Node, fallback: Node) -> None:
-        """HTML5 foster parenting: insert ``node`` immediately before the
-        nearest open <table> (x/net/html does the same, so text/link order
-        over fostered content matches the reference)."""
-        for i in range(len(self._stack) - 1, -1, -1):
-            t = self._stack[i]
-            if t.tag == "table" and t.parent is not None:
-                # degenerate-soup cycle guard: never insert a node before
-                # a table inside the node's own subtree (AAA re-parenting
-                # can foster a block whose descendants include the table)
-                anc = t.parent
-                while anc is not None and anc is not node:
-                    anc = anc.parent
-                if anc is node:
-                    continue
-                parent = t.parent
-                node.parent = parent
-                parent.children.insert(parent.children.index(t), node)
-                return
-        fallback.append(node)  # degenerate (tbody with no open table)
-
-    def _implied_end(self, incoming: str) -> Node:
-        """Pop elements whose end tag is implied by the incoming start tag."""
+    # -- implied end tags --------------------------------------------------
+    def _implied_end(self, incoming: str):
+        """Pop elements whose end tag is implied by the incoming start tag;
+        returns the new insertion point."""
         self._table_pop(incoming)
-        if not self._stack:
-            return self._current()
-        cur = self._stack[-1]
-        if cur.tag == "p" and incoming in P_CLOSERS:
-            self._stack.pop()
-        elif cur.tag == "li" and incoming == "li":
-            self._stack.pop()
-        elif cur.tag in ("dt", "dd") and incoming in ("dt", "dd"):
-            self._stack.pop()
-        elif cur.tag in ("td", "th") and incoming in ("td", "th", "tr"):
-            self._stack.pop()
-            self._afe_clear_to_marker()
-            if self._stack and self._stack[-1].tag == "tr" and incoming == "tr":
-                self._stack.pop()
-        elif cur.tag == "tr" and incoming == "tr":
-            self._stack.pop()
-        elif cur.tag == "option" and incoming in ("option", "optgroup"):
-            self._stack.pop()
+        stack = self._stack
+        if stack:
+            cur = stack[-1].tag
+            closers = _IMPLIED_END.get(cur)
+            if closers is not None and incoming in closers:
+                self._pop(stack, len(stack) - 1)
+            elif cur in ("td", "th") and incoming in ("td", "th", "tr"):
+                self._pop(stack, len(stack) - 1)
+                self._afe_clear_to_marker()
+                if stack and stack[-1].tag == "tr" and incoming == "tr":
+                    self._pop(stack, len(stack) - 1)
         return self._current()
 
     def _table_pop(self, incoming: str) -> None:
@@ -484,111 +424,303 @@ class _DomParser(HTMLParser):
         open non-table elements (fostered wrappers, unclosed formatting)
         down to the nearest table-context boundary — so ``<table><div>x<tr>``
         puts the row in the table, not inside the fostered div."""
-        if incoming not in _TABLE_STRUCTURAL:
+        stack = self._stack
+        if incoming not in _TABLE_STRUCTURAL or _nearest_table(stack) is None:
             return
-        if not any(n.tag == "table" for n in self._stack):
+        i = len(stack)
+        while i and stack[i - 1].tag not in _TABLE_BOUNDARY:
+            i -= 1
+        self._pop(stack, i)
+
+    def _synth_open(self, parent, tag: str):
+        """Synthesize an implied table-section element and open it."""
+        el = self._element(tag, [], parent, None)
+        self._stack.append(el)
+        return el
+
+    # -- HTMLParser callbacks ----------------------------------------------
+    def handle_decl(self, decl):
+        self.sink.doctype(decl)
+
+    def handle_comment(self, data):
+        self.sink.comment(self._current(), data)
+
+    def handle_starttag(self, tag, attrs):
+        stack = self._stack
+        if tag in ("html", "head", "body"):
+            if tag == "html":
+                el = self._ensure_html()
+            elif tag == "body":
+                el = self._ensure_body()
+            elif self._body is not None or stack:
+                return  # HTML5 "in body": a stray <head> start is ignored
+            else:
+                el = self._ensure_head()
+            if not el.attrs:
+                el.attrs = list(attrs)
             return
-        while self._stack and self._stack[-1].tag not in _TABLE_BOUNDARY:
-            self._stack.pop()
+
+        parent = self._implied_end(tag) if stack else self._top_parent(tag)
+        if tag == "a" and self._afe_find("a") is not None:
+            # WHATWG <a>-in-<a>: adoption agency closes the open one, any
+            # survivor drops from both lists before the new <a> inserts.
+            self._adoption("a")
+            prev = self._afe_find("a")
+            if prev is not None:
+                self._afe.remove(prev)
+                if prev in stack:
+                    stack.remove(prev)
+            parent = self._current()
+        if tag not in _NO_RECONSTRUCT:
+            self._reconstruct_afe()
+            parent = self._current()
+        # implied tbody/tr synthesis ("in table"/"in table body" modes):
+        # <table><tr> gets a tbody, <table><td> gets tbody+tr — x/net/html
+        # selector paths (table > tbody > tr > td) hold on sloppy tables.
+        if tag == "tr" and parent.tag == "table":
+            parent = self._synth_open(parent, "tbody")
+        elif tag in ("td", "th"):
+            if parent.tag == "table":
+                parent = self._synth_open(parent, "tbody")
+            if parent.tag in ("tbody", "thead", "tfoot"):
+                parent = self._synth_open(parent, "tr")
+
+        el = self._insert(tag, attrs, parent)
+        if tag not in VOID_ELEMENTS:
+            stack.append(el)
+        if tag in FORMATTING_ELEMENTS:
+            self._afe_push(el)
+        elif tag in _AFE_MARKER_TAGS:
+            self._afe.append(_AFE_MARKER)
 
     def handle_startendtag(self, tag, attrs):
-        # <br/> style — treat like a start tag of a void-ish element.
+        # <br/> style — an element that is never pushed.
         if tag in ("html", "head", "body"):
             self.handle_starttag(tag, attrs)
             return
-        if not self._stack:
-            if self._body is None and tag in HEAD_ELEMENTS:
-                parent = self._ensure_head()
-            else:
-                parent = self._ensure_body()
-        else:
-            parent = self._current()
-        if parent is not self._head and tag not in _NO_RECONSTRUCT:
+        parent = self._stack[-1] if self._stack else self._top_parent(tag)
+        if tag not in _NO_RECONSTRUCT:
             self._reconstruct_afe()
             parent = self._current()
-        node = Node(ELEMENT, tag, list(attrs))
-        self._insert_element(node, parent)
+        self._insert(tag, attrs, parent)
 
     def handle_endtag(self, tag):
         if tag in ("html", "head", "body"):
-            if tag == "head" and self._body is None and not self._stack:
-                self._mode = "before_body"  # in body: stray </head> ignored
-            return
+            return  # a stray </head> in body is ignored too
         if tag in FORMATTING_ELEMENTS:
             self._adoption(tag)
             return
         # Pop to the nearest matching open element (ignore stray end tags).
         # Implicitly-closed formatting elements stay in the afe and re-open
         # on the next insertion; closed cells clear the afe to their marker.
-        for i in range(len(self._stack) - 1, -1, -1):
-            if self._stack[i].tag == tag:
-                swept = self._stack[i:]
-                del self._stack[i:]
-                for n in swept:
-                    if n.tag in _AFE_MARKER_TAGS:
+        stack = self._stack
+        for i in range(len(stack) - 1, -1, -1):
+            if stack[i].tag == tag:
+                swept = stack[i:]
+                self._pop(stack, i)
+                for el in swept:
+                    if el.tag in _AFE_MARKER_TAGS:
                         self._afe_clear_to_marker()
                 return
 
     def handle_data(self, data):
         if not data:
             return
-        if self._stack:
-            cur = self._stack[-1]
-            if cur.tag in RAWTEXT_ELEMENTS:
-                # raw-text content never reconstructs formatting; RCDATA
-                # decodes character references (RAWTEXT keeps them raw —
-                # html.parser's cdata mode skips convert_charrefs)
-                if cur.tag in RCDATA_ELEMENTS:
-                    data = _unescape(data)
-                cur.append(Node(TEXT, data=data))
+        stack = self._stack
+        if not stack:
+            # Text at top level: whitespace before body is dropped (WHATWG
+            # "before head"/"before body" modes); other text forces a body.
+            if self._body is None and not data.strip():
                 return
-            if not (cur.tag in TABLE_SCOPE and not data.strip()):
-                # in-body character tokens reconstruct active formatting
-                # (whitespace inside table context is the spec exception)
-                self._reconstruct_afe()
-                cur = self._stack[-1]
-            if cur.tag in TABLE_SCOPE and data.strip():
-                # non-whitespace text in table context foster-parents
-                node = Node(TEXT, data=data)
-                self._foster_insert(node, cur)
-            else:
-                cur.append(Node(TEXT, data=data))
+            body = self._ensure_body()
+            self._reconstruct_afe()
+            self._text(stack[-1] if stack else body, data, None)
             return
-        # Text at top level: whitespace before body is dropped (WHATWG
-        # "before head"/"before body" modes); other text forces a body.
-        if self._mode != "in_body" and data.strip() == "":
+        cur = stack[-1]
+        if cur.tag in RAWTEXT_ELEMENTS:
+            # raw-text content never reconstructs formatting; RCDATA
+            # decodes character references (RAWTEXT keeps them raw —
+            # html.parser's cdata mode skips convert_charrefs)
+            if cur.tag in RCDATA_ELEMENTS:
+                data = _unescape(data)
+            self._text(cur, data, None)
             return
-        body = self._ensure_body()
-        self._reconstruct_afe()
-        cur = self._stack[-1] if self._stack else body
-        cur.append(Node(TEXT, data=data))
+        if not (cur.tag in TABLE_SCOPE and not data.strip()):
+            # in-body character tokens reconstruct active formatting
+            # (whitespace inside table context is the spec exception)
+            self._reconstruct_afe()
+            cur = stack[-1]
+        if cur.tag in TABLE_SCOPE and data.strip():
+            # non-whitespace text in table context foster-parents
+            self._text(cur, data, _nearest_table(stack))
+        else:
+            self._text(cur, data, None)
 
     def unknown_decl(self, decl):
         # <![CDATA[...]]> is TEXT in foreign content (svg/math) and a bogus
         # comment everywhere else — x/net/html does the same.
         if decl.startswith("CDATA[") and any(
-            n.tag in ("svg", "math") for n in self._stack
+            el.tag in ("svg", "math") for el in self._stack
         ):
-            self._current().append(Node(TEXT, data=decl[6:]))
+            self._text(self._current(), decl[6:], None)
         else:
-            self._current().append(Node(COMMENT, data=decl))
+            self.sink.comment(self._current(), decl)
 
     def set_cdata_mode(self, elem):
         """PLAINTEXT runs to EOF: the HTML5 tokenizer has no way out of the
         PLAINTEXT state, so a stray ``</plaintext>`` is character data, not
         an end tag (x/net/html agrees). html.parser's cdata mode ends at the
         matching close tag — defuse its scan pattern for this one element."""
-        HTMLParser.set_cdata_mode(self, elem)  # not super(): this method
-        # is shared by _StreamExtractor via class-attribute assignment
+        super().set_cdata_mode(elem)
         if elem.lower() == "plaintext":
-            self.interesting = re.compile(r"(?!)")  # never matches
+            self.interesting = _NEVER
 
-    def flush_cdata_eof(self) -> None:
-        """EOF inside a raw-text element (unclosed <plaintext>/<xmp>/…):
-        html.parser leaves the tail buffered; HTML5 emits it as text."""
-        if getattr(self, "cdata_elem", None) and self.rawdata:
-            data, self.rawdata = self.rawdata, ""
-            self.handle_data(data)
+
+def _foster(node: Node, table: Node) -> None:
+    """Insert ``node`` immediately before ``table`` (x/net/html does the
+    same, so text/link order over fostered content matches the reference)."""
+    p = table.parent
+    node.parent = p
+    p.children.insert(p.children.index(table), node)
+
+
+def _within(node: Node | None, root: Node) -> bool:
+    """Whether ``node`` is ``root`` or one of its descendants."""
+    while node is not None:
+        if node is root:
+            return True
+        node = node.parent
+    return False
+
+
+class _DomSink:
+    """Builds the ``Node`` tree that ``parse()`` returns."""
+
+    def __init__(self):
+        self.document = Node(DOCUMENT)
+
+    def element(self, tag, attrs, parent, table):
+        node = Node(ELEMENT, tag, list(attrs))
+        if table is None:
+            parent.append(node)
+        else:
+            _foster(node, table)
+        return node
+
+    def text(self, parent, data, table):
+        node = Node(TEXT, data=data)
+        if table is None:
+            parent.append(node)
+        else:
+            _foster(node, table)
+
+    def pop(self, stack, i):  # a closed element stays where it is
+        del stack[i:]
+
+    def comment(self, parent, data):
+        parent.append(Node(COMMENT, data=data))
+
+    def doctype(self, data):
+        self.document.append(Node(DOCTYPE, data=data))
+
+    def clone(self, tag, attrs, parent, table):
+        return Node(ELEMENT, tag, list(attrs))  # placed by move()
+
+    def move(self, node, parent, stack):
+        """Re-parent ``node`` under ``parent``; when fostered (``stack``
+        given), before the topmost open table outside ``node``'s subtree.
+        A move into ``node``'s own subtree (degenerate soup) is skipped: it
+        would make the tree a cycle."""
+        table = None
+        if stack is not None:
+            for t in reversed(stack):
+                if t.tag == "table" and not _within(t, node):
+                    table = t
+                    break
+        if table is None and _within(parent, node):
+            return
+        if node.parent is not None:
+            node.parent.children.remove(node)
+        if table is None:
+            parent.append(node)
+        else:
+            _foster(node, table)
+
+    def split(self, tag, attrs, fb):
+        clone = Node(ELEMENT, tag, list(attrs))
+        for c in fb.children:
+            c.parent = clone
+        clone.children, fb.children = fb.children, []
+        fb.append(clone)
+        return clone
+
+
+class _Span:
+    """Extract-sink element: the text/href buffers its content goes to.
+    Identity semantics (no ``__eq__``), like ``Node``, tell clones apart."""
+
+    __slots__ = ("tag", "attrs", "text", "hrefs", "outer")
+
+    def __init__(self, tag, attrs, text, hrefs, outer=None):
+        self.tag = tag
+        self.attrs = attrs
+        self.text = text
+        self.hrefs = hrefs
+        self.outer = outer  # own buffers flush into this span's on pop
+
+
+class _ExtractSink:
+    """Text and hrefs in DOM pre-order, and the title, without a tree.
+
+    Pre-order equals arrival order except for foster parenting, which puts
+    content BEFORE the open table. So a <table> buffers its own content and
+    flushes it into the enclosing buffer when it closes, while fostered
+    content goes straight to the enclosing buffer. A <title> buffers too,
+    which captures its text; the title is the first one opened. The
+    adoption agency's moves touch nothing already emitted: only a clone of
+    an <a> re-emits its href where the clone opens. Known gaps: a title
+    fostered before a table holding an earlier title, and an <a> clone
+    whose furthest block already holds links behind a cell marker.
+    """
+
+    def __init__(self):
+        self.document = _Span("", [], [], [])
+        self.title: list[str] | None = None
+
+    def element(self, tag, attrs, parent, table):
+        if table is not None:
+            parent = table.outer
+        if tag == "a":
+            for k, v in attrs:
+                if k == "href":
+                    parent.hrefs.append(v if v is not None else "")
+                    break
+        elif tag == "table" or tag == "title":
+            span = _Span(tag, attrs, [], [], parent)
+            if tag == "title" and self.title is None:
+                self.title = span.text
+            return span
+        return _Span(tag, attrs, parent.text, parent.hrefs)
+
+    def text(self, parent, data, table):
+        (parent if table is None else table.outer).text.append(data)
+
+    def pop(self, stack, i):
+        while len(stack) > i:
+            span = stack.pop()
+            outer = span.outer
+            if outer is not None:
+                outer.text.extend(span.text)
+                outer.hrefs.extend(span.hrefs)
+
+    def comment(self, *_):  # comments, doctypes and moves emit nothing
+        pass
+
+    doctype = move = comment
+    clone = element
+
+    def split(self, tag, attrs, fb):
+        return self.element(tag, attrs, fb, None)
 
 
 def parse(html: str | bytes) -> Node:
@@ -599,16 +731,15 @@ def parse(html: str | bytes) -> Node:
     UTF-8-trial / windows-1252 — functions.encoding) and decode with
     replacement, so one mangled page never kills a task.
     """
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        from ant_spark.functions.encoding import decode_html
+    return _TreeBuilder(_DomSink()).build(html).document
 
-        html = decode_html(html)
-    p = _DomParser()
-    p.feed(html)
-    p.close()
-    p.flush_cdata_eof()
-    p._ensure_body()  # documents always end up with html/head/body
-    return p.document
+
+def stream_extract(html: str | bytes) -> tuple[str, list[str], str]:
+    """One streaming pass → (text, hrefs, title); no DOM allocated. The
+    parse-UDF hot path: ``parse()``'s tree builder with the extract sink."""
+    sink = _TreeBuilder(_ExtractSink()).build(html)
+    title = "".join(sink.title) if sink.title is not None else ""
+    return "".join(sink.document.text), sink.document.hrefs, title
 
 
 # --------------------------------------------------------------------------
@@ -748,443 +879,12 @@ def compile_selector(source: str) -> Selector:
     return Selector(source)
 
 
-class _SEntry:
-    """Open-element entry for the stream extractor. Identity semantics (no
-    __eq__) — the active-formatting bookkeeping must tell equal-looking
-    clones apart, exactly like DOM Node identity."""
-
-    __slots__ = ("tag", "sink", "outer", "attrs")
-
-    def __init__(self, tag, sink, outer=None, attrs=()):
-        self.tag = tag
-        self.sink = sink  # (text_parts, hrefs) this element emits into
-        self.outer = outer  # for <table>: enclosing sink to flush into
-        self.attrs = attrs  # list[(k, v)] — clones re-emit a[href]
-
-
-class _StreamExtractor(HTMLParser):
-    """DOM-less single-pass extractor for the parse-UDF hot path.
-
-    Text-node concatenation order equals document order for every
-    tree-construction rule EXCEPT table foster parenting (which moves
-    content before the table, i.e. earlier than source order). So the
-    extractor routes output through per-table SINKS: each open <table>
-    buffers its internal text/hrefs and flushes them when it closes, while
-    fostered content (and everything outside tables) emits to the enclosing
-    sink immediately — reproducing the DOM's pre-order exactly. The
-    _DomParser *inclusion* rule is mirrored too: a data chunk is kept iff
-    the element stack is non-empty (html/head/body are never pushed there)
-    OR the body has been implicitly/explicitly opened. The active
-    formatting list + adoption agency are mirrored as bookkeeping: clones
-    of re-opened <a> elements re-emit their href at the position the DOM
-    clone occupies in pre-order. Parity with the DOM path is pinned by
-    tests over the full synthetic corpus + fixtures and the tag-soup
-    differential fuzz.
-    """
-
-    CDATA_CONTENT_ELEMENTS = _DomParser.CDATA_CONTENT_ELEMENTS
-
-    def __init__(self):
-        super().__init__(convert_charrefs=True)
-        self.text_parts: list[str] = []
-        self.hrefs: list[str] = []
-        self.title: str | None = None
-        self._base = (self.text_parts, self.hrefs)
-        self._stack: list[_SEntry] = []
-        self._afe: list = []  # _SEntry refs + _AFE_MARKER (mirrors DOM)
-        self._in_body = False  # mirrors _mode == "in_body"
-        self._title_open = False
-        self._title_parts: list[str] = []
-
-    # -- sink plumbing ------------------------------------------------
-    def _current_sink(self):
-        return self._stack[-1].sink if self._stack else self._base
-
-    def _foster_sink(self):
-        """Sink of the nearest open table's OUTER context (where fostered
-        content lands — immediately before the table in DOM order)."""
-        for i in range(len(self._stack) - 1, -1, -1):
-            if self._stack[i].tag == "table":
-                return self._stack[i].outer
-        return self._current_sink()
-
-    def _insert_sink(self, tag):
-        """Insertion sink honoring foster parenting — the stream analogue
-        of _DomParser._insert_element's parent choice."""
-        if (
-            self._stack
-            and self._stack[-1].tag in TABLE_SCOPE
-            and tag not in TABLE_ALLOWED
-        ):
-            return self._foster_sink()
-        return self._current_sink()
-
-    def _pop_one(self) -> "_SEntry":
-        e = self._stack.pop()
-        if e.tag == "table" and e.outer is not None:
-            e.outer[0].extend(e.sink[0])  # table internals flush AFTER the
-            e.outer[1].extend(e.sink[1])  # fostered/pre-table content
-        return e
-
-    def _emit_href(self, attrs, sink):
-        for k, v in attrs:
-            if k == "href":
-                sink[1].append(v if v is not None else "")
-                break
-
-    # -- active formatting elements (mirrors _DomParser) ----------------
-    def _on_stack(self, e) -> bool:
-        return any(s is e for s in self._stack)
-
-    def _stack_index(self, e) -> int:
-        for i, s in enumerate(self._stack):
-            if s is e:
-                return i
-        return -1
-
-    def _afe_index(self, e) -> int:
-        for i, s in enumerate(self._afe):
-            if s is e:
-                return i
-        return -1
-
-    def _afe_find(self, tag):
-        for e in reversed(self._afe):
-            if e is _AFE_MARKER:
-                return None
-            if e.tag == tag:
-                return e
-        return None
-
-    def _afe_push(self, entry) -> None:
-        same = []
-        for e in reversed(self._afe):
-            if e is _AFE_MARKER:
-                break
-            if e.tag == entry.tag and e.attrs == entry.attrs:
-                same.append(e)
-        if len(same) >= 3:  # Noah's Ark clause
-            del self._afe[self._afe_index(same[-1])]
-        self._afe.append(entry)
-
-    def _afe_clear_to_marker(self) -> None:
-        while self._afe:
-            if self._afe.pop() is _AFE_MARKER:
-                return
-
-    def _reconstruct_afe(self) -> None:
-        afe = self._afe
-        if not afe:
-            return
-        last = afe[-1]
-        if last is _AFE_MARKER or self._on_stack(last):
-            return
-        i = len(afe) - 1
-        while i > 0:
-            e = afe[i - 1]
-            if e is _AFE_MARKER or self._on_stack(e):
-                break
-            i -= 1
-        for j in range(i, len(afe)):
-            entry = afe[j]
-            ins = self._insert_sink(entry.tag)
-            clone = _SEntry(entry.tag, ins, None, entry.attrs)
-            if entry.tag == "a":
-                self._emit_href(entry.attrs, ins)  # clone re-emits link
-            self._stack.append(clone)
-            afe[j] = clone
-
-    def _adoption(self, subject: str) -> None:
-        """Bookkeeping mirror of _DomParser._adoption: no tree exists, so
-        re-parenting reduces to stack/afe fixups plus href re-emission for
-        cloned <a> entries (chronological emission = DOM pre-order for the
-        clone positions — pinned by the differential fuzz)."""
-        stack, afe = self._stack, self._afe
-        for _ in range(8):
-            if (
-                stack
-                and stack[-1].tag == subject
-                and self._afe_index(stack[-1]) == -1
-            ):
-                self._pop_one()
-                return
-            fe = self._afe_find(subject)
-            if fe is None:
-                for i in range(len(stack) - 1, -1, -1):
-                    if stack[i].tag == subject:
-                        while len(stack) > i:
-                            self._pop_one()
-                        return
-                return
-            fe_idx = self._stack_index(fe)
-            if fe_idx < 0:
-                del afe[self._afe_index(fe)]
-                return
-            fb = None  # furthest block
-            fb_idx = -1
-            for i in range(fe_idx + 1, len(stack)):
-                if stack[i].tag in _SPECIAL_ELEMENTS:
-                    fb, fb_idx = stack[i], i
-                    break
-            if fb is None:
-                while len(stack) > fe_idx:
-                    self._pop_one()
-                del afe[self._afe_index(fe)]
-                return
-            # insertion sink for the re-parented chain (DOM: into common,
-            # foster-aware). fb keeps its own sink — already-emitted text
-            # never moves; only the new clones need one.
-            if fe_idx > 0:
-                ce = stack[fe_idx - 1]
-                if ce.tag in TABLE_SCOPE and fb.tag not in TABLE_ALLOWED:
-                    ins = self._foster_sink()
-                else:
-                    ins = ce.sink
-            else:
-                ins = self._base
-            bookmark = self._afe_index(fe)
-            last_node = fb
-            idx = fb_idx
-            inner = 0
-            while True:  # inner loop
-                inner += 1
-                idx -= 1
-                node = stack[idx]
-                if node is fe:
-                    break
-                ai = self._afe_index(node)
-                if inner > 3 and ai != -1:
-                    del afe[ai]
-                    ai = -1
-                if ai == -1:
-                    del stack[idx]  # between fe and fb: formatting only,
-                    continue  # never a table — no flush needed
-                clone = _SEntry(node.tag, ins, None, node.attrs)
-                if node.tag == "a":
-                    self._emit_href(node.attrs, ins)
-                afe[ai] = clone
-                stack[idx] = clone
-                if last_node is fb:
-                    bookmark = self._afe_index(clone) + 1
-                last_node = clone
-            clone = _SEntry(fe.tag, fb.sink, None, fe.attrs)
-            if fe.tag == "a":
-                self._emit_href(fe.attrs, fb.sink)  # step-k clone in fb
-            old = self._afe_index(fe)
-            if old < bookmark:
-                bookmark -= 1
-            del afe[old]
-            afe.insert(bookmark, clone)
-            del stack[self._stack_index(fe)]
-            stack.insert(self._stack_index(fb) + 1, clone)
-
-    # -- open/close --------------------------------------------------
-    def _open(self, tag, attrs, push: bool):
-        if tag == "html":
-            return
-        if tag == "head":
-            if self._in_body or self._stack:
-                return  # HTML5 "in body": a stray <head> start is ignored
-            self._in_body = False  # _DomParser sets mode = "before_body"
-            return
-        if tag == "body":
-            self._in_body = True
-            return
-        if not self._stack and not self._in_body and tag not in HEAD_ELEMENTS:
-            self._in_body = True  # _ensure_body() trigger
-        if tag == "title" and self.title is None and not self._title_open:
-            self._title_open = True
-            self._title_parts = []
-        if push:
-            self._implied_end(tag)  # void starts (e.g. <hr>) imply ends too
-            if tag == "a" and self._afe_find("a") is not None:
-                # <a>-in-<a>: adoption closes the open one, survivor drops
-                self._adoption("a")
-                prev = self._afe_find("a")
-                if prev is not None:
-                    del self._afe[self._afe_index(prev)]
-                    si = self._stack_index(prev)
-                    if si != -1:
-                        del self._stack[si]
-        if tag not in _NO_RECONSTRUCT:
-            self._reconstruct_afe()
-        if push:
-            # implied tbody/tr synthesis (mirrors the DOM start-tag path)
-            top = self._stack[-1].tag if self._stack else None
-            if tag == "tr" and top == "table":
-                self._stack.append(_SEntry("tbody", self._current_sink()))
-            elif tag in ("td", "th"):
-                if top == "table":
-                    self._stack.append(_SEntry("tbody", self._current_sink()))
-                    top = "tbody"
-                if top in ("tbody", "thead", "tfoot"):
-                    self._stack.append(_SEntry("tr", self._current_sink()))
-        # insertion sink AFTER implied-end/reconstruct/synthesis
-        ins = self._insert_sink(tag)
-        if tag == "a":
-            self._emit_href(attrs, ins)
-        if push and tag not in VOID_ELEMENTS:
-            if tag == "table":
-                entry = _SEntry(tag, ([], []), ins)
-            else:
-                entry = _SEntry(tag, ins, None, list(attrs))
-            self._stack.append(entry)
-            if tag in FORMATTING_ELEMENTS:
-                self._afe_push(entry)
-            elif tag in _AFE_MARKER_TAGS:
-                self._afe.append(_AFE_MARKER)
-
-    def _implied_end(self, incoming: str) -> None:
-        """Mirror _DomParser._implied_end stack pops (affects emptiness)."""
-        self._table_pop(incoming)
-        s = self._stack
-        if not s:
-            return
-        cur = s[-1].tag
-        if cur == "p" and incoming in P_CLOSERS:
-            self._pop_one()
-        elif cur == "li" and incoming == "li":
-            self._pop_one()
-        elif cur in ("dt", "dd") and incoming in ("dt", "dd"):
-            self._pop_one()
-        elif cur in ("td", "th") and incoming in ("td", "th", "tr"):
-            self._pop_one()
-            self._afe_clear_to_marker()
-            if s and s[-1].tag == "tr" and incoming == "tr":
-                self._pop_one()
-        elif cur == "tr" and incoming == "tr":
-            self._pop_one()
-        elif cur == "option" and incoming in ("option", "optgroup"):
-            self._pop_one()
-
-    def _table_pop(self, incoming: str) -> None:
-        """Mirror _DomParser._table_pop (implied ends before structural
-        table tags)."""
-        if incoming not in _TABLE_STRUCTURAL:
-            return
-        if not any(e.tag == "table" for e in self._stack):
-            return
-        while self._stack and self._stack[-1].tag not in _TABLE_BOUNDARY:
-            self._pop_one()
-
-    def handle_starttag(self, tag, attrs):
-        self._open(tag, attrs, push=True)
-
-    def handle_startendtag(self, tag, attrs):
-        self._open(tag, attrs, push=False)
-        # a self-closing <title/> ends the capture only when IT opened it —
-        # with an outer <title> still on the stack (nested titles), the DOM
-        # path keeps collecting text into the outer element
-        if (
-            tag == "title"
-            and self._title_open
-            and not any(e.tag == "title" for e in self._stack)
-        ):
-            self.title = ""
-            self._title_open = False
-
-    def handle_endtag(self, tag):
-        if tag in ("html", "body"):
-            return
-        if tag == "head":
-            if not self._in_body and not self._stack:
-                self._in_body = False  # mirror _DomParser: only honored
-                # before any body content (stray in-body </head> ignored)
-            return
-        if tag in FORMATTING_ELEMENTS:
-            self._adoption(tag)
-            return
-        # pop to nearest match, like _DomParser.handle_endtag; the capture
-        # closes only when NO title element remains open afterwards — a
-        # nested </title> (or a sweep that leaves an outer title) must keep
-        # capturing, because the DOM's first-title text spans the outer node
-        for i in range(len(self._stack) - 1, -1, -1):
-            if self._stack[i].tag == tag:
-                swept = [e.tag for e in self._stack[i:]]
-                while len(self._stack) > i:  # innermost-first: nested
-                    self._pop_one()  # tables flush into their outers
-                for t in swept:
-                    if t in _AFE_MARKER_TAGS:
-                        self._afe_clear_to_marker()
-                if (
-                    self._title_open
-                    and "title" in swept
-                    and not any(e.tag == "title" for e in self._stack)
-                ):
-                    self.title = "".join(self._title_parts)
-                    self._title_open = False
-                break
-
-    def handle_data(self, data):
-        if not data:
-            return
-        if not self._stack and not self._in_body:
-            if data.strip() == "":
-                return  # dropped by _DomParser.handle_data's top-level rule
-            self._in_body = True  # non-ws top-level text forces a body
-        if self._stack and self._stack[-1].tag in RAWTEXT_ELEMENTS:
-            cur = self._stack[-1]
-            if cur.tag in RCDATA_ELEMENTS:
-                data = _unescape(data)  # mirror _DomParser RCDATA decode
-            cur.sink[0].append(data)
-            if self._title_open:
-                self._title_parts.append(data)
-            return
-        cur_tag = self._stack[-1].tag if self._stack else None
-        if not (cur_tag in TABLE_SCOPE and not data.strip()):
-            # in-body character tokens reconstruct active formatting
-            self._reconstruct_afe()
-            cur_tag = self._stack[-1].tag if self._stack else None
-        if cur_tag in TABLE_SCOPE and data.strip():
-            sink = self._foster_sink()  # foster-parented text
-        elif self._stack:
-            sink = self._stack[-1].sink
-        else:
-            sink = self._base
-        sink[0].append(data)
-        if self._title_open:
-            self._title_parts.append(data)
-
-    def unknown_decl(self, decl):
-        # CDATA section: text in foreign content, ignored elsewhere
-        # (mirror _DomParser.unknown_decl; comments contribute nothing)
-        if decl.startswith("CDATA[") and any(
-            e.tag in ("svg", "math") for e in self._stack
-        ):
-            self._current_sink()[0].append(decl[6:])
-
-    flush_cdata_eof = _DomParser.flush_cdata_eof
-    set_cdata_mode = _DomParser.set_cdata_mode
-
-    def finish(self) -> None:
-        """EOF: flush unclosed cdata text and tables, settle title."""
-        self.flush_cdata_eof()
-        while self._stack:
-            self._pop_one()
-        if self.title is None and self._title_open:  # unclosed <title>
-            self.title = "".join(self._title_parts)
-
-
-def stream_extract(html: str | bytes) -> tuple[str, list[str], str]:
-    """One streaming pass → (text, hrefs, title); no DOM allocated."""
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        from ant_spark.functions.encoding import decode_html
-
-        html = decode_html(html)
-    p = _StreamExtractor()
-    p.feed(html)
-    p.close()
-    p.finish()
-    return "".join(p.text_parts), p.hrefs, p.title or ""
-
-
 def fast_extract(root: Node) -> tuple[str, list[str], str]:
     """One DFS pass → (text, hrefs-in-document-order, title).
 
     Equivalent to text(root) + match_all('a[href]') hrefs + first 'title'
-    text, fused into a single traversal — the hot path of the parse UDF when
-    no scrape spec / custom link selector is configured. Semantics identical
-    to the general path (pinned by tests).
+    text, fused into a single traversal — the reference formulation the
+    tests hold ``stream_extract`` (the parse-UDF hot path) to.
     """
     text_parts: list[str] = []
     hrefs: list[str] = []

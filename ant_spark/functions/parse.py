@@ -38,7 +38,6 @@ from ant_spark.functions.htmldom import (
     ELEMENT,
     Node,
     compile_selector,
-    fast_extract,
     parse,
     stream_extract,
     text,
@@ -53,25 +52,7 @@ def extract_links(html: bytes | str | None, base_url: str) -> list[str]:
     """All a[href] resolved against base_url, http(s) only, document order."""
     if html is None:
         return []
-    doc = parse(html)
-    out: list[str] = []
-    for node in compile_selector("a[href]").match_all(doc):
-        href = node.attr("href")
-        if href is None:
-            continue
-        try:
-            scheme = urlsplit(href).scheme.lower()
-        except ValueError:
-            continue
-        if scheme in ("http", "https"):
-            out.append(href)
-        elif scheme == "":
-            try:
-                out.append(urljoin(base_url, href))
-            except ValueError:
-                continue
-        # any other scheme: dropped (page.go:131-134)
-    return out
+    return _resolve_hrefs(_selected_hrefs(parse(html), "a[href]"), base_url)
 
 
 def _sel_attr(spec: str) -> tuple[str, str | None]:
@@ -133,39 +114,30 @@ def parse_page(
     """
     if html is None:
         return [], "", "", {}
-    if text_mode == "main":
-        from ant_spark.functions.readability import main_text_from_doc
-
-        doc = parse(html)
-        hrefs = [
-            node.attr("href")
-            for node in compile_selector(link_selector).match_all(doc)
-            if node.attr("href") is not None
-        ]
-        title_node = compile_selector("title").match_first(doc)
-        return (
-            _resolve_hrefs(hrefs, base_url),
-            main_text_from_doc(doc),
-            text(title_node) if title_node is not None else "",
-            scrape(doc, spec) if spec else {},
-        )
-    if spec is None and link_selector == "a[href]":
+    if spec is None and link_selector == "a[href]" and text_mode != "main":
         # hot path: one streaming pass, no DOM (links + text + title fused)
         txt, hrefs, title = stream_extract(html)
         return _resolve_hrefs(hrefs, base_url), txt, title, {}
     doc = parse(html)
-    hrefs = [
-        node.attr("href")
-        for node in compile_selector(link_selector).match_all(doc)
-        if node.attr("href") is not None
-    ]
+    if text_mode == "main":
+        from ant_spark.functions.readability import main_text_from_doc
+
+        txt = main_text_from_doc(doc)
+    else:
+        txt = text(doc)
     title_node = compile_selector("title").match_first(doc)
     return (
-        _resolve_hrefs(hrefs, base_url),
-        text(doc),
+        _resolve_hrefs(_selected_hrefs(doc, link_selector), base_url),
+        txt,
         text(title_node) if title_node is not None else "",
         scrape(doc, spec) if spec else {},
     )
+
+
+def _selected_hrefs(doc: Node, selector: str) -> list[str]:
+    """href of every node the selector matches that has one, document order."""
+    hrefs = (n.attr("href") for n in compile_selector(selector).match_all(doc))
+    return [h for h in hrefs if h is not None]
 
 
 def _resolve_hrefs(hrefs: list[str], base_url: str) -> list[str]:
@@ -336,8 +308,6 @@ def extract_anchors(html: bytes | str | None, base_url: str) -> list[tuple[str, 
     right."""
     if html is None:
         return []
-    from ant_spark.functions.htmldom import compile_selector, parse, text
-
     doc = parse(html)
     out: list[tuple[str, str]] = []
     for node in compile_selector("a[href]").match_all(doc):

@@ -96,49 +96,53 @@ def main_text_from_doc(
     (parse.py text_mode='main') reuse ONE tree for links+title+main_text."""
     blocks: list[str] = []
 
-    # DFS carrying (node, in_chrome, in_link); text accumulates into the
-    # nearest block ancestor's buffer on a stack of open blocks.
+    # Iterative DFS (no nesting depth raises RecursionError). A frame is
+    # (children iterator, in_chrome, in_link, block element or None); text
+    # accumulates into the nearest open block's buffer, and a block frame
+    # scores its buffer when its children run out.
     buf_stack: list[list] = [[0, 0]]  # (total_chars, link_chars) sentinel
     parts_stack: list[list[str]] = [[]]
+    frames = [(iter(doc.children), False, False, None)]
+    while frames:
+        children, chrome, in_link, block = frames[-1]
+        c = next(children, None)
+        if c is None:
+            frames.pop()
+            if block is None:
+                continue
+            total, link = buf_stack.pop()
+            text = _WS_RE.sub(" ", "".join(parts_stack.pop())).strip()
+            floor = min_len_heading if block.tag in _HEADINGS else min_len
+            if (
+                not chrome
+                and len(text) >= floor
+                and total > 0
+                and link / total <= max_link_density
+            ):
+                blocks.append(text)
+            # nothing propagates upward: a block CONSUMES its text
+            # (a div that only wrapped kept paragraphs adds nothing)
+            continue
+        if c.type == TEXT:
+            t = c.data
+            if not t or not t.strip():
+                continue
+            buf_stack[-1][0] += len(t)
+            if in_link:
+                buf_stack[-1][1] += len(t)
+            parts_stack[-1].append(t)
+        elif c.type == ELEMENT and c.tag not in _NON_CONTENT:
+            c_block = c if c.tag in BLOCK_ELEMENTS else None
+            if c_block is not None:
+                buf_stack.append([0, 0])
+                parts_stack.append([])
+            frames.append((
+                iter(c.children),
+                chrome or _is_chrome(c),
+                in_link or c.tag == "a",
+                c_block,
+            ))
 
-    def walk(node: Node, chrome: bool, in_link: bool) -> None:
-        for c in node.children:
-            if c.type == TEXT:
-                t = c.data
-                if not t or not t.strip():
-                    continue
-                buf_stack[-1][0] += len(t)
-                if in_link:
-                    buf_stack[-1][1] += len(t)
-                parts_stack[-1].append(t)
-            elif c.type == ELEMENT:
-                if c.tag in _NON_CONTENT:
-                    continue
-                c_chrome = chrome or _is_chrome(c)
-                c_link = in_link or c.tag == "a"
-                if c.tag in BLOCK_ELEMENTS:
-                    buf_stack.append([0, 0])
-                    parts_stack.append([])
-                    walk(c, c_chrome, c_link)
-                    total, link = buf_stack.pop()
-                    parts = parts_stack.pop()
-                    text = _WS_RE.sub(" ", "".join(parts)).strip()
-                    floor = (
-                        min_len_heading if c.tag in _HEADINGS else min_len
-                    )
-                    if (
-                        not c_chrome
-                        and len(text) >= floor
-                        and total > 0
-                        and link / total <= max_link_density
-                    ):
-                        blocks.append(text)
-                    # nothing propagates upward: a block CONSUMES its text
-                    # (a div that only wrapped kept paragraphs adds nothing)
-                else:
-                    walk(c, c_chrome, c_link)
-
-    walk(doc, False, False)
     return "\n\n".join(blocks)
 
 

@@ -241,3 +241,22 @@ def test_implied_tbody_tr_synthesis():
         doc = parse(html)
         got = [text(n) for n in compile_selector("table > tbody > tr > td").match_all(doc)]
         assert got == ["A"], (html, got)
+
+
+def test_deep_nesting_never_recurses():
+    """A page nested thousands of levels deep (generated or mangled markup)
+    must not raise RecursionError: text(), the fused parse in 'main' mode
+    and with a scrape spec, and extract_anchors all walk iteratively."""
+    from ant_spark.functions.parse import extract_anchors
+    from ant_spark.functions.readability import main_text_from_doc
+
+    depth = 5000
+    spans = "<span>" * depth + "x<a href='/d'>deep</a>"
+    assert text(parse(spans)) == "xdeep"
+    assert parse_page(spans, "http://h.test/", {"a": "a"}) == (
+        ["http://h.test/d"], "xdeep", "", {"a": "deep"})
+    assert extract_anchors(spans, "http://h.test/") == [("http://h.test/d", "deep")]
+    para = "a paragraph long enough to count as body text"
+    divs = "<div>" * depth + para
+    assert main_text_from_doc(parse(divs)) == para
+    assert parse_page(divs, "http://h.test/", text_mode="main") == ([], para, "", {})

@@ -4,7 +4,7 @@ stream-vs-DOM extractor parity on adversarial inputs. Pure Python — fast."""
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from ant_spark.functions.htmldom import fast_extract, parse, stream_extract
+from ant_spark.functions.htmldom import fast_extract, parse, stream_extract, text
 from ant_spark.functions.urlnorm import normalize_or_none
 
 url_chars = st.text(
@@ -101,6 +101,42 @@ def test_stream_matches_dom_html5_soup(atoms):
     between the two independent implementations on ANY composition."""
     html = "".join(atoms)
     assert stream_extract(html) == fast_extract(parse(html)), html
+
+
+def _assert_tree_shape(html):
+    """The DOM on its own, not against the extract sink: every child's
+    .parent is the node that lists it (selector ancestor walks rely on it,
+    also after adoption-agency and foster-parenting moves), no node is
+    reachable twice, and text() agrees with fast_extract's text."""
+    doc = parse(html)
+    assert doc.parent is None
+    seen = set()
+    stack = [doc]
+    while stack:
+        n = stack.pop()
+        assert id(n) not in seen, html
+        seen.add(id(n))
+        for c in n.children:
+            assert c.parent is n, html
+        stack.extend(n.children)
+    assert text(doc) == fast_extract(doc)[0], html
+
+
+@given(st.lists(_html5_atoms, max_size=40))
+@settings(max_examples=400, deadline=None)
+def test_dom_tree_shape_html5_soup(atoms):
+    _assert_tree_shape("".join(atoms))
+
+
+def test_dom_tree_shape_degenerate_adoption():
+    """Soup where the adoption agency would re-parent a node into its own
+    subtree (a <tr> and a <dt> outside any real table): the move is
+    skipped, so the tree stays acyclic and parsing terminates (it used to
+    loop forever on such pages); the two sinks still agree."""
+    html = ("text <a href=''>  <tr><table><dt><table></a>  &amp;<p><p>text "
+            "x<y</style><dt>")
+    _assert_tree_shape(html)
+    assert stream_extract(html) == fast_extract(parse(html))
 
 
 def test_html5_tag_soup_goldens():
