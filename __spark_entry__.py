@@ -447,7 +447,7 @@ def _q_rate_rule_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 exact multi-bucket composition (limiters.go:44-88): OVERLAPPING
     rules — every matching limiter binds serially, so a row must fit within
     EVERY matching rule's budget and a row deferred at rule j still consumed
-    tokens of rules < j (chained per-rule windows, mode='all')."""
+    tokens of rules < j (chained per-rule windows)."""
     from ant_spark.operators.politeness import rule_budget
 
     ev = _t(spark, sf_dir, "events")
@@ -466,7 +466,6 @@ def _q_rate_rule_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         fr,
         [("regexp", "h[12]\\.test/", 8), ("pattern", "h1.test/x/*", 3)],
         1.0,
-        mode="all",
     )
     return admitted.groupBy("host").agg(F.count("*").alias("n_admitted"))
 

@@ -85,8 +85,8 @@ def count_exchanges(plan: str) -> int:
 def _explain(env: str, tag: str, df: DataFrame, formatted: bool = True) -> None:
     """Audit hook: when env var ``env`` is "1", print ``df``'s physical plan
     after a ``[tag]`` line; a formatted plan's line also carries
-    ``Exchanges=N`` (count_exchanges). tools/explain_audit.py,
-    tools/bucketed_fetch_ab.py and tools/round_plan_dump.py parse these."""
+    ``Exchanges=N`` (count_exchanges). tools/explain_audit.py and
+    tools/round_plan_dump.py parse these."""
     if os.environ.get(env) != "1":
         return
     buf = io.StringIO()
@@ -174,11 +174,9 @@ class CrawlConfig:
     # table: store BOTH sides url_hash-bucketed and let the SMJ run
     # storage-partitioned instead.
     priority_join_broadcast: bool = True
-    # LimitPattern/LimitRegexp rules: (kind in {pattern,regexp}, expr, n/sec)
+    # LimitPattern/LimitRegexp rules: (kind in {pattern,regexp}, expr, n/sec);
+    # every matching limiter binds (chained per-rule windows, rule_budget)
     pattern_rates: list = field(default_factory=list)
-    # 'all' (reference-exact: every matching limiter binds, chained per-rule
-    # windows) | 'first_match' (one window; identical for disjoint rules)
-    pattern_rule_mode: str = "all"
     # robots freshness TTL (internal/robots/cache.go:36-78: entries expire
     # after maxAge=1h and the next Allowed() triggers a re-fetch). None
     # (default) = static robots snapshot, the single-shot-crawl behavior.
@@ -208,19 +206,6 @@ class CrawlConfig:
     ordering: str = "partitioned"  # partitioned | bfs
     seq_partitions: int = 32  # partitioned-ordering hash fan-out
     state_partitions: int = 32  # url_hash buckets for frontier/seen snapshots
-    # Budget-window skew handling. Catalyst's InferWindowGroupLimit only
-    # fires for rank <= LITERAL, and the engine's budget is a per-row
-    # column — so with salt<=1 the engine adds a driver-computed foldable
-    # budget cap (_politeness_budget_cap: max budget any limited row can
-    # have, from config rates + the robots dim) as a literal conjunct,
-    # restoring the map-side pruning (hot hosts cut to ≤ cap rows per input
-    # partition BEFORE the shuffle), and routes unlimited rows around the
-    # window entirely. Measured ~2× faster than the manual salted two-phase
-    # and ~3× faster than the uncapped window on a 90%-one-host frontier
-    # (tools/skew_politeness_demo.py asserts plans + identical outputs).
-    # salt>1 keeps the explicit two-phase form for engines without the
-    # pushdown.
-    politeness_salt: int = 1
     scrape_spec: dict[str, Any] | None = None
     strict: bool = False  # raise CrawlError on permanent errors
     checkpoint_dir: str | None = None  # resumable state root (None → temp)
@@ -251,9 +236,9 @@ class CrawlConfig:
     # the admitted frontier is staged into a table bucketed the same way
     # (a shuffle-free write of the tiny side), and the fetch join becomes a
     # storage-partitioned sort-merge join with ZERO Exchanges — the pages
-    # scan is read in place (tools/bucketed_fetch_ab.py is the measured
-    # A/B + plan proof). ``fetch_buckets`` must match the table's bucket
-    # count.
+    # scan is read in place (tools/explain_audit.py checks 6 and 10 are the
+    # plan proof; BENCH.md records the measured A/B). ``fetch_buckets``
+    # must match the table's bucket count.
     pages_table: str | None = None
     fetch_buckets: int = 32
     # 'auto' migration threshold: the bucketed mode pays ~1.5s/round of
@@ -555,10 +540,12 @@ class Engine:
                             best = (r, json.load(f))
         return best
 
-    def _write_state(self, root: str, r: int, name: str, df: DataFrame, n_parts: int | None = None) -> DataFrame:
+    def _write_state(
+        self, root: str, r: int, name: str, df: DataFrame, by_url_hash: bool = False
+    ) -> DataFrame:
         path = os.path.join(self._round_dir(root, r), name)
         w = df
-        if n_parts:
+        if by_url_hash:
             # hash-distribute state by url_hash (at cluster scale: Iceberg
             # bucket partitioning → storage-partitioned anti-join). No
             # explicit N: AQE coalesces tiny frontiers, keeps large ones
@@ -763,7 +750,7 @@ class Engine:
         # table and each round's admitted frontier is staged into the same
         # bucketing, so without a broadcast the join is a
         # storage-partitioned SMJ with ZERO Exchanges
-        # (tools/bucketed_fetch_ab.py).
+        # (tools/explain_audit.py checks 6 and 10).
 
         start = self.latest_round(root) if resume else None
         if start is not None:
@@ -853,26 +840,7 @@ class Engine:
                     F.lit(0).cast("long").alias("not_before"),
                 )
             )
-            frontier = self._write_state(
-                root, 0, "frontier", frontier, n_parts=cfg.state_partitions
-            )
-            self._seen_write(
-                root, 0,
-                frontier.select("url_hash", "url", F.lit(0).alias("round")),
-            )
-            seen_paths = (
-                [] if self._bucketed
-                else [os.path.join(self._round_dir(root, 0), "seen_delta")]
-            )
-            frontier_count = int(frontier.count())
-            next_seq = frontier_count * P  # seq upper bound in partitioned scheme
-            total_fetched = 0
-            total_enqueued = frontier_count
-            r = 0
-            bloom_state = None
-            if self._bloom:
-                bloom_state = self._bloom.add(frontier, self._bloom.empty_state(spark))
-                bloom_state = self._write_state(root, 0, "bloom", bloom_state)
+            seq_stride = P
         else:
             seed_pdf = self.seed_frontier(seeds)
             frontier = spark.createDataFrame(seed_pdf, schema=(
@@ -884,7 +852,13 @@ class Engine:
             if cfg.matcher is not None:
                 # matcher runs BEFORE dedupe/enqueue (engine.go:201,338-349)
                 frontier = frontier.filter(cfg.matcher(F.col("url")))
-            frontier = self._write_state(root, 0, "frontier", frontier)
+            seq_stride = None
+        if start is None:
+            # round-0 state, shared by both seed paths; bulk seeds are
+            # hash-distributed on url_hash like every later frontier
+            frontier = self._write_state(
+                root, 0, "frontier", frontier, by_url_hash=seq_stride is not None
+            )
             self._seen_write(
                 root, 0,
                 frontier.select("url_hash", "url", F.lit(0).alias("round")),
@@ -893,14 +867,18 @@ class Engine:
                 [] if self._bucketed
                 else [os.path.join(self._round_dir(root, 0), "seen_delta")]
             )
-            # next_seq from max(seq)+1, NOT count(): a matcher that excludes
-            # a seed must not let discovered links reuse survivors' seqs
-            # (seq uniqueness drives split_by_budget/global_limit anti-joins).
             agg = frontier.agg(
                 F.count("*").alias("n"), F.max("seq").alias("mx")
             ).collect()[0]
             frontier_count = int(agg["n"])
-            next_seq = int(agg["mx"]) + 1 if agg["mx"] is not None else 0
+            if seq_stride is not None:
+                # seq upper bound in the partitioned (rank × stride) scheme
+                next_seq = frontier_count * seq_stride
+            else:
+                # max(seq)+1, NOT count(): a matcher that excludes a seed
+                # must not let discovered links reuse survivors' seqs (seq
+                # uniqueness drives split_by_budget/global_limit anti-joins)
+                next_seq = int(agg["mx"]) + 1 if agg["mx"] is not None else 0
             total_fetched = 0
             total_enqueued = frontier_count
             r = 0
@@ -991,36 +969,29 @@ class Engine:
                     ["priority", "seq"] if cfg.queue_policy == "priority" else ["seq"]
                 )
                 wb = allowed.withColumn("_b", budget)
-                if cfg.politeness_salt <= 1:
-                    # rows with NO binding limiter keep the unlimited
-                    # sentinel budget — they are all admitted and must never
-                    # enter the window (an unlimited hot host would be one
-                    # giant window partition); limited rows go through the
-                    # capped window, whose foldable cap fires the map-side
-                    # WindowGroupLimit pruning.
-                    unlimited = wb.filter(F.col("_b") >= UNLIMITED_BUDGET)
-                    limited = wb.filter(F.col("_b") < UNLIMITED_BUDGET)
-                    adm_l, deferred = politeness.split_by_budget(
-                        limited,
-                        F.col("_b"),
-                        order_cols=order_cols,
-                        salt=1,
-                        budget_cap=self._politeness_budget_cap(),
-                    )
-                    admitted = unlimited.unionByName(adm_l)
-                else:
-                    admitted, deferred = politeness.split_by_budget(
-                        wb,
-                        F.col("_b"),
-                        order_cols=order_cols,
-                        salt=cfg.politeness_salt,
-                    )
-                admitted = admitted.drop("_b", "crawl_delay")
+                # rows with NO binding limiter keep the unlimited sentinel
+                # budget — they are all admitted and must never enter the
+                # window (an unlimited hot host would be one giant window
+                # partition). Limited rows go through the capped window:
+                # InferWindowGroupLimit only fires for rank <= LITERAL, and
+                # the budget is a per-row column, so the driver-computed
+                # foldable cap (_politeness_budget_cap) restores the
+                # map-side pruning — hot hosts cut to ≤ cap rows per input
+                # partition BEFORE the shuffle (pinned against the uncapped
+                # window in tests/test_politeness.py).
+                unlimited = wb.filter(F.col("_b") >= UNLIMITED_BUDGET)
+                limited = wb.filter(F.col("_b") < UNLIMITED_BUDGET)
+                adm_l, deferred = politeness.split_by_budget(
+                    limited,
+                    F.col("_b"),
+                    order_cols=order_cols,
+                    budget_cap=self._politeness_budget_cap(),
+                )
+                admitted = unlimited.unionByName(adm_l).drop("_b", "crawl_delay")
                 deferred = deferred.drop("_b", "crawl_delay").select(*frontier.columns)
                 if cfg.pattern_rates:
                     admitted, deferred3 = politeness.rule_budget(
-                        admitted, cfg.pattern_rates, cfg.round_seconds,
-                        order_cols, mode=cfg.pattern_rule_mode,
+                        admitted, cfg.pattern_rates, cfg.round_seconds, order_cols
                     )
                     deferred = deferred.unionByName(deferred3.select(*frontier.columns))
                 if cfg.global_rate is not None:
@@ -1423,8 +1394,7 @@ class Engine:
             def _w_frontier():
                 t0 = time.time()
                 out = self._write_state(
-                    root, r + 1, "frontier", new_frontier,
-                    n_parts=cfg.state_partitions,
+                    root, r + 1, "frontier", new_frontier, by_url_hash=True
                 )
                 _trace("w:frontier", t0)
                 return out
@@ -1472,8 +1442,7 @@ class Engine:
                     "url_hash", "url", "round"
                 )
                 self._write_state(
-                    root, r + 1, "seen_base", base_df,
-                    n_parts=cfg.state_partitions,
+                    root, r + 1, "seen_base", base_df, by_url_hash=True
                 )
                 seen_paths = [os.path.join(rd, "seen_base")]
 

@@ -17,11 +17,9 @@ per-row budget column (the engine's real shape) alone gets no pushdown.
 The capped form (``budget_cap``) adds a foldable upper bound as a literal
 conjunct, restoring the map-side pruning while the exact per-row budget is
 applied on the survivors — measured ~3× faster than the uncapped window
-and ~2× faster than manual salting on a 90%-one-host frontier, with
-identical outputs (tools/skew_politeness_demo.py asserts plans + outputs).
-``salt`` > 1 keeps the explicit two-phase form — phase 1 ranks within
-(host, salt), phase 2 re-ranks the survivors within host — for engines
-without the pushdown.
+and ~2× faster than a salted two-phase window on a 90%-one-host frontier,
+with identical outputs (tests/test_politeness.py pins the capped window's
+plan and admitted/deferred sets against the uncapped one).
 """
 
 from __future__ import annotations
@@ -52,7 +50,6 @@ def budget_per_host(
     frontier: DataFrame,
     budget_col: Column,
     order_cols: list[str] | None = None,
-    salt: int = 8,
     budget_cap: int | None = None,
 ) -> DataFrame:
     """Adds ``in_budget`` boolean: row is within its host's round budget.
@@ -66,43 +63,19 @@ def budget_per_host(
     gains the map+reduce WindowGroupLimit pair (hot hosts pruned to ≤ cap
     rows per input partition BEFORE the shuffle) and the exact per-row
     budget is applied on the ≤ cap survivors. NOTE: rows ranked past the
-    cap are DROPPED from the output (like the salted path) — use
-    ``split_by_budget`` to recover the full deferred set.
+    cap are DROPPED from the output — use ``split_by_budget`` to recover
+    the full deferred set. Without a cap every row is kept and marked (the
+    uncapped reference formulation).
     """
     order_cols = order_cols or ["seq"]
-    if budget_cap is not None and salt > 1:
-        raise ValueError(
-            "budget_cap only applies to the single-window form (salt<=1); "
-            "the salted two-phase path would silently skip the map-side "
-            "WindowGroupLimit pruning the cap exists to enable"
-        )
-    b = budget_col.cast("long")
-    df = frontier.withColumn("_budget", b)
-    if budget_cap is not None and salt <= 1:
-        w = Window.partitionBy("host").orderBy(*order_cols)
-        ranked = (
-            df.withColumn("_rk", F.row_number().over(w))
-            # literal conjunct → InferWindowGroupLimit (verified in
-            # tools/skew_politeness_demo.py against this exact shape)
-            .filter(F.col("_rk") <= F.lit(int(budget_cap)))
-        )
-        return ranked.withColumn(
-            "in_budget", F.col("_rk") <= F.col("_budget")
-        ).drop("_rk", "_budget")
-    if salt > 1:
-        df = df.withColumn("_salt", F.pmod(F.col("url_hash"), F.lit(salt)))
-        w1 = Window.partitionBy("host", "_salt").orderBy(*order_cols)
-        df = (
-            df.withColumn("_rk1", F.row_number().over(w1))
-            .filter(F.col("_rk1") <= F.col("_budget"))
-            .drop("_rk1")
-        )
-        # survivors per host ≤ salt × budget — bounded second phase
-        w2 = Window.partitionBy("host").orderBy(*order_cols)
-        ranked = df.withColumn("_rk", F.row_number().over(w2)).drop("_salt")
-    else:
-        w = Window.partitionBy("host").orderBy(*order_cols)
-        ranked = df.withColumn("_rk", F.row_number().over(w))
+    w = Window.partitionBy("host").orderBy(*order_cols)
+    ranked = frontier.withColumn("_budget", budget_col.cast("long")).withColumn(
+        "_rk", F.row_number().over(w)
+    )
+    if budget_cap is not None:
+        # literal conjunct → InferWindowGroupLimit (pinned against the
+        # uncapped window in tests/test_politeness.py)
+        ranked = ranked.filter(F.col("_rk") <= F.lit(int(budget_cap)))
     return ranked.withColumn("in_budget", F.col("_rk") <= F.col("_budget")).drop(
         "_rk", "_budget"
     )
@@ -112,20 +85,19 @@ def split_by_budget(
     frontier: DataFrame,
     budget_col: Column,
     order_cols: list[str] | None = None,
-    salt: int = 8,
+    salt: int = 1,
     budget_cap: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """(admitted, deferred). NOTE with salt>1 or a budget_cap the deferred
-    set equals the original minus admitted — computed by anti-join on seq
-    to avoid recomputing windows."""
-    order_cols = order_cols or ["seq"]
-    marked = budget_per_host(
-        frontier, budget_col, order_cols,
-        salt=1 if salt <= 1 else salt, budget_cap=budget_cap,
-    )
+    """(admitted, deferred). NOTE with a budget_cap the deferred set equals
+    the original minus admitted — computed by anti-join on seq to avoid
+    recomputing windows."""
+    # ``salt`` is kept only because perfbench/probes.py passes salt=1
+    if salt != 1:
+        raise ValueError(f"split_by_budget has no salted form (salt={salt!r}); pass 1")
+    marked = budget_per_host(frontier, budget_col, order_cols, budget_cap=budget_cap)
     admitted = marked.filter(F.col("in_budget")).drop("in_budget")
-    if salt > 1 or budget_cap is not None:
-        # phase 1 of the salted window already dropped some rows from
+    if budget_cap is not None:
+        # the capped window already dropped rows ranked past the cap from
         # ``marked``; recover the full deferred set by anti-joining the
         # original frontier on ``seq`` (globally unique → exact).
         deferred = frontier.join(
@@ -180,7 +152,6 @@ def rule_budget(
     rules: list[tuple[str, str, int]],
     round_seconds: float,
     order_cols: list[str] | None = None,
-    mode: str = "all",
 ) -> tuple[DataFrame, DataFrame]:
     """LimitPattern / LimitRegexp (limiters.go:60-88): per-rule token buckets.
 
@@ -188,10 +159,10 @@ def rule_budget(
     host+path WITHOUT the leading-'/' coercion (limiters match the raw
     ``u.Host + u.Path`` — unlike matchers, limiters.go:63 vs matchers.go:68).
 
-    ``mode='all'`` (default — reference-exact): the reference applies EVERY
-    matching limiter serially in declared order, each ``wait``-ing on its
-    own bucket (limiters.go:44-88 — the worker takes rule i's token before
-    blocking on rule i+1). The BSP-round equivalent is a CHAIN of per-rule
+    Reference-exact composition: the reference applies EVERY matching
+    limiter serially in declared order, each ``wait``-ing on its own bucket
+    (limiters.go:44-88 — the worker takes rule i's token before blocking on
+    rule i+1). The BSP-round equivalent is a CHAIN of per-rule
     budget windows: pass i ranks the pass-(i-1) survivors that match rule i
     by ``order_cols`` and keeps the first budget_i; a row deferred at rule j
     has consumed tokens of every earlier matching rule, exactly like the Go
@@ -201,10 +172,6 @@ def rule_budget(
     a rule matching 10^9 rows to ≤ budget_i rows per input partition
     map-side BEFORE its shuffle — n_rules bounded windows, never a giant
     one.
-
-    ``mode='first_match'``: the round-3 simplification — a row is tagged
-    with its FIRST matching rule only and ranked once within that rule
-    (one window total; identical output for disjoint rule sets).
 
     Returns (admitted, deferred).
 
@@ -223,8 +190,6 @@ def rule_budget(
             "rule_budget requires a globally-unique 'seq' column on the "
             "frontier (the deferred set is recovered by anti-join on seq)"
         )
-    if mode not in ("all", "first_match"):
-        raise ValueError(f"unknown rule_budget mode {mode!r}")
     if not rules:
         return frontier, frontier.filter(F.lit(False))
     order_cols = order_cols or ["seq"]
@@ -239,86 +204,45 @@ def rule_budget(
         )
         budgets.append(max(1, int(n * round_seconds)))
 
-    if mode == "all":
-        # match flags computed ONCE per row (each rule's regex evaluated in
-        # one projection), then the chain filters on the boolean columns.
-        flag_cols = [f"_m{i}" for i in range(len(rules))]
-        flagged = frontier.select(
-            "*", *[c.alias(fc) for c, fc in zip(conds, flag_cols)]
-        )
-        any_match = F.lit(False)
-        for fc in flag_cols:
-            any_match = any_match | F.col(fc)
-        unlimited = flagged.filter(~any_match).drop(*flag_cols)
-        limited = flagged.filter(any_match)
-        survivors = limited
-        for i, b in enumerate(budgets):
-            m = survivors.filter(F.col(flag_cols[i]))
-            nm = survivors.filter(~F.col(flag_cols[i]))
-            # partition by the match flag itself: constant-true within `m`
-            # (one logical partition, like the reference's one bucket per
-            # rule) but NON-FOLDABLE, so Catalyst keeps it a real window
-            # partition and InferWindowGroupLimit still prunes map-side
-            # (a literal partition key would fold to a partition-less
-            # window and skip the pushdown).
-            w = Window.partitionBy(flag_cols[i]).orderBy(*order_cols)
-            m = (
-                m.withColumn("_rk", F.row_number().over(w))
-                # rank <= LITERAL → InferWindowGroupLimit map-side prune
-                .filter(F.col("_rk") <= F.lit(b))
-                .drop("_rk")
-            )
-            survivors = m.unionByName(nm)
-        admitted = survivors.drop(*flag_cols)
-        # admitted ≤ Σ budgets (every admitted row sits within its first
-        # matching rule's budget) — a driver-known bound, so broadcast the
-        # anti-join probe when small; huge configured budgets fall back to
-        # AQE picking the strategy.
-        adm_seqs = admitted.select(F.col("seq").alias("_a_seq"))
-        if sum(budgets) <= 4_000_000:
-            adm_seqs = F.broadcast(adm_seqs)
-        deferred = limited.drop(*flag_cols).join(
-            adm_seqs, F.col("seq") == F.col("_a_seq"), "left_anti"
-        )
-        return unlimited.unionByName(admitted), deferred
-
-    expr = None
-    bexpr = None
-    for i, (cond, b) in enumerate(zip(conds, budgets)):
-        bl = F.lit(b)
-        expr = F.when(cond, F.lit(i)) if expr is None else expr.when(cond, F.lit(i))
-        bexpr = F.when(cond, bl) if bexpr is None else bexpr.when(cond, bl)
-    rule_id = expr.otherwise(F.lit(-1))
-    budget = bexpr.otherwise(F.lit(None))
-
-    tagged = frontier.withColumn("_rule", rule_id).withColumn("_rb", budget)
-    unlimited = tagged.filter(F.col("_rule") == -1).drop("_rule", "_rb")
-    limited = tagged.filter(F.col("_rule") >= 0)
-    # Skew protection: per-rule budgets are driver-known literals, so the
-    # max over them is a FOLDABLE cap — the literal conjunct fires Catalyst's
-    # InferWindowGroupLimit (map-side prune of a rule matching 10^9 rows to
-    # ≤ cap rows per input partition BEFORE the shuffle), exactly like the
-    # engine's host-budget window (budget_per_host budget_cap). The exact
-    # per-rule compare then runs on the ≤ cap survivors.
-    cap = max(budgets)
-    w = Window.partitionBy("_rule").orderBy(*order_cols)
-    ranked = limited.withColumn("_rk", F.row_number().over(w)).filter(
-        F.col("_rk") <= F.lit(cap)
+    # match flags computed ONCE per row (each rule's regex evaluated in
+    # one projection), then the chain filters on the boolean columns.
+    flag_cols = [f"_m{i}" for i in range(len(rules))]
+    flagged = frontier.select(
+        "*", *[c.alias(fc) for c, fc in zip(conds, flag_cols)]
     )
-    admitted = ranked.filter(F.col("_rk") <= F.col("_rb")).drop("_rule", "_rb", "_rk")
-    # rows ranked past the cap were pruned from `ranked`; recover the full
-    # deferred set by anti-joining the limited rows against the admitted
-    # seqs (globally unique). The admitted side is ≤ n_rules × cap rows —
-    # driver-known — so broadcast it when that bound is small (the big side
-    # never shuffles); with huge configured budgets fall back to letting
-    # AQE pick the strategy rather than force a giant broadcast.
+    any_match = F.lit(False)
+    for fc in flag_cols:
+        any_match = any_match | F.col(fc)
+    unlimited = flagged.filter(~any_match).drop(*flag_cols)
+    limited = flagged.filter(any_match)
+    survivors = limited
+    for i, b in enumerate(budgets):
+        m = survivors.filter(F.col(flag_cols[i]))
+        nm = survivors.filter(~F.col(flag_cols[i]))
+        # partition by the match flag itself: constant-true within `m`
+        # (one logical partition, like the reference's one bucket per
+        # rule) but NON-FOLDABLE, so Catalyst keeps it a real window
+        # partition and InferWindowGroupLimit still prunes map-side
+        # (a literal partition key would fold to a partition-less
+        # window and skip the pushdown).
+        w = Window.partitionBy(flag_cols[i]).orderBy(*order_cols)
+        m = (
+            m.withColumn("_rk", F.row_number().over(w))
+            # rank <= LITERAL → InferWindowGroupLimit map-side prune
+            .filter(F.col("_rk") <= F.lit(b))
+            .drop("_rk")
+        )
+        survivors = m.unionByName(nm)
+    admitted = survivors.drop(*flag_cols)
+    # admitted ≤ Σ budgets (every admitted row sits within its first
+    # matching rule's budget) — a driver-known bound, so broadcast the
+    # anti-join probe when small; huge configured budgets fall back to
+    # AQE picking the strategy.
     adm_seqs = admitted.select(F.col("seq").alias("_a_seq"))
-    if cap * len(rules) <= 4_000_000:
+    if sum(budgets) <= 4_000_000:
         adm_seqs = F.broadcast(adm_seqs)
-    deferred = limited.drop("_rule", "_rb").join(
-        adm_seqs,
-        F.col("seq") == F.col("_a_seq"),
-        "left_anti",
+    deferred = limited.drop(*flag_cols).join(
+        adm_seqs, F.col("seq") == F.col("_a_seq"), "left_anti"
     )
     return unlimited.unionByName(admitted), deferred
 

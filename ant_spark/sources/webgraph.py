@@ -9,7 +9,7 @@ bytes on every run.
 
 Shape (mirrors FIXTURES.md §1 requirements):
 - power-law pages-per-host (Zipf exponent ``skew``) — the hot-host skew that
-  the politeness window and salting must survive at scale;
+  the capped politeness window must survive at scale;
 - an embedded link graph: per-host fanout tree covering every page (so BFS
   from the root visits the whole host) + binary-tree cross-host links between
   roots (so one seed reaches all hosts in O(log H) rounds);

@@ -80,10 +80,9 @@ def main() -> None:
     # --- cluster-scale round shape, first-class benched: the SAME crawl
     # through pages_table + state_backend='bucketed' — BOTH big joins
     # (fetch and seen anti-join) storage-partitioned with zero Exchanges
-    # (tools/bucketed_fetch_ab.py is the plan proof; this records its
+    # (tools/explain_audit.py check 10 is the plan proof; this records its
     # wall-clock round-over-round so a regression in the 100 TB mode shows
-    # up in BENCH_r{N}, not only in the A/B tool). One-time corpus
-    # staging cost reported separately.
+    # up in BENCH_r{N}). One-time corpus staging cost reported separately.
     import tempfile
 
     pt_dir = tempfile.mkdtemp(prefix="ant_bench_pages_")

@@ -35,7 +35,7 @@ def _w_rb_pattern_regexp(spark, example):
 
 
 def _w_rb_overlapping(spark, example):
-    """mode='all' (default) reproduces the reference's serial multi-bucket
+    """rule_budget reproduces the reference's serial multi-bucket
     acquisition (limiters.go:44-88): a row must fit within EVERY matching
     rule's budget, and a row deferred at rule j still consumed tokens of
     rules < j. Rows: x0,y0,x1,y1,... interleaved by seq; rule 0 (all of
@@ -71,15 +71,6 @@ def _w_rb_full_overlap(spark, example):
     )
     assert sorted(r["seq"] for r in admitted.collect()) == [0, 1, 2]
     assert deferred.count() == 17
-    # first_match mode keeps the single-window simplification: only the
-    # first rule tags, so its budget (7) decides alone
-    adm_fm, _ = rule_budget(
-        fr,
-        [("regexp", "a\\.test/", 7), ("regexp", "a\\.test/p", 3)],
-        round_seconds=1.0,
-        mode="first_match",
-    )
-    assert adm_fm.count() == 7
 
 
 def test_rule_budget_requires_seq(spark):

@@ -187,8 +187,9 @@ def _w_compaction(spark, tmp):
 
 def _w_bucketed_state(spark, tmp):
     """state_backend='bucketed': the seen set lives in one url_hash-bucketed
-    table (storage-partitioned anti-join — 0 seen-side Exchanges, evidenced
-    in tools/bucketed_engine_ab.py); semantics must match parquet exactly."""
+    table (storage-partitioned anti-join — 0 seen-side Exchanges, pinned
+    by tools/explain_audit.py check 10); semantics must match parquet
+    exactly."""
     pages_pdf, robots_pdf, seeds = example_site()
     pages = spark.createDataFrame(pages_pdf, schema=schemas.PAGES)
     robots = spark.createDataFrame(robots_pdf, schema=schemas.ROBOTS)
@@ -213,9 +214,9 @@ def _w_bucketed_state(spark, tmp):
 def _w_bucketed_pages(spark, tmp):
     """cfg.pages_table: the fetch join reads a url-bucketed page corpus
     with the admitted frontier staged into the same bucketing — plan is a
-    0-Exchange storage-partitioned SMJ (tools/bucketed_fetch_ab.py is the
-    measured A/B); semantics must match the plain join exactly, including
-    BFS seq parity and resume."""
+    0-Exchange storage-partitioned SMJ (tools/explain_audit.py checks 6 and
+    10); semantics must match the plain join exactly, including BFS seq
+    parity and resume."""
     pages, robots, seeds, pages_pdf = _example(spark)
     Engine.create_pages_table(
         spark, pages, "t_pages_bkt", str(tmp / "pages_tbl"), buckets=4

@@ -1,8 +1,13 @@
 """Politeness budget windows (reference limiters.go → SURVEY §2.5 W1-W4)."""
 
+import io
+from contextlib import redirect_stdout
+
+import pytest
 from pyspark.sql import functions as F
 
 from ant_spark.operators.politeness import (
+    UNLIMITED_BUDGET,
     budget_per_host,
     global_limit,
     host_budget_expr,
@@ -29,15 +34,60 @@ def test_budget_lowest_seq_first(spark):
     assert defer.count() == 13 - 4
 
 
-def test_salted_budget_identical_result(spark):
+def test_split_by_budget_rejects_salt(spark):
     fr = _frontier(spark, ROWS)
-    a1, d1 = split_by_budget(fr, F.lit(3), ["seq"], salt=1)
-    a4, d4 = split_by_budget(fr, F.lit(3), ["seq"], salt=4)
-    s1 = sorted(r["seq"] for r in a1.collect())
-    s4 = sorted(r["seq"] for r in a4.collect())
-    assert s1 == s4
-    assert sorted(r["seq"] for r in d1.collect()) == sorted(
-        r["seq"] for r in d4.collect()
+    with pytest.raises(ValueError, match="salt"):
+        split_by_budget(fr, F.lit(3), ["seq"], salt=4)
+
+
+def _n_window_group_limits(df) -> int:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    # formatted explain prints each physical node twice (tree + detail)
+    return buf.getvalue().count("WindowGroupLimit") // 2
+
+
+def test_capped_window_matches_uncapped_on_skewed_frontier(spark):
+    """The engine's skew protection: one host owns 90% of the frontier and
+    the budget is a per-row column (host_budget_expr over crawl_delay), so
+    only the driver-computed literal cap lets InferWindowGroupLimit prune
+    the hot host map-side. The capped window must admit and defer exactly
+    the uncapped reference window's rows. Serial: redirect_stdout is
+    process-global."""
+    frontier = spark.range(3000).select(
+        F.col("id").alias("seq"),
+        F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
+        F.when(F.col("id") % 10 < 9, F.lit("hot.test"))
+        .otherwise(F.concat(F.lit("cold"), F.pmod(F.col("id"), F.lit(7)).cast("string")))
+        .alias("host"),
+        # round 10s: hot host budget floor(10/0.02)=500, cold hosts 20
+        F.when(F.col("id") % 10 < 9, F.lit(0.02)).otherwise(F.lit(0.5)).alias(
+            "crawl_delay"
+        ),
+    )
+    budget = host_budget_expr(10.0, UNLIMITED_BUDGET, F.col("crawl_delay"))
+    wb = frontier.withColumn("_b", budget)
+    cap = 500  # = Engine._politeness_budget_cap for these delays
+
+    adm_ref, def_ref = split_by_budget(wb, F.col("_b"), ["seq"])
+    adm_cap, def_cap = split_by_budget(wb, F.col("_b"), ["seq"], budget_cap=cap)
+
+    def seqs(df):
+        return sorted(r["seq"] for r in df.select("seq").collect())
+
+    admitted = seqs(adm_ref)
+    assert len(admitted) == 500 + 7 * 20  # every host over its budget
+    assert seqs(adm_cap) == admitted
+    deferred = seqs(def_ref)
+    assert seqs(def_cap) == deferred
+    assert sorted(admitted + deferred) == list(range(3000))
+
+    assert _n_window_group_limits(adm_cap) >= 2, (
+        "expected the map+reduce WindowGroupLimit pair with the cap"
+    )
+    assert _n_window_group_limits(adm_ref) == 0, (
+        "a bare per-row budget gets no pushdown"
     )
 
 
@@ -67,6 +117,6 @@ def test_global_limit(spark):
 
 def test_budget_marks_only(spark):
     fr = _frontier(spark, ROWS)
-    marked = budget_per_host(fr, F.lit(1), ["seq"], salt=1)
+    marked = budget_per_host(fr, F.lit(1), ["seq"])
     inb = sorted(r["seq"] for r in marked.filter("in_budget").collect())
     assert inb == [0, 100]

@@ -219,13 +219,12 @@ _DEFAULT_TAIL = """Per-round metric breakdown and the per-sf operator timings ar
   240k-row in-RAM shuffle is nearly free while the staging write costs
   ~1.5s — the bucketed win is STRUCTURAL: at a 10^10-URL seen set the
   eliminated seen-side Exchange is hundreds of GB per round (storage-
-  partitioned Iceberg analogue; see bucketed_join_demo.py for the measured
-  2M-row 3.3s→1.0s join-level effect). Reproduce:
-  `python tools/bucketed_engine_ab.py`.
+  partitioned Iceberg analogue; a 2M-row join measured 3.3s→1.0s).
+  `python tools/explain_audit.py` check 10 asserts the 0-Exchange plans.
 - **seen compaction + state expiry**: per-round seen scan is O(1) dirs
   (delta dirs folded every `seen_compact_every` rounds) and round state
   older than `expire_state_rounds` is deleted (logs/manifests kept).
-- **sustained peak** (tools/bucketed_engine_ab.py 480000, warm): one
+- **sustained peak** (480k-page every-page-seeded crawl, warm): one
   steady-state round over a 480k-page admitted frontier completes in 9.0s
   at local[32] — **53,150 sustained URLs/sec** (parquet backend; bucketed
   32.1k with its staging write, still 0 dedupe Exchanges). No memory cliff

@@ -73,14 +73,16 @@ def main() -> None:
             host_rates=(
                 {host_name(gcfg, 0): rng.choice([2, 5])} if rng.random() < 0.4 else {}
             ),
-            politeness_salt=rng.choice([1, 1, 8]),
-            max_depth=rng.choice([None, None, 3]),
-            seen_compact_every=rng.choice([4, 16]),
-            expire_state_rounds=rng.choice([2, None]),
-            bucketed_switch_rows=rng.choice([30, 1_000_000]),
             max_rounds=60,
             bloom_bits=1 << 18,
         )
+        # a retired option's draw, discarded: keeps `engine_fuzz N <seed>`
+        # drawing the same graphs and configs as earlier versions
+        rng.choice([1, 1, 8])
+        ccfg.max_depth = rng.choice([None, None, 3])
+        ccfg.seen_compact_every = rng.choice([4, 16])
+        ccfg.expire_state_rounds = rng.choice([2, None])
+        ccfg.bucketed_switch_rows = rng.choice([30, 1_000_000])
         pages_pdf, robots_pdf, seeds = generate(gcfg)
         pages = spark.createDataFrame(pages_pdf, schema=schemas.PAGES)
         robots = spark.createDataFrame(robots_pdf, schema=schemas.ROBOTS)
@@ -132,7 +134,7 @@ def main() -> None:
             f"[{i:02d}] {status} ({time.time() - t:.1f}s) pages={gcfg.n_pages} "
             f"dedupe={ccfg.dedupe} order={ccfg.ordering} "
             f"backend={ccfg.state_backend}/{ccfg.bucketed_switch_rows} "
-            f"queue={ccfg.queue_policy} salt={ccfg.politeness_salt} "
+            f"queue={ccfg.queue_policy} "
             f"rates={bool(ccfg.host_rates)} global={ccfg.global_rate} "
             f"depth={ccfg.max_depth} delayhosts={gcfg.crawl_delay_hosts} "
             f"flaky={gcfg.flaky_every} pages_tbl={ccfg.pages_table is not None}",

@@ -6,7 +6,10 @@ Checks (ARCHITECTURE.md §6):
      pushes filters;
   3. dedupe is a hash anti-join keyed on url_hash;
   4. text/similarity operators stay inside WholeStageCodegen with no
-     Python eval (BatchEvalPython/ArrowEvalPython) in their plans.
+     Python eval (BatchEvalPython/ArrowEvalPython) in their plans;
+  5-10. engine round plans (numbered inline below) — among them, with
+     broadcast disabled, the bucketed fetch join (6) and the full
+     pages_table + bucketed-state round (10) run with 0 Exchanges.
 
 Usage: python tools/explain_audit.py [sf_dir]
 """
@@ -16,7 +19,7 @@ from __future__ import annotations
 import io
 import os
 import sys
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -26,6 +29,29 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+@contextmanager
+def no_broadcast_plans(spark, *envs: str):
+    """Broadcast joins off (the 100 TB shape where neither join side
+    broadcasts) and the engine's explain hooks ``envs`` on; yields the
+    buffer that captures the printed plans."""
+    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    old_athr = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", None)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    for env in envs:
+        os.environ[env] = "1"
+    buf = io.StringIO()
+    try:
+        with redirect_stdout(buf):
+            yield buf
+    finally:
+        for env in envs:
+            os.environ.pop(env)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
+        if old_athr is not None:
+            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_athr)
 
 
 def check(name: str, plan: str, must: list[str], must_not: list[str]) -> bool:
@@ -159,29 +185,17 @@ def main() -> None:
     import re
     import tempfile as _tf
 
-    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_athr = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", None)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    os.environ["ANT_SPARK_EXPLAIN_FETCH"] = "1"
-    try:
+    with no_broadcast_plans(spark, "ANT_SPARK_EXPLAIN_FETCH") as buf:
         tbl_dir = _tf.mkdtemp(prefix="audit_pages_tbl_")
         Engine.create_pages_table(
             spark, pe, "audit_pages_bkt", os.path.join(tbl_dir, "t"), buckets=4
         )
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            Engine(
-                spark, None, rbe,
-                CrawlConfig(max_rounds=3, pages_table="audit_pages_bkt",
-                            fetch_buckets=4),
-            ).run(seeds)
-        fetch_out = buf.getvalue()
-    finally:
-        os.environ.pop("ANT_SPARK_EXPLAIN_FETCH")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
-        if old_athr is not None:
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_athr)
+        Engine(
+            spark, None, rbe,
+            CrawlConfig(max_rounds=3, pages_table="audit_pages_bkt",
+                        fetch_buckets=4),
+        ).run(seeds)
+    fetch_out = buf.getvalue()
     n_ex = [int(m) for m in re.findall(r"Exchanges=(\d+)", fetch_out)]
     ok6 = (
         bool(n_ex)
@@ -233,32 +247,22 @@ def main() -> None:
     # bucketed anti-join — ZERO Exchange nodes in every round's dedupe
     # plan (the 10^10-row rank side is read in place; queue.go:12-49
     # priority seam at frontier scale).
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    os.environ["ANT_SPARK_EXPLAIN_DEDUPE"] = "1"
-    try:
+    with no_broadcast_plans(spark, "ANT_SPARK_EXPLAIN_DEDUPE") as buf:
         rank_dir = _tf.mkdtemp(prefix="audit_rank_tbl_")
         rtab = Engine.create_rank_table(
             spark, ptab, "audit_rank_bkt", os.path.join(rank_dir, "t"),
             buckets=8,
         )
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            Engine(
-                spark, phe, None,
-                CrawlConfig(
-                    max_rounds=3, queue_policy="priority",
-                    priority_join=rtab, priority_join_broadcast=False,
-                    state_backend="bucketed", bucketed_switch_rows=0,
-                    state_partitions=8, dedupe="exact",
-                ),
-            ).run(hseeds)
-        pjb_out = buf.getvalue()
-    finally:
-        os.environ.pop("ANT_SPARK_EXPLAIN_DEDUPE")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
-        if old_athr is not None:
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_athr)
+        Engine(
+            spark, phe, None,
+            CrawlConfig(
+                max_rounds=3, queue_policy="priority",
+                priority_join=rtab, priority_join_broadcast=False,
+                state_backend="bucketed", bucketed_switch_rows=0,
+                state_partitions=8, dedupe="exact",
+            ),
+        ).run(hseeds)
+    pjb_out = buf.getvalue()
     n_ex8 = [int(m) for m in re.findall(r"Exchanges=(\d+)", pjb_out)]
     ok8 = (
         bool(n_ex8)
@@ -317,6 +321,28 @@ def main() -> None:
     print(f"{'PASS' if ok9 else 'FAIL'}  redirect_closure_precomputed "
           f"(resolved plan: {n_joins} join node(s), hop loop checkpointed)")
     results.append(ok9)
+
+    # 10. the full 100 TB round shape: pages_table AND the bucketed seen
+    # state, broadcast disabled — BOTH big joins storage-partitioned, so
+    # every round's fetch plan AND dedupe plan show ZERO Exchanges.
+    with no_broadcast_plans(
+        spark, "ANT_SPARK_EXPLAIN_FETCH", "ANT_SPARK_EXPLAIN_DEDUPE"
+    ) as buf:
+        Engine(
+            spark, None, rbe,
+            CrawlConfig(max_rounds=3, pages_table="audit_pages_bkt",
+                        fetch_buckets=4, state_backend="bucketed"),
+        ).run(seeds)
+    both_out = buf.getvalue()
+    fetch_ex = [int(m) for m in re.findall(r"\[fetch-plan[^\n]*Exchanges=(\d+)", both_out)]
+    dedupe_ex = [int(m) for m in re.findall(r"\[dedupe-plan[^\n]*Exchanges=(\d+)", both_out)]
+    ok10 = (
+        bool(fetch_ex) and bool(dedupe_ex)
+        and all(x == 0 for x in fetch_ex + dedupe_ex)
+    )
+    print(f"{'PASS' if ok10 else 'FAIL'}  bucketed_round_no_exchange "
+          f"(fetch-join Exchanges per round: {fetch_ex}, dedupe: {dedupe_ex})")
+    results.append(ok10)
 
     print(f"\n{'ALL PASS' if all(results) else 'AUDIT FAILURES'}")
     sys.exit(0 if all(results) else 1)
