@@ -36,37 +36,34 @@ mode — matches the reference's Workers>1 "any order" semantics).
 
 from __future__ import annotations
 
+import hashlib
 import io
 import json
 import math
 import os
 import re
+import shutil
 import tempfile
 import time
+import warnings
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import redirect_stdout
 from dataclasses import dataclass, field
 from typing import Any, Callable
-
-_TRACE = os.environ.get("ANT_SPARK_TRACE", "") == "1"
-
-
-def _trace(label: str, t0: float) -> float:
-    if _TRACE:
-        print(f"    [trace] {label}: {time.time() - t0:.2f}s", flush=True)
-    return time.time()
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ant_spark import schemas
-from ant_spark.functions import urlnorm
 from ant_spark.functions.parse import make_parse_udf
 from ant_spark.functions.urlnorm import (
     host_of,
     is_queueable,
-    normalize_udf,
+    make_normalize_udf,
     normalize_url,
+    once_per_row,
     path_of,
+    strip_tracking,
     url_hash,
 )
 from ant_spark.operators import politeness, robots as robots_ops
@@ -106,6 +103,48 @@ def _stage_rows(df: DataFrame, stages: dict[str, Column]) -> DataFrame:
         F.explode(F.array_compact(names)).alias("stage"),
         F.spark_partition_id().alias("partition"),
     )
+
+
+def _entries(root: str, prefix: str = "round=") -> list[str]:
+    """Sorted paths of the entries of ``root`` whose names start with
+    ``prefix`` (none when ``root`` does not exist)."""
+    if not os.path.isdir(root):
+        return []
+    return sorted(
+        os.path.join(root, n) for n in os.listdir(root) if n.startswith(prefix)
+    )
+
+
+def _round_of(round_dir: str) -> int:
+    return int(round_dir.rsplit("=", 1)[1])
+
+
+def _bucketed_table(
+    spark: SparkSession,
+    df: DataFrame,
+    name: str,
+    key: str,
+    buckets: int,
+    path: str | None,
+) -> None:
+    """Write ``df`` into session table ``name``, bucketed and sorted by
+    ``key``: with ``path`` the table is dropped and re-created there,
+    without it ``df`` is appended. The repartition on the bucket key gives
+    one write task per bucket (its murmur3-pmod IS the bucket function):
+    one file per bucket instead of up to tasks × buckets tiny files, which
+    every later read of the table pays for (measured 1024 files / 7.1 s vs
+    32 files / 1.1 s at sf1; r7, guide §6)."""
+    w = (
+        df.repartition(buckets, F.col(key))
+        .write.format("parquet")
+        .bucketBy(buckets, key)
+        .sortBy(key)
+    )
+    if path is None:
+        w.mode("append").saveAsTable(name)
+        return
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    w.mode("overwrite").option("path", path).saveAsTable(name)
 
 
 class CrawlError(RuntimeError):
@@ -272,6 +311,23 @@ class CrawlResult:
     crawl_wall_sec: float = 0.0  # time inside rounds (excludes seed bootstrap)
 
 
+@dataclass
+class _RoundState:
+    """The crawl state a round reads and the next one inherits, plus the
+    frames the running round caches (unpersisted when it ends)."""
+
+    r: int
+    frontier: DataFrame
+    frontier_count: int
+    next_seq: int
+    total_fetched: int
+    total_enqueued: int
+    seen_paths: list[str]
+    bloom_state: DataFrame | None
+    metric_rows: list[tuple] = field(default_factory=list)  # whole crawl
+    cached: list[DataFrame] = field(default_factory=list)
+
+
 def _backoff_ms(attempt_col, min_ms: int, max_ms: int):
     """Quadratic backoff, capped (fetcher.go:248-270: dur=attempt²·min)."""
     return F.least(
@@ -311,9 +367,9 @@ class Engine:
         self._parse_udf = make_parse_udf(
             self.cfg.scrape_spec, self.cfg.link_selector, self.cfg.text_mode
         )
-        from ant_spark.functions.urlnorm import make_normalize_udf
-
         self._norm_udf = make_normalize_udf(self.cfg.strip_tracking_params)
+        # discovered links are filtered on the normalized url
+        self._link_norm_udf = once_per_row(self._norm_udf)
         self._robots_has_delay: bool | None = None
         self._robots_empty: bool | None = None
         self._robots_cache: DataFrame | None = None  # TTL mode per-host cache
@@ -352,20 +408,7 @@ class Engine:
             from ant_spark.operators.redirects import resolve_redirects
 
             pages_df = resolve_redirects(pages_df)
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            # repartition on the bucket key: one write task per bucket —
-            # one file per bucket instead of up to tasks×buckets (r7,
-            # guide §6; this is the corpus write, so the file-count blowup
-            # here also cost every subsequent fetch-join scan)
-            pages_df.repartition(buckets, F.col("url"))
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(buckets, "url")
-            .sortBy("url")
-            .option("path", path)
-            .saveAsTable(name)
-        )
+        _bucketed_table(spark, pages_df, name, "url", buckets, path)
         return spark.table(name)
 
     @staticmethod
@@ -385,22 +428,12 @@ class Engine:
         sort-merge join: the rank side is read in place with NO Exchange
         (the fetch-join idiom, queue.go:12-49 priority seam at frontier
         scale). ``buckets`` must equal ``CrawlConfig.state_partitions``."""
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            rank_df.select(
-                url_hash(F.col("url")).alias("url_hash"),
-                "url",
-                F.col("priority").cast("double").alias("priority"),
-            )
-            # one write task per bucket (see create_pages_table)
-            .repartition(buckets, F.col("url_hash"))
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(buckets, "url_hash")
-            .sortBy("url_hash")
-            .option("path", path)
-            .saveAsTable(name)
+        ranks = rank_df.select(
+            url_hash(F.col("url")).alias("url_hash"),
+            "url",
+            F.col("priority").cast("double").alias("priority"),
         )
+        _bucketed_table(spark, ranks, name, "url_hash", buckets, path)
         return spark.table(name)
 
     def _robots_is_empty(self) -> bool:
@@ -485,8 +518,6 @@ class Engine:
         lets Catalyst's InferWindowGroupLimit prune hot hosts map-side — a
         per-row budget column alone gets no pushdown (the filter must
         compare against a literal)."""
-        import math
-
         cfg = self.cfg
         cands = [1]
         if cfg.default_host_budget < UNLIMITED_BUDGET:
@@ -527,52 +558,37 @@ class Engine:
         os.rename(tmp, final)  # atomic commit (disk.go:390-423 analogue)
 
     def latest_round(self, root: str) -> tuple[int, dict] | None:
-        best = None
-        if not os.path.isdir(root):
+        committed = [
+            d for d in _entries(root) if os.path.exists(os.path.join(d, "MANIFEST.json"))
+        ]
+        if not committed:
             return None
-        for name in os.listdir(root):
-            if name.startswith("round="):
-                mf = os.path.join(root, name, "MANIFEST.json")
-                if os.path.exists(mf):
-                    r = int(name.split("=")[1])
-                    if best is None or r > best[0]:
-                        with open(mf) as f:
-                            best = (r, json.load(f))
-        return best
+        d = max(committed, key=_round_of)
+        with open(os.path.join(d, "MANIFEST.json")) as f:
+            return _round_of(d), json.load(f)
 
     def _write_state(
         self, root: str, r: int, name: str, df: DataFrame, by_url_hash: bool = False
     ) -> DataFrame:
         path = os.path.join(self._round_dir(root, r), name)
-        w = df
         if by_url_hash:
             # hash-distribute state by url_hash (at cluster scale: Iceberg
             # bucket partitioning → storage-partitioned anti-join). No
             # explicit N: AQE coalesces tiny frontiers, keeps large ones
             # parallel up to spark.sql.shuffle.partitions.
-            w = df.repartition(F.col("url_hash"))
-        w.write.mode("overwrite").parquet(path)
+            df = df.repartition(F.col("url_hash"))
+        df.write.mode("overwrite").parquet(path)
         return self.spark.read.parquet(path)
 
     def _seen_write(self, root: str, r: int, delta: DataFrame) -> None:
         """Commit a seen delta: parquet dir per round, or an append into the
-        url_hash-bucketed seen table (Iceberg bucketed-append analogue)."""
+        url_hash-bucketed seen table (Iceberg bucketed-append analogue); a
+        round-0 write (seeds or migration) creates the table."""
         if self._bucketed:
-            # repartition on the bucket key: the appended delta adds ONE
-            # file per bucket per round instead of one per (task, bucket) —
-            # the accumulated table otherwise grows toward rounds×tasks×
-            # buckets tiny files and the per-round seen scan pays for every
-            # one of them (r7, guide §6)
-            w = (
-                delta.repartition(self.cfg.state_partitions, F.col("url_hash"))
-                .write.mode("overwrite" if r == 0 else "append")
-                .format("parquet")
-                .bucketBy(self.cfg.state_partitions, "url_hash")
-                .sortBy("url_hash")
+            _bucketed_table(
+                self.spark, delta, self._seen_tbl, "url_hash",
+                self.cfg.state_partitions, self._seen_tbl_path if r == 0 else None,
             )
-            if r == 0:
-                w = w.option("path", self._seen_tbl_path)
-            w.saveAsTable(self._seen_tbl)
         else:
             self._write_state(root, r, "seen_delta", delta)
 
@@ -584,21 +600,10 @@ class Engine:
         right after records the new path — a crash in between resumes on the
         old path (still on disk). Returns the old path for post-commit
         deletion."""
-        spark = self.spark
         old_path = self._seen_tbl_path
-        new_path = os.path.join(root, f"seen_tbl_r{r:05d}")
-        df = spark.read.parquet(old_path).select("url_hash", "url", "round")
-        spark.sql(f"DROP TABLE IF EXISTS {self._seen_tbl}")
-        self._seen_tbl_path = new_path
-        (
-            df.repartition(self.cfg.state_partitions, F.col("url_hash"))
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(self.cfg.state_partitions, "url_hash")
-            .sortBy("url_hash")
-            .option("path", new_path)
-            .saveAsTable(self._seen_tbl)
-        )
+        df = self.spark.read.parquet(old_path).select("url_hash", "url", "round")
+        self._seen_tbl_path = os.path.join(root, f"seen_tbl_r{r:05d}")
+        self._seen_write(root, 0, df)  # a round-0 write creates the table
         return old_path
 
     def _seen_register(self) -> None:
@@ -636,11 +641,7 @@ class Engine:
         are a hard error, non-http(s) schemes are rejected)."""
         import pandas as pd
 
-        rows = []
-        seen_local: set[str] = set()
-        seq = 0
-        from ant_spark.functions.urlnorm import strip_tracking
-
+        rows = {}  # url → row, in first-seen order; seq = position
         for raw in seeds:
             u = normalize_url(raw)  # raises ValueError like engine.Enqueue
             if self.cfg.strip_tracking_params:
@@ -648,36 +649,76 @@ class Engine:
             scheme = u.split("://", 1)[0] if "://" in u else ""
             if scheme not in ("http", "https"):
                 raise ValueError(f"ant_spark: invalid seed scheme: {raw!r}")
-            if u in seen_local:
-                continue
-            seen_local.add(u)
-            rows.append(
-                {
-                    "url": u,
-                    "host": u.split("://", 1)[1].split("/", 1)[0],
-                    "depth": 0,
-                    "seq": seq,
-                    "priority": 0.0,
-                    "attempt": 1,
-                    "not_before": 0,
-                }
-            )
-            seq += 1
+            if u not in rows:
+                host = u.split("://", 1)[1].split("/", 1)[0]
+                rows[u] = (u, host, 0, len(rows), 0.0, 1, 0)
         return pd.DataFrame(
-            rows,
+            list(rows.values()),
             columns=["url", "host", "depth", "seq", "priority", "attempt", "not_before"],
         )
 
     def run(self, seeds: list[str], resume: bool = False) -> CrawlResult:
+        """Crawl until the frontier drains or ``max_rounds`` rounds ran.
+        Each round's MANIFEST carries ``phases``: the wall seconds of each
+        phase method. The lazy phases only build plans, so theirs is driver
+        time; the phases that run actions carry the compute."""
+        cfg = self.cfg
+        st = self._bootstrap(seeds, resume)
+        rounds_run = 0
+        crawl_wall = 0.0
+        while st.frontier_count and (
+            cfg.max_rounds is None or rounds_run < cfg.max_rounds
+        ):
+            laps = [("", time.perf_counter())]
+            rb, waiting, deferred, admitted = self._robots_admit(st)
+            laps.append(("robots_admit", time.perf_counter()))
+            processed = self._fetch_parse(st, admitted)
+            laps.append(("fetch_parse", time.perf_counter()))
+            new_rows, redirect_finals = self._discover_dedupe(st, processed)
+            laps.append(("discover_dedupe", time.perf_counter()))
+            by_stage = self._commit(
+                st, rb, waiting, deferred, processed, new_rows, redirect_finals
+            )
+            laps.append(("commit", time.perf_counter()))
+            old_seen_dir = self._housekeep(st)
+            laps.append(("housekeep", time.perf_counter()))
+            phases = {
+                name: round(t1 - t0, 4)
+                for (_, t0), (name, t1) in zip(laps, laps[1:])
+            }
+            self._commit_round(
+                self._root, st.r + 1, self._advance(st, by_stage, phases)
+            )
+            self._expire(st, old_seen_dir)
+            for df in st.cached:
+                df.unpersist()
+            st.cached = []
+            st.r += 1
+            rounds_run += 1
+            crawl_wall += time.perf_counter() - laps[0][1]
+
+            if cfg.strict and by_stage.get("perm_error", 0) > 0:
+                raise CrawlError(
+                    f"permanent fetch errors in round {st.r - 1}: "
+                    f"{by_stage.get('perm_error')} (reference aborts the crawl)"
+                )
+        return self._result(st, rounds_run, crawl_wall)
+
+    # ------------------------------------------------------------------
+    # crawl phases: _bootstrap once, then per round _robots_admit →
+    # _fetch_parse → _discover_dedupe → _commit → _housekeep
+
+    def _bootstrap(self, seeds, resume: bool) -> _RoundState:
+        """Checkpoint dir and table names, stale-state cleanup on a fresh
+        run, the fetch join's pages side, then the resumed or seeded state
+        of the first round."""
         cfg = self.cfg
         spark = self.spark
-        root = self._init_dirs()
+        root = self._root = self._init_dirs()
         if cfg.state_backend not in ("auto", "parquet", "bucketed"):
             raise ValueError(f"unknown state_backend {cfg.state_backend!r}")
         self._bucketed = cfg.state_backend == "bucketed"
         if cfg.state_backend != "parquet" or cfg.pages_table is not None:
-            import hashlib
-
             dig = hashlib.md5(root.encode()).hexdigest()[:10]
             self._adm_tbl = f"ant_adm_{dig}"
         if cfg.state_backend != "parquet":
@@ -689,29 +730,60 @@ class Engine:
             # fresh run into an existing checkpoint_dir: clear stale round=*
             # state — otherwise the end-of-run glob folds a previous crawl's
             # fetched_log/extracted into this CrawlResult.
-            import shutil
-            import warnings
-
-            stale = [n for n in os.listdir(root) if n.startswith("round=")]
+            stale = _entries(root)
             if stale:
                 warnings.warn(
                     f"ant_spark: fresh run (resume=False) into existing "
                     f"checkpoint_dir {root!r} — deleting {len(stale)} prior "
                     f"round=* dir(s) including their fetched_log/extracted "
                     f"output; pass resume=True to continue the previous crawl",
-                    stacklevel=2,
+                    stacklevel=3,
                 )
-            for name in stale:
-                shutil.rmtree(os.path.join(root, name), ignore_errors=True)
             if cfg.state_backend != "parquet":
                 spark.sql(f"DROP TABLE IF EXISTS {self._seen_tbl}")
                 spark.sql(f"DROP TABLE IF EXISTS {self._links_tbl}")
-                for name in os.listdir(root):
-                    if name.startswith("seen_tbl"):
-                        shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+                stale += _entries(root, "seen_tbl")
+            for path in stale:
+                shutil.rmtree(path, ignore_errors=True)
             if cfg.pages_table is not None:
                 spark.sql(f"DROP TABLE IF EXISTS {self._adm_tbl}")
 
+        self._pages_side = self._fetch_pages()
+        start = self.latest_round(root) if resume else None
+        st = self._resume(root, *start) if start else self._seed(root, seeds)
+
+        # Corpus-scale priority signal (priority_join_broadcast=False in the
+        # bucketed exact-dedupe mode): project the rank table ONCE, keeping
+        # its stored url_hash column so the storage bucketing survives the
+        # projection — the per-round join against the staged (same-bucketed)
+        # links table is then a storage-partitioned SMJ: the huge rank side
+        # is read in place with ZERO Exchange (the fetch-join/seen-anti-join
+        # idiom; see Engine.create_rank_table). Recomputing url_hash(url)
+        # here would be semantically equal but a DIFFERENT expression, so
+        # Catalyst would no longer recognize the table's partitioning.
+        self._pj_bucketed = None
+        if (
+            cfg.priority_join is not None
+            and not cfg.priority_join_broadcast
+            and self._bucketed
+            and (cfg.dedupe == "exact" or self._bloom is None)
+        ):
+            src = cfg.priority_join
+            hash_c = (
+                F.col("url_hash") if "url_hash" in src.columns
+                else url_hash(F.col("url"))
+            )
+            self._pj_bucketed = src.select(
+                hash_c.alias("_pj_hash"),
+                F.col("url").alias("_pj_url"),
+                F.col("priority").cast("double").alias("_pj_prio"),
+            )
+        return st
+
+    def _fetch_pages(self) -> DataFrame:
+        """The fetch join's pages side: stale rows dropped (cache freshness),
+        redirect chains collapsed, join columns renamed."""
+        cfg = self.cfg
         pages_src = self.pages
         if cfg.max_age_seconds is not None and cfg.crawl_ts is not None:
             # cache freshness (S5, aggressive mode): stale rows fall out of
@@ -728,7 +800,7 @@ class Engine:
             from ant_spark.operators.redirects import resolve_redirects
 
             pages_src = resolve_redirects(pages_src, cfg.max_redirects)
-        has_redirects = "final_url" in pages_src.columns
+        self._has_redirects = "final_url" in pages_src.columns
         page_cols = [
             F.col("url").alias("_p_url"),
             "warc_ts",
@@ -736,9 +808,8 @@ class Engine:
             F.col("status").alias("_p_status"),
             "ok_after_attempt",
         ]
-        if has_redirects:
+        if self._has_redirects:
             page_cols.append(F.col("final_url").alias("_p_final_url"))
-        pages = pages_src.select(*page_cols)
         # NOTE on the fetch join's pages side: no engine-side repartition or
         # cache — measured slower here. The join is a LEFT OUTER join, which
         # can only build its right side: when the page corpus is under the
@@ -751,42 +822,46 @@ class Engine:
         # bucketing, so without a broadcast the join is a
         # storage-partitioned SMJ with ZERO Exchanges
         # (tools/explain_audit.py checks 6 and 10).
+        return pages_src.select(*page_cols)
 
-        start = self.latest_round(root) if resume else None
-        if start is not None:
-            r0, manifest = start
-            frontier = spark.read.parquet(os.path.join(self._round_dir(root, r0), "frontier"))
-            seen_paths = [os.path.join(root, p) for p in manifest["seen_paths"]]
-            # the MANIFEST is authoritative for which backend holds the seen
-            # state: resuming a parquet-phase checkpoint as if it were
-            # bucketed would register an EMPTY table and re-crawl everything.
-            manifest_bucketed = bool(manifest.get("bucketed_active", False))
-            if manifest_bucketed and cfg.state_backend == "parquet":
-                raise ValueError(
-                    "checkpoint was committed with the bucketed seen backend; "
-                    "resume with state_backend='auto' or 'bucketed'"
-                )
-            self._bucketed = manifest_bucketed
-            # (cfg 'bucketed' over a parquet-phase manifest resumes on
-            # parquet and migrates at the next commit — see the migration
-            # condition in the round loop.)
-            if self._bucketed:
-                rel = manifest.get("seen_table_path") or "seen_tbl_r00000"
-                self._seen_tbl_path = os.path.join(root, rel)
-                self._seen_register()
-            next_seq = manifest["next_seq"]
-            total_fetched = manifest["total_fetched"]
-            total_enqueued = manifest["total_enqueued"]
-            frontier_count = manifest["frontier_count"]
-            # manifest at round=N holds the state FOR round N (committed at
-            # the end of round N-1), so the next engine round is N itself.
-            r = r0
-            bloom_state = (
-                spark.read.parquet(os.path.join(self._round_dir(root, r0), "bloom"))
-                if self._bloom
-                else None
+    def _resume(self, root: str, r0: int, manifest: dict) -> _RoundState:
+        """The state of round ``r0`` from its committed MANIFEST."""
+        # the MANIFEST is authoritative for which backend holds the seen
+        # state: resuming a parquet-phase checkpoint as if it were
+        # bucketed would register an EMPTY table and re-crawl everything.
+        manifest_bucketed = bool(manifest.get("bucketed_active", False))
+        if manifest_bucketed and self.cfg.state_backend == "parquet":
+            raise ValueError(
+                "checkpoint was committed with the bucketed seen backend; "
+                "resume with state_backend='auto' or 'bucketed'"
             )
-        elif isinstance(seeds, DataFrame):
+        self._bucketed = manifest_bucketed
+        # (cfg 'bucketed' over a parquet-phase manifest resumes on parquet
+        # and migrates at the next commit — see _housekeep.)
+        if self._bucketed:
+            rel = manifest.get("seen_table_path") or "seen_tbl_r00000"
+            self._seen_tbl_path = os.path.join(root, rel)
+            self._seen_register()
+        rd = self._round_dir(root, r0)
+        # manifest at round=N holds the state FOR round N (committed at the
+        # end of round N-1), so the next engine round is N itself.
+        return _RoundState(
+            r=r0,
+            frontier=self.spark.read.parquet(os.path.join(rd, "frontier")),
+            frontier_count=manifest["frontier_count"],
+            next_seq=manifest["next_seq"],
+            total_fetched=manifest["total_fetched"],
+            total_enqueued=manifest["total_enqueued"],
+            seen_paths=[os.path.join(root, p) for p in manifest["seen_paths"]],
+            bloom_state=(
+                self.spark.read.parquet(os.path.join(rd, "bloom")) if self._bloom else None
+            ),
+        )
+
+    def _seed(self, root: str, seeds) -> _RoundState:
+        """Round 0 from the seeds: frontier and seen state written."""
+        cfg = self.cfg
+        if isinstance(seeds, DataFrame):
             # bulk seed path: a DataFrame with a normalized `url` column —
             # seq assigned JVM-side, partition-parallel (unique+deterministic:
             # rank-within-hash-partition × stride + partition), for huge seed
@@ -843,7 +918,7 @@ class Engine:
             seq_stride = P
         else:
             seed_pdf = self.seed_frontier(seeds)
-            frontier = spark.createDataFrame(seed_pdf, schema=(
+            frontier = self.spark.createDataFrame(seed_pdf, schema=(
                 "url string, host string, depth int, seq long, priority double, "
                 "attempt int, not_before long"
             )).withColumn("url_hash", url_hash(F.col("url"))).select(
@@ -853,741 +928,677 @@ class Engine:
                 # matcher runs BEFORE dedupe/enqueue (engine.go:201,338-349)
                 frontier = frontier.filter(cfg.matcher(F.col("url")))
             seq_stride = None
-        if start is None:
-            # round-0 state, shared by both seed paths; bulk seeds are
-            # hash-distributed on url_hash like every later frontier
-            frontier = self._write_state(
-                root, 0, "frontier", frontier, by_url_hash=seq_stride is not None
+        # round-0 state, shared by both seed paths; bulk seeds are
+        # hash-distributed on url_hash like every later frontier
+        frontier = self._write_state(
+            root, 0, "frontier", frontier, by_url_hash=seq_stride is not None
+        )
+        self._seen_write(
+            root, 0,
+            frontier.select("url_hash", "url", F.lit(0).alias("round")),
+        )
+        agg = frontier.agg(
+            F.count("*").alias("n"), F.max("seq").alias("mx")
+        ).collect()[0]
+        frontier_count = int(agg["n"])
+        if seq_stride is not None:
+            # seq upper bound in the partitioned (rank × stride) scheme
+            next_seq = frontier_count * seq_stride
+        else:
+            # max(seq)+1, NOT count(): a matcher that excludes a seed
+            # must not let discovered links reuse survivors' seqs (seq
+            # uniqueness drives split_by_budget/global_limit anti-joins)
+            next_seq = int(agg["mx"]) + 1 if agg["mx"] is not None else 0
+        bloom_state = None
+        if self._bloom:
+            bloom_state = self._bloom.add(frontier, self._bloom.empty_state(self.spark))
+            bloom_state = self._write_state(root, 0, "bloom", bloom_state)
+        return _RoundState(
+            r=0,
+            frontier=frontier,
+            frontier_count=frontier_count,
+            next_seq=next_seq,
+            total_fetched=0,
+            total_enqueued=frontier_count,
+            seen_paths=(
+                [] if self._bucketed else [os.path.join(self._round_dir(root, 0), "seen_delta")]
+            ),
+            bloom_state=bloom_state,
+        )
+
+    def _robots_admit(
+        self, st: _RoundState
+    ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+        """Split the frontier into due and waiting rows, join robots onto
+        the due rows and apply the politeness budget. Returns ``(rb,
+        waiting, deferred, admitted)``: the due rows with their robots
+        verdict (cached), the rows not yet due, the allowed rows the budget
+        defers, and the rows to fetch."""
+        cfg = self.cfg
+        round_ts = int(st.r * cfg.round_seconds * 1000)
+        eligible = st.frontier.filter(F.col("not_before") <= round_ts)
+        waiting = st.frontier.filter(F.col("not_before") > round_ts)
+
+        # robots (broadcast join + vectorized allow test)
+        if self._robots_is_empty():
+            # no robots anywhere ⇒ allow-all; skip the join + UDFs
+            rb = eligible.withColumn(
+                "crawl_delay", F.lit(None).cast("double")
+            ).persist()
+            allowed = rb
+        else:
+            rb = robots_ops.with_robots(
+                eligible, self._robots_for_round(st.r), cfg.ua, path_of(F.col("url"))
+            ).persist()
+            allowed = rb.filter(F.col("robots_allowed")).drop("robots_allowed")
+        st.cached.append(rb)
+
+        # politeness budget window
+        # fast path: with no rate limits and no crawl-delays anywhere,
+        # every allowed row is admitted — skip the window + anti-join
+        # (two shuffles saved per round in pure-throughput crawls).
+        pol_off = self._politeness_static_off()
+        if pol_off:
+            admitted = allowed.drop("crawl_delay")
+            # an empty relation the optimizer drops from every union (a
+            # createDataFrame([]) would scan a Python RDD in each action)
+            deferred = eligible.filter(F.lit(False))
+        else:
+            cols = st.frontier.columns
+            budget = politeness.host_budget_expr(
+                cfg.round_seconds,
+                cfg.default_host_budget,
+                F.col("crawl_delay"),
+                cfg.host_rates or None,
             )
-            self._seen_write(
-                root, 0,
-                frontier.select("url_hash", "url", F.lit(0).alias("round")),
+            order_cols = (
+                ["priority", "seq"] if cfg.queue_policy == "priority" else ["seq"]
             )
-            seen_paths = (
-                [] if self._bucketed
-                else [os.path.join(self._round_dir(root, 0), "seen_delta")]
+            wb = allowed.withColumn("_b", budget)
+            # rows with NO binding limiter keep the unlimited sentinel
+            # budget — they are all admitted and must never enter the
+            # window (an unlimited hot host would be one giant window
+            # partition). Limited rows go through the capped window:
+            # InferWindowGroupLimit only fires for rank <= LITERAL, and
+            # the budget is a per-row column, so the driver-computed
+            # foldable cap (_politeness_budget_cap) restores the
+            # map-side pruning — hot hosts cut to ≤ cap rows per input
+            # partition BEFORE the shuffle (pinned against the uncapped
+            # window in tests/test_politeness.py).
+            unlimited = wb.filter(F.col("_b") >= UNLIMITED_BUDGET)
+            limited = wb.filter(F.col("_b") < UNLIMITED_BUDGET)
+            adm_l, deferred = politeness.split_by_budget(
+                limited,
+                F.col("_b"),
+                order_cols=order_cols,
+                budget_cap=self._politeness_budget_cap(),
             )
-            agg = frontier.agg(
-                F.count("*").alias("n"), F.max("seq").alias("mx")
-            ).collect()[0]
-            frontier_count = int(agg["n"])
-            if seq_stride is not None:
-                # seq upper bound in the partitioned (rank × stride) scheme
-                next_seq = frontier_count * seq_stride
-            else:
-                # max(seq)+1, NOT count(): a matcher that excludes a seed
-                # must not let discovered links reuse survivors' seqs (seq
-                # uniqueness drives split_by_budget/global_limit anti-joins)
-                next_seq = int(agg["mx"]) + 1 if agg["mx"] is not None else 0
-            total_fetched = 0
-            total_enqueued = frontier_count
-            r = 0
-            bloom_state = None
-            if self._bloom:
-                bloom_state = self._bloom.add(frontier, self._bloom.empty_state(spark))
-                bloom_state = self._write_state(root, 0, "bloom", bloom_state)
-
-        # Corpus-scale priority signal (priority_join_broadcast=False in the
-        # bucketed exact-dedupe mode): project the rank table ONCE, keeping
-        # its stored url_hash column so the storage bucketing survives the
-        # projection — the per-round join against the staged (same-bucketed)
-        # links table is then a storage-partitioned SMJ: the huge rank side
-        # is read in place with ZERO Exchange (the fetch-join/seen-anti-join
-        # idiom; see Engine.create_rank_table). Recomputing url_hash(url)
-        # here would be semantically equal but a DIFFERENT expression, so
-        # Catalyst would no longer recognize the table's partitioning.
-        pj_bucketed = None
-        if (
-            cfg.priority_join is not None
-            and not cfg.priority_join_broadcast
-            and self._bucketed
-            and (cfg.dedupe == "exact" or self._bloom is None)
-        ):
-            _pj_src = cfg.priority_join
-            _pj_hash_c = (
-                F.col("url_hash")
-                if "url_hash" in _pj_src.columns
-                else url_hash(F.col("url"))
+            admitted = unlimited.unionByName(adm_l).drop("_b", "crawl_delay")
+            deferred = deferred.drop("_b", "crawl_delay").select(*cols)
+            if cfg.pattern_rates:
+                admitted, deferred3 = politeness.rule_budget(
+                    admitted, cfg.pattern_rates, cfg.round_seconds, order_cols
+                )
+                deferred = deferred.unionByName(deferred3.select(*cols))
+            if cfg.global_rate is not None:
+                admitted, deferred2 = politeness.global_limit(
+                    admitted, int(cfg.global_rate * cfg.round_seconds), order_cols
+                )
+                deferred = deferred.unionByName(deferred2.select(*cols))
+            # read by the stage count and the frontier write: cached so
+            # the budget windows run once for it, not once per action
+            deferred = deferred.persist()
+            st.cached.append(deferred)
+        if cfg.pages_table is not None:
+            # stage the admitted frontier into a table bucketed like the
+            # pages corpus; only the tiny frontier side is written. The
+            # staged read doubles as the round's materialization, so no
+            # .persist() needed.
+            _bucketed_table(
+                self.spark, admitted, self._adm_tbl, "url", cfg.fetch_buckets,
+                os.path.join(self._round_dir(self._root, st.r + 1), "admitted_staged"),
             )
-            pj_bucketed = _pj_src.select(
-                _pj_hash_c.alias("_pj_hash"),
-                F.col("url").alias("_pj_url"),
-                F.col("priority").cast("double").alias("_pj_prio"),
+            admitted = self.spark.table(self._adm_tbl)
+        elif not pol_off:
+            admitted = admitted.persist()
+            st.cached.append(admitted)
+        # else: admitted is a cheap projection of the already-persisted
+        # rb cache — a second persist would just double-fill memory and
+        # add a cache pass per round.
+        return rb, waiting, deferred, admitted
+
+    def _fetch_parse(self, st: _RoundState, admitted: DataFrame) -> DataFrame:
+        """Fetch (a left equi-join against the page universe) fused with the
+        parse UDF into one cached frame; ``status_eff`` is each row's
+        effective status and ``parsed`` its parse struct."""
+        cfg = self.cfg
+        pages = self._pages_side
+        # The parse and normalize UDFs run in the join's stage, so its
+        # task count is the round's Python task count. Size it from the
+        # cores and the frontier, not from the storage layout (one
+        # frontier file = one task; a bucketed table = one task per
+        # bucket however few rows it holds). A hash repartition of the
+        # html-free admitted rows costs one tiny shuffle (when the pages
+        # side does not broadcast, the join's own shuffle on url replaces
+        # it); in pages_table mode coalesce keeps the storage-partitioned
+        # join Exchange-free.
+        n_udf = min(self.spark.sparkContext.defaultParallelism, st.frontier_count)
+        if cfg.pages_table is None:
+            to_fetch = admitted.repartition(n_udf, F.col("url_hash"))
+            fetched = to_fetch.join(pages, to_fetch["url"] == pages["_p_url"], "left")
+        else:
+            fetched = admitted.join(
+                pages, admitted["url"] == pages["_p_url"], "left"
+            ).coalesce(n_udf)
+        _explain(
+            "ANT_SPARK_EXPLAIN_FETCH",
+            f"fetch-plan round={st.r} bucketed={cfg.pages_table is not None}",
+            fetched,
+        )
+        # temporary statuses (fetcher.go:63-69) recover once attempt
+        # reaches ok_after_attempt; other ≥400 statuses are permanent.
+        status_eff = (
+            F.when(F.col("_p_url").isNull(), F.lit(404))
+            .when(
+                F.col("_p_status").isin(503, 504, 429)
+                & (F.col("attempt") < F.coalesce(F.col("ok_after_attempt"), F.lit(1 << 30))),
+                F.col("_p_status"),
+            )
+            .when(
+                (F.col("_p_status") >= 400) & ~F.col("_p_status").isin(503, 504, 429),
+                F.col("_p_status"),
+            )
+            .otherwise(F.lit(200))
+        )
+        # fuse fetch-join + parse into ONE cached pass: the UDF only sees
+        # html for 200s (null otherwise); the cache never holds html.
+        html_in = F.when(status_eff == 200, F.col("html"))
+        if cfg.render_fn is not None:
+            # S4 render seam: vectorized kernel over the fetched html,
+            # in the same Python stage as the parse UDF (no extra pass)
+            from ant_spark.operators.render import make_render_udf
+
+            rendered = make_render_udf(cfg.render_fn)(html_in)
+            html_in = (
+                rendered if cfg.render_when is None
+                else F.when(cfg.render_when(), rendered).otherwise(html_in)
+            )
+        # relative links on a redirected page resolve against the FINAL
+        # url (Go: req.URL is rewritten per hop before html.Parse sees
+        # the body).
+        parse_base = F.col("url")
+        if self._has_redirects:
+            parse_base = F.coalesce(F.col("_p_final_url"), parse_base)
+        processed = (
+            fetched.withColumn("status_eff", status_eff)
+            .withColumn("parsed", self._parse_udf(parse_base, html_in))
+            .drop("html", "_p_url", "_p_status", "ok_after_attempt")
+        ).persist()
+        st.cached.append(processed)
+        return processed
+
+    def _status_stages(self) -> dict[str, Column]:
+        """One status stage per processed row; 404s are consumed, dead
+        letters and permanent errors leave the crawl (only counted)."""
+        se = F.col("status_eff")
+        temp = se.isin(503, 504, 429)
+        stages = {
+            "fetched": se == 200,
+            "missing_404": se == 404,
+            "retried": temp & (F.col("attempt") + 1 <= self.cfg.max_attempts),
+            "dead_letter": temp & (F.col("attempt") + 1 > self.cfg.max_attempts),
+            "perm_error": (se >= 400) & ~se.isin(404, 503, 504, 429),
+        }
+        if self._has_redirects:
+            # every row whose chain was followed, wherever it landed
+            # (a 200, a missing page or a 508 loop)
+            stages["redirected"] = F.col("_p_final_url").isNotNull()
+        return stages
+
+    def _discover_dedupe(
+        self, st: _RoundState, processed: DataFrame
+    ) -> tuple[DataFrame, DataFrame | None]:
+        """Links of the fetched pages → normalize → matcher → first
+        occurrence → dedupe against seen → seq and priority. Returns the
+        new frontier rows (cached) and the redirect landing urls (or None)."""
+        cfg = self.cfg
+        parsed = processed.filter(self._status_stages()["fetched"])
+        # redirect landing set (dim-sized, from the cached `processed`):
+        # these urls are already-logged content — they join the seen
+        # delta AND filter the SAME round's link discoveries (a page
+        # fetched this round may link the landing url directly).
+        redirect_finals = None
+        if self._has_redirects and cfg.redirect_seen:
+            redirect_finals = (
+                parsed.filter(
+                    F.col("_p_final_url").isNotNull()
+                    & (F.col("_p_final_url") != F.col("url"))
+                )
+                .select(F.col("_p_final_url").alias("url"))
+                .distinct()
+                .select(url_hash(F.col("url")).alias("url_hash"), "url")
             )
 
-        metric_rows: list[tuple] = []
-        rounds_run = 0
-        crawl_wall = 0.0
+        links = (
+            parsed.select(
+                F.col("seq").alias("parent_seq"),
+                F.col("depth").alias("parent_depth"),
+                F.posexplode("parsed.links").alias("link_idx", "raw_url"),
+            )
+            .withColumn("url", self._link_norm_udf(F.col("raw_url")))
+            .filter(F.col("url").isNotNull() & is_queueable(F.col("url")))
+        )
+        if cfg.matcher is not None:
+            links = links.filter(cfg.matcher(F.col("url")))
+        if cfg.max_depth is not None:
+            links = links.filter(F.col("parent_depth") + 1 <= cfg.max_depth)
+        links = links.withColumn("url_hash", url_hash(F.col("url")))
+        links = first_occurrence(
+            links, ["url_hash", "url"], ["parent_seq", "link_idx"]
+        )
 
-        while True:
-            _round_t0 = time.time()
-            if frontier_count == 0:
-                break  # queue.Wait() returned — crawl complete
-            if cfg.max_rounds is not None and rounds_run >= cfg.max_rounds:
-                break
-            round_ts = int(r * cfg.round_seconds * 1000)
-            seen = self._seen_read(r, seen_paths)
+        exact = cfg.dedupe == "exact" or self._bloom is None
+        if self._bucketed and exact:
+            # stage candidates into a table bucketed like `seen`: the
+            # exact anti-join becomes storage-partitioned — the (huge)
+            # seen side is read in place with NO Exchange; only the
+            # (small) per-round candidate set pays a bucket shuffle,
+            # folded into this write.
+            _bucketed_table(
+                self.spark, links.drop("raw_url"), self._links_tbl, "url_hash",
+                cfg.state_partitions,
+                os.path.join(self._round_dir(self._root, st.r + 1), "links_staged"),
+            )
+            links = self.spark.table(self._links_tbl)
+            if self._pj_bucketed is not None:
+                # URL-level rank at corpus scale: both sides bucketed
+                # on url_hash → storage-partitioned SMJ, no Exchange on
+                # the (10^10-row) rank side; url equality rides along
+                # for hash-collision safety. The joined priority flows
+                # through dedupe + seq assignment to the final select.
+                pj = self._pj_bucketed
+                links = links.join(
+                    pj,
+                    (links["url_hash"] == pj["_pj_hash"])
+                    & (links["url"] == pj["_pj_url"]),
+                    "left",
+                ).drop("_pj_hash", "_pj_url")
 
-            eligible = frontier.filter(F.col("not_before") <= round_ts)
-            waiting = frontier.filter(F.col("not_before") > round_ts)
-
-            # robots (broadcast join + vectorized allow test) ------------
-            # rb_stages / proc_stages: the round's stage counters, counted
-            # per partition over the cached frames at commit time.
-            rb_stages = {"eligible": F.lit(True)}
-            if self._robots_is_empty():
-                # no robots anywhere ⇒ allow-all; skip the join + UDFs
-                rb = eligible.withColumn(
-                    "crawl_delay", F.lit(None).cast("double")
-                ).persist()
-                allowed = rb
-            else:
-                rb = robots_ops.with_robots(
-                    eligible, self._robots_for_round(r), cfg.ua, path_of(F.col("url"))
-                ).persist()
-                allowed = rb.filter(F.col("robots_allowed")).drop("robots_allowed")
-                rb_stages["robots_denied"] = ~F.col("robots_allowed")
-
-            # politeness budget window -----------------------------------
-            # fast path: with no rate limits and no crawl-delays anywhere,
-            # every allowed row is admitted — skip the window + anti-join
-            # (two shuffles saved per round in pure-throughput crawls).
-            pol_off = self._politeness_static_off()
-            if pol_off:
-                admitted = allowed.drop("crawl_delay")
-                # an empty relation the optimizer drops from every union (a
-                # createDataFrame([]) would scan a Python RDD in each action)
-                deferred = eligible.filter(F.lit(False))
-            else:
-                budget = politeness.host_budget_expr(
-                    cfg.round_seconds,
-                    cfg.default_host_budget,
-                    F.col("crawl_delay"),
-                    cfg.host_rates or None,
-                )
-                order_cols = (
-                    ["priority", "seq"] if cfg.queue_policy == "priority" else ["seq"]
-                )
-                wb = allowed.withColumn("_b", budget)
-                # rows with NO binding limiter keep the unlimited sentinel
-                # budget — they are all admitted and must never enter the
-                # window (an unlimited hot host would be one giant window
-                # partition). Limited rows go through the capped window:
-                # InferWindowGroupLimit only fires for rank <= LITERAL, and
-                # the budget is a per-row column, so the driver-computed
-                # foldable cap (_politeness_budget_cap) restores the
-                # map-side pruning — hot hosts cut to ≤ cap rows per input
-                # partition BEFORE the shuffle (pinned against the uncapped
-                # window in tests/test_politeness.py).
-                unlimited = wb.filter(F.col("_b") >= UNLIMITED_BUDGET)
-                limited = wb.filter(F.col("_b") < UNLIMITED_BUDGET)
-                adm_l, deferred = politeness.split_by_budget(
-                    limited,
-                    F.col("_b"),
-                    order_cols=order_cols,
-                    budget_cap=self._politeness_budget_cap(),
-                )
-                admitted = unlimited.unionByName(adm_l).drop("_b", "crawl_delay")
-                deferred = deferred.drop("_b", "crawl_delay").select(*frontier.columns)
-                if cfg.pattern_rates:
-                    admitted, deferred3 = politeness.rule_budget(
-                        admitted, cfg.pattern_rates, cfg.round_seconds, order_cols
-                    )
-                    deferred = deferred.unionByName(deferred3.select(*frontier.columns))
-                if cfg.global_rate is not None:
-                    admitted, deferred2 = politeness.global_limit(
-                        admitted, int(cfg.global_rate * cfg.round_seconds), order_cols
-                    )
-                    deferred = deferred.unionByName(deferred2.select(*frontier.columns))
-                # read by the stage count and the frontier write: cached so
-                # the budget windows run once for it, not once per action
-                deferred = deferred.persist()
-            if cfg.pages_table is not None:
-                # stage the admitted frontier into a table bucketed like the
-                # pages corpus; only the tiny frontier side is written. The
-                # explicit repartition on the bucket key aligns each write
-                # task with exactly ONE bucket (repartition's murmur3-pmod IS
-                # the bucket function): without it every input partition
-                # writes a file per bucket it touches — up to tasks×buckets
-                # tiny files per round (measured 1024 files / 7.1s vs 32
-                # files / 1.1s at sf1; r7, guide §6). One small-side shuffle
-                # buys a 6× cheaper write and a 32× cheaper staged read.
-                # The staged read doubles as the round's materialization, so
-                # no .persist() needed.
-                staged_path = os.path.join(
-                    self._round_dir(root, r + 1), "admitted_staged"
-                )
-                _t_stage = time.time()
-                spark.sql(f"DROP TABLE IF EXISTS {self._adm_tbl}")
-                (
-                    admitted.repartition(cfg.fetch_buckets, F.col("url"))
-                    .write.mode("overwrite")
-                    .format("parquet")
-                    .bucketBy(cfg.fetch_buckets, "url")
-                    .sortBy("url")
-                    .option("path", staged_path)
-                    .saveAsTable(self._adm_tbl)
-                )
-                _trace("stage:admitted_staged(write)", _t_stage)
-                admitted = spark.table(self._adm_tbl)
-            elif not pol_off:
-                admitted = admitted.persist()
-            # else: admitted is a cheap projection of the already-persisted
-            # rb cache — a second persist would just double-fill memory and
-            # add a cache pass per round.
-
-            # fetch = left equi-join against the page universe ------------
-            # The parse and normalize UDFs run in the join's stage, so its
-            # task count is the round's Python task count. Size it from the
-            # cores and the frontier, not from the storage layout (one
-            # frontier file = one task; a bucketed table = one task per
-            # bucket however few rows it holds). A hash repartition of the
-            # html-free admitted rows costs one tiny shuffle (when the pages
-            # side does not broadcast, the join's own shuffle on url replaces
-            # it); in pages_table mode coalesce keeps the storage-partitioned
-            # join Exchange-free.
-            n_udf = min(spark.sparkContext.defaultParallelism, frontier_count)
-            if cfg.pages_table is None:
-                to_fetch = admitted.repartition(n_udf, F.col("url_hash"))
-                fetched = to_fetch.join(pages, to_fetch["url"] == pages["_p_url"], "left")
-            else:
-                fetched = admitted.join(
-                    pages, admitted["url"] == pages["_p_url"], "left"
-                ).coalesce(n_udf)
+        seen = self._seen_read(st.r, st.seen_paths)
+        if exact:
+            new_links = exact_new(links, seen)
             _explain(
-                "ANT_SPARK_EXPLAIN_FETCH",
-                f"fetch-plan round={r} bucketed={cfg.pages_table is not None}",
-                fetched,
+                "ANT_SPARK_EXPLAIN_DEDUPE",
+                f"dedupe-plan round={st.r} backend={cfg.state_backend}",
+                new_links,
             )
-            # temporary statuses (fetcher.go:63-69) recover once attempt
-            # reaches ok_after_attempt; other ≥400 statuses are permanent.
-            status_eff = (
-                F.when(F.col("_p_url").isNull(), F.lit(404))
-                .when(
-                    F.col("_p_status").isin(503, 504, 429)
-                    & (F.col("attempt") < F.coalesce(F.col("ok_after_attempt"), F.lit(1 << 30))),
-                    F.col("_p_status"),
-                )
-                .when(
-                    (F.col("_p_status") >= 400) & ~F.col("_p_status").isin(503, 504, 429),
-                    F.col("_p_status"),
-                )
-                .otherwise(F.lit(200))
+        else:
+            # distinct url_hash probe: two distinct same-round URLs with
+            # colliding hashes must not fan out the equi-join below
+            # (tested would carry one row per INPUT row otherwise,
+            # duplicating both URLs into new_links).
+            tested = self._bloom.test(
+                links.select("url_hash").distinct(), st.bloom_state
             )
-            # fuse fetch-join + parse into ONE cached pass: the UDF only sees
-            # html for 200s (null otherwise); the cache never holds html.
-            html_in = F.when(status_eff == 200, F.col("html"))
-            if cfg.render_fn is not None:
-                # S4 render seam: vectorized kernel over the fetched html,
-                # in the same Python stage as the parse UDF (no extra pass)
-                from ant_spark.operators.render import make_render_udf
+            links_t = links.join(tested, "url_hash", "left")
+            maybe_seen = F.coalesce(F.col("maybe_seen"), F.lit(False))
+            if cfg.dedupe.endswith("_drop"):
+                # reference DedupeBF parity: false positives drop forever
+                new_links = links_t.filter(~maybe_seen).drop("maybe_seen")
+            else:  # *_prefilter: exact check only for maybe-seen
+                sure_new = links_t.filter(~maybe_seen).drop("maybe_seen")
+                maybe = links_t.filter(maybe_seen).drop("maybe_seen")
+                new_links = sure_new.unionByName(exact_new(maybe, seen))
 
-                rendered = make_render_udf(cfg.render_fn)(html_in)
-                if cfg.render_when is not None:
-                    html_in = F.when(cfg.render_when(), rendered).otherwise(
-                        html_in
-                    )
-                else:
-                    html_in = rendered
-            # relative links on a redirected page resolve against the FINAL
-            # url (Go: req.URL is rewritten per hop before html.Parse sees
-            # the body).
-            parse_base = (
-                F.coalesce(F.col("_p_final_url"), F.col("url"))
-                if has_redirects
-                else F.col("url")
+        if redirect_finals is not None:
+            # same-round discovery of a landing url: already logged
+            # under the original url — drop before seq assignment
+            new_links = new_links.join(
+                F.broadcast(redirect_finals), ["url_hash", "url"],
+                "left_anti",
             )
-            processed = (
-                fetched.withColumn("status_eff", status_eff)
-                .withColumn("parsed", self._parse_udf(parse_base, html_in))
-                .drop("html", "_p_url", "_p_status", "ok_after_attempt")
+        new_rows = self._assign_seq(st, new_links).persist()
+        st.cached.append(new_rows)
+        # the full round plan (seq window + dedupe + parse), for scale
+        # invariants such as no partition-less Window
+        _explain(
+            "ANT_SPARK_EXPLAIN_ROUND", f"round-plan round={st.r}", new_rows,
+            formatted=False,
+        )
+        return new_rows, redirect_finals
+
+    def _assign_seq(self, st: _RoundState, new_links: DataFrame) -> DataFrame:
+        """Deterministic seqs from ``st.next_seq`` and the queue priority for
+        the new links, shaped as frontier rows."""
+        cfg = self.cfg
+        if cfg.ordering == "bfs":
+            w = Window.orderBy("parent_seq", "link_idx")
+            new_rows = new_links.withColumn(
+                "seq", (F.row_number().over(w) - 1 + F.lit(st.next_seq)).cast("long")
             )
-            processed = processed.persist()
+        else:
+            p = F.pmod(F.col("url_hash"), F.lit(cfg.seq_partitions))
+            w = Window.partitionBy(p).orderBy("parent_seq", "link_idx")
+            new_rows = new_links.withColumn(
+                "seq",
+                (
+                    F.lit(st.next_seq)
+                    + (F.row_number().over(w).cast("long") - 1) * cfg.seq_partitions
+                    + p.cast("long")
+                ),
+            )
+        priority_col = (
+            cfg.priority_fn().cast("double")
+            if cfg.priority_fn is not None
+            else F.lit(0.0)
+        )
+        if self._pj_bucketed is not None:
+            # bucketed-path rank joined upstream; misses fall back
+            priority_col = F.coalesce(F.col("_pj_prio"), priority_col)
+        new_rows = new_rows.select(
+            "url", "url_hash",
+            host_of(F.col("url")).alias("host"),
+            (F.col("parent_depth") + 1).alias("depth"),
+            "seq",
+            priority_col.alias("priority"),
+            F.lit(1).alias("attempt"),
+            F.lit(0).cast("long").alias("not_before"),
+        )
+        if cfg.priority_join is None or self._pj_bucketed is not None:
+            return new_rows
+        # URL-level rank signal as an in-round equi-join — the
+        # 10^10-frontier shape a driver-literal map can't carry
+        # (rank_priority_fn's documented seam): new links pick up
+        # (url_hash, url)-keyed priorities (collision-safe, same
+        # key idiom as the seen anti-join); misses keep the
+        # priority_fn/default value. Catalyst broadcasts a small
+        # rank table; at corpus scale set priority_join_broadcast=
+        # False with state_backend='bucketed' and a create_rank_table
+        # table — the join then runs upstream against the staged
+        # bucketed links (storage-partitioned SMJ, zero Exchange).
+        pj = cfg.priority_join.select(
+            url_hash(F.col("url")).alias("_pj_hash"),
+            F.col("url").alias("_pj_url"),
+            F.col("priority").cast("double").alias("_pj_prio"),
+        )
+        if cfg.priority_join_broadcast:
+            pj = F.broadcast(pj)
+        return (
+            new_rows.join(
+                pj,
+                (new_rows["url_hash"] == pj["_pj_hash"])
+                & (new_rows["url"] == pj["_pj_url"]),
+                "left",
+            )
+            .withColumn("priority", F.coalesce("_pj_prio", "priority"))
+            .drop("_pj_hash", "_pj_url", "_pj_prio")
+        )
 
-            # one status stage per processed row; 404s are consumed, dead
-            # letters and permanent errors leave the crawl (only counted)
-            _se = F.col("status_eff")
-            _temp = _se.isin(503, 504, 429)
-            proc_stages = {
-                "fetched": _se == 200,
-                "missing_404": _se == 404,
-                "retried": _temp & (F.col("attempt") + 1 <= cfg.max_attempts),
-                "dead_letter": _temp & (F.col("attempt") + 1 > cfg.max_attempts),
-                "perm_error": (_se >= 400) & ~_se.isin(404, 503, 504, 429),
-            }
-            if has_redirects:
-                # every row whose chain was followed, wherever it landed
-                # (a 200, a missing page or a 508 loop)
-                proc_stages["redirected"] = F.col("_p_final_url").isNotNull()
+    def _commit(
+        self,
+        st: _RoundState,
+        rb: DataFrame,
+        waiting: DataFrame,
+        deferred: DataFrame,
+        processed: DataFrame,
+        new_rows: DataFrame,
+        redirect_finals: DataFrame | None,
+    ) -> dict[str, int]:
+        """Count the round's stages and write round r+1's frontier, seen
+        delta, fetched_log (and extracted) and bloom state. Returns the
+        stage totals; per-partition rows go to ``st.metric_rows``.
 
-            ok = processed.filter(proc_stages["fetched"])
-            retry = (
-                processed.filter(proc_stages["retried"])
-                .select(
-                    "url", "url_hash", "host", "depth", "seq", "priority",
-                    (F.col("attempt") + 1).alias("attempt"),
-                    (F.lit(round_ts) + _backoff_ms(F.col("attempt"), cfg.min_backoff_ms, cfg.max_backoff_ms)).alias("not_before"),
-                )
+        The counters come from the two actions that materialize the
+        round's caches. First one collect() counts every stage of rb,
+        processed (filled by this job), waiting and deferred: one union,
+        then ONE groupBy — a groupBy per branch would give each branch its
+        own shuffle. Then the three independent writes run as CONCURRENT
+        Spark jobs (one session, separate threads); the log write needs
+        only `processed`, so it overlaps the new_rows count, which
+        materializes new_rows before the frontier and seen writes read it."""
+        cfg = self.cfg
+        r = st.r
+        root = self._root
+        status = self._status_stages()
+        rb_stages = {"eligible": F.lit(True)}
+        if "robots_allowed" in rb.columns:
+            rb_stages["robots_denied"] = ~F.col("robots_allowed")
+        counts = (
+            _stage_rows(rb, rb_stages)
+            .unionByName(_stage_rows(processed, status))
+            .unionByName(_stage_rows(waiting, {"waiting": F.lit(True)}))
+            .unionByName(_stage_rows(deferred, {"deferred": F.lit(True)}))
+            .groupBy("stage", "partition")
+            .count()
+            .collect()
+        )
+
+        round_ts = int(r * cfg.round_seconds * 1000)
+        retry = processed.filter(status["retried"]).select(
+            "url", "url_hash", "host", "depth", "seq", "priority",
+            (F.col("attempt") + 1).alias("attempt"),
+            (F.lit(round_ts) + _backoff_ms(F.col("attempt"), cfg.min_backoff_ms, cfg.max_backoff_ms)).alias("not_before"),
+        )
+        parsed = processed.filter(status["fetched"])
+        log_cols = [
+            "url", "url_hash", "host", "depth", "seq",
+            F.lit(r).alias("round"),
+            F.col("status_eff").alias("status"),
+            "warc_ts",
+            F.size("parsed.links").alias("n_links"),
+            F.col("parsed.text").alias("text"),
+            F.lit("en").alias("lang"),
+        ]
+        if self._has_redirects:
+            log_cols.append(F.col("_p_final_url").alias("final_url"))
+        rd = self._round_dir(root, r + 1)
+        cols = st.frontier.columns
+        new_frontier = (
+            waiting.select(*cols)
+            .unionByName(deferred.select(*cols))
+            .unionByName(retry.select(*cols))
+            .unionByName(new_rows.select(*cols))
+        )
+        # seen is APPEND-ONLY: write only this round's delta (at cluster
+        # scale: an Iceberg append into a url_hash-bucketed table — never
+        # a rewrite of the accumulated membership set).
+        seen_delta = new_rows.select(
+            "url_hash", "url", F.lit(r + 1).alias("round")
+        )
+        if redirect_finals is not None:
+            # the chain's landing url becomes seen too: a later direct
+            # link to it is the same content the log already carries
+            # under the original url. (Prevents FUTURE enqueues only —
+            # a landing url already sitting in the frontier still
+            # fetches; same guarantee window as any enqueue-time dedupe.)
+            seen_delta = seen_delta.unionByName(
+                redirect_finals.withColumn("round", F.lit(r + 1))
             )
 
-            parsed = ok  # 200s already carry the fused-parse struct
-
-            # redirect landing set (dim-sized, from the cached `processed`):
-            # these urls are already-logged content — they join the seen
-            # delta AND filter the SAME round's link discoveries (a page
-            # fetched this round may link the landing url directly).
-            redirect_finals = None
-            if has_redirects and cfg.redirect_seen:
-                redirect_finals = (
-                    parsed.filter(
-                        F.col("_p_final_url").isNotNull()
-                        & (F.col("_p_final_url") != F.col("url"))
-                    )
-                    .select(F.col("_p_final_url").alias("url"))
-                    .distinct()
-                    .select(url_hash(F.col("url")).alias("url_hash"), "url")
-                )
-
-            log_cols = [
-                "url", "url_hash", "host", "depth", "seq",
-                F.lit(r).alias("round"),
-                F.col("status_eff").alias("status"),
-                "warc_ts",
-                F.size("parsed.links").alias("n_links"),
-                F.col("parsed.text").alias("text"),
-                F.lit("en").alias("lang"),
-            ]
-            if has_redirects:
-                log_cols.append(F.col("_p_final_url").alias("final_url"))
-            log_df = parsed.select(*log_cols)
+        def _w_log():
+            parsed.select(*log_cols).write.mode("overwrite").parquet(
+                os.path.join(rd, "fetched_log")
+            )
             if cfg.scrape_spec:
-                extracted_df = parsed.select(
+                parsed.select(
                     "url", "seq", F.lit(r).alias("round"),
                     F.col("parsed.scraped").alias("data"),
-                )
+                ).write.mode("overwrite").parquet(os.path.join(rd, "extracted"))
 
-            # link expansion → normalize → matcher → dedupe --------------
-            links = (
-                parsed.select(
-                    F.col("seq").alias("parent_seq"),
-                    F.col("depth").alias("parent_depth"),
-                    F.posexplode("parsed.links").alias("link_idx", "raw_url"),
-                )
-                .withColumn("url", self._norm_udf(F.col("raw_url")))
-                .filter(F.col("url").isNotNull() & is_queueable(F.col("url")))
-            )
-            if cfg.matcher is not None:
-                links = links.filter(cfg.matcher(F.col("url")))
-            if cfg.max_depth is not None:
-                links = links.filter(F.col("parent_depth") + 1 <= cfg.max_depth)
-            links = links.withColumn("url_hash", url_hash(F.col("url")))
-            links = first_occurrence(
-                links, ["url_hash", "url"], ["parent_seq", "link_idx"]
-            )
-
-            if self._bucketed and (cfg.dedupe == "exact" or self._bloom is None):
-                # stage candidates into a table bucketed like `seen`: the
-                # exact anti-join becomes storage-partitioned — the (huge)
-                # seen side is read in place with NO Exchange; only the
-                # (small) per-round candidate set pays a bucket shuffle,
-                # folded into this write.
-                staged_path = os.path.join(
-                    self._round_dir(root, r + 1), "links_staged"
-                )
-                _t_stage = time.time()
-                spark.sql(f"DROP TABLE IF EXISTS {self._links_tbl}")
-                (
-                    # repartition on the bucket key: one bucket per write
-                    # task — 32 files instead of up to 1024 (see the
-                    # admitted staging note above)
-                    links.drop("raw_url")
-                    .repartition(cfg.state_partitions, F.col("url_hash"))
-                    .write.mode("overwrite").format("parquet")
-                    .bucketBy(cfg.state_partitions, "url_hash")
-                    .sortBy("url_hash")
-                    .option("path", staged_path)
-                    .saveAsTable(self._links_tbl)
-                )
-                _trace("stage:links_staged(write incl. parse UDF)", _t_stage)
-                links = spark.table(self._links_tbl)
-                if pj_bucketed is not None:
-                    # URL-level rank at corpus scale: both sides bucketed
-                    # on url_hash → storage-partitioned SMJ, no Exchange on
-                    # the (10^10-row) rank side; url equality rides along
-                    # for hash-collision safety. The joined priority flows
-                    # through dedupe + seq assignment to the final select.
-                    links = links.join(
-                        pj_bucketed,
-                        (links["url_hash"] == pj_bucketed["_pj_hash"])
-                        & (links["url"] == pj_bucketed["_pj_url"]),
-                        "left",
-                    ).drop("_pj_hash", "_pj_url")
-
-            if cfg.dedupe == "exact" or self._bloom is None:
-                new_links = exact_new(links, seen)
-                _explain(
-                    "ANT_SPARK_EXPLAIN_DEDUPE",
-                    f"dedupe-plan round={r} backend={cfg.state_backend}",
-                    new_links,
-                )
-            else:
-                # distinct url_hash probe: two distinct same-round URLs with
-                # colliding hashes must not fan out the equi-join below
-                # (tested would carry one row per INPUT row otherwise,
-                # duplicating both URLs into new_links).
-                tested = self._bloom.test(
-                    links.select("url_hash").distinct(), bloom_state
-                )
-                links_t = links.join(tested, "url_hash", "left")
-                if cfg.dedupe.endswith("_drop"):
-                    # reference DedupeBF parity: false positives drop forever
-                    new_links = links_t.filter(~F.coalesce(F.col("maybe_seen"), F.lit(False))).drop("maybe_seen")
-                else:  # *_prefilter: exact check only for maybe-seen
-                    sure_new = links_t.filter(~F.coalesce(F.col("maybe_seen"), F.lit(False))).drop("maybe_seen")
-                    maybe = links_t.filter(F.coalesce(F.col("maybe_seen"), F.lit(False))).drop("maybe_seen")
-                    new_links = sure_new.unionByName(exact_new(maybe, seen))
-
-            if redirect_finals is not None:
-                # same-round discovery of a landing url: already logged
-                # under the original url — drop before seq assignment
-                new_links = new_links.join(
-                    F.broadcast(redirect_finals), ["url_hash", "url"],
-                    "left_anti",
-                )
-
-            # deterministic seq assignment --------------------------------
-            if cfg.ordering == "bfs":
-                w = Window.orderBy("parent_seq", "link_idx")
-                new_rows = new_links.withColumn(
-                    "seq", (F.row_number().over(w) - 1 + F.lit(next_seq)).cast("long")
-                )
-            else:
-                p = F.pmod(F.col("url_hash"), F.lit(cfg.seq_partitions))
-                w = Window.partitionBy(p).orderBy("parent_seq", "link_idx")
-                new_rows = new_links.withColumn(
-                    "seq",
-                    (
-                        F.lit(next_seq)
-                        + (F.row_number().over(w).cast("long") - 1) * cfg.seq_partitions
-                        + p.cast("long")
-                    ),
-                )
-            priority_col = (
-                cfg.priority_fn().cast("double")
-                if cfg.priority_fn is not None
-                else F.lit(0.0)
-            )
-            if pj_bucketed is not None:
-                # bucketed-path rank joined upstream; misses fall back
-                priority_col = F.coalesce(F.col("_pj_prio"), priority_col)
-            new_rows = new_rows.select(
-                "url", "url_hash",
-                host_of(F.col("url")).alias("host"),
-                (F.col("parent_depth") + 1).alias("depth"),
-                "seq",
-                priority_col.alias("priority"),
-                F.lit(1).alias("attempt"),
-                F.lit(0).cast("long").alias("not_before"),
-            )
-            if cfg.priority_join is not None and pj_bucketed is None:
-                # URL-level rank signal as an in-round equi-join — the
-                # 10^10-frontier shape a driver-literal map can't carry
-                # (rank_priority_fn's documented seam): new links pick up
-                # (url_hash, url)-keyed priorities (collision-safe, same
-                # key idiom as the seen anti-join); misses keep the
-                # priority_fn/default value. Catalyst broadcasts a small
-                # rank table; at corpus scale set priority_join_broadcast=
-                # False with state_backend='bucketed' and a create_rank_table
-                # table — the join then runs upstream against the staged
-                # bucketed links (storage-partitioned SMJ, zero Exchange).
-                pj = cfg.priority_join.select(
-                    url_hash(F.col("url")).alias("_pj_hash"),
-                    F.col("url").alias("_pj_url"),
-                    F.col("priority").cast("double").alias("_pj_prio"),
-                )
-                if cfg.priority_join_broadcast:
-                    pj = F.broadcast(pj)
-                new_rows = (
-                    new_rows.join(
-                        pj,
-                        (new_rows["url_hash"] == pj["_pj_hash"])
-                        & (new_rows["url"] == pj["_pj_url"]),
-                        "left",
-                    )
-                    .withColumn(
-                        "priority", F.coalesce("_pj_prio", "priority")
-                    )
-                    .drop("_pj_hash", "_pj_url", "_pj_prio")
-                )
-            new_rows = new_rows.persist()
-            # the full round plan (seq window + dedupe + parse), for scale
-            # invariants such as no partition-less Window
-            _explain(
-                "ANT_SPARK_EXPLAIN_ROUND", f"round-plan round={r}", new_rows,
-                formatted=False,
-            )
-
-            if _TRACE:
-                tt = time.time()
-                rb.count(); tt = _trace("mat:rb", tt)
-                admitted.count(); tt = _trace("mat:admitted", tt)
-                processed.count(); tt = _trace("mat:processed(join+udf)", tt)
-                new_rows.count(); tt = _trace("mat:new_rows(dedupe+seq)", tt)
-
-            # ---- commit: stage counters + state snapshots + log ---------
-            # The round's counters come from the two actions that
-            # materialize its caches. First one collect() counts every stage
-            # of rb, processed (filled by this job), waiting and deferred:
-            # one union, then ONE groupBy — a groupBy per branch would give
-            # each branch its own shuffle. Then the three independent writes
-            # run as CONCURRENT Spark jobs (one session, separate threads);
-            # the log write needs only `processed`, so it overlaps the
-            # new_rows count, which materializes new_rows before the
-            # frontier and seen writes read it.
-            t = time.time()
-            counts = (
-                _stage_rows(rb, rb_stages)
-                .unionByName(_stage_rows(processed, proc_stages))
-                .unionByName(_stage_rows(waiting, {"waiting": F.lit(True)}))
-                .unionByName(_stage_rows(deferred, {"deferred": F.lit(True)}))
-                .groupBy("stage", "partition")
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            f_log = pool.submit(_w_log)
+            enqueued = (
+                new_rows.groupBy(F.spark_partition_id().alias("partition"))
                 .count()
                 .collect()
             )
-            t = _trace("materialize:processed+counts", t)
-
-            rd = self._round_dir(root, r + 1)
-            log_path = os.path.join(rd, "fetched_log")
-            new_frontier = (
-                waiting.select(*frontier.columns)
-                .unionByName(deferred.select(*frontier.columns))
-                .unionByName(retry.select(*frontier.columns))
-                .unionByName(new_rows.select(*frontier.columns))
+            f_frontier = pool.submit(
+                self._write_state, root, r + 1, "frontier", new_frontier, True
             )
-            # seen is APPEND-ONLY: write only this round's delta (at cluster
-            # scale: an Iceberg append into a url_hash-bucketed table — never
-            # a rewrite of the accumulated membership set).
-            seen_delta = new_rows.select(
-                "url_hash", "url", F.lit(r + 1).alias("round")
+            f_seen = pool.submit(self._seen_write, root, r + 1, seen_delta)
+            f_log.result()
+            frontier2 = f_frontier.result()
+            f_seen.result()
+        # zero-count stages have no rows (a groupBy of zero rows)
+        by_stage: dict[str, int] = {}
+        for stage, part, n in sorted(
+            [(c["stage"], c["partition"], c["count"]) for c in counts]
+            + [("enqueued", c["partition"], c["count"]) for c in enqueued]
+        ):
+            by_stage[stage] = by_stage.get(stage, 0) + n
+            st.metric_rows.append((r, part, stage, n))
+        if not self._bucketed:
+            st.seen_paths.append(os.path.join(rd, "seen_delta"))
+        if self._bloom:
+            bloom2 = self._bloom.add(new_rows.select("url_hash"), st.bloom_state)
+            st.bloom_state = self._write_state(root, r + 1, "bloom", bloom2)
+        st.frontier = frontier2
+        return by_stage
+
+    def _housekeep(self, st: _RoundState) -> str | None:
+        """Seen-state upkeep committed with round r+1's MANIFEST: delta
+        compaction, 'auto' migration to the bucketed table and the
+        bucketed table's file compaction. Returns a superseded seen-table
+        dir to delete once the MANIFEST is committed."""
+        cfg = self.cfg
+        rd = self._round_dir(self._root, st.r + 1)
+        # seen-delta compaction: fold the O(rounds) delta dirs into one
+        # url_hash-distributed base every seen_compact_every rounds so
+        # each round reads O(1) seen dirs (Iceberg compaction analogue;
+        # the bucketed backend appends into one table — nothing to fold).
+        if not self._bucketed and len(st.seen_paths) > cfg.seen_compact_every:
+            base_df = self.spark.read.parquet(*st.seen_paths).select(
+                "url_hash", "url", "round"
             )
-            if redirect_finals is not None:
-                # the chain's landing url becomes seen too: a later direct
-                # link to it is the same content the log already carries
-                # under the original url. (Prevents FUTURE enqueues only —
-                # a landing url already sitting in the frontier still
-                # fetches; same guarantee window as any enqueue-time dedupe.)
-                seen_delta = seen_delta.unionByName(
-                    redirect_finals.withColumn("round", F.lit(r + 1))
-                )
-
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _w_log():
-                t0 = time.time()
-                log_df.write.mode("overwrite").parquet(log_path)
-                if cfg.scrape_spec:
-                    extracted_df.write.mode("overwrite").parquet(
-                        os.path.join(rd, "extracted")
-                    )
-                _trace("w:log", t0)
-
-            def _w_frontier():
-                t0 = time.time()
-                out = self._write_state(
-                    root, r + 1, "frontier", new_frontier, by_url_hash=True
-                )
-                _trace("w:frontier", t0)
-                return out
-
-            def _w_seen():
-                t0 = time.time()
-                out = self._seen_write(root, r + 1, seen_delta)
-                _trace("w:seen", t0)
-                return out
-
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                f_log = pool.submit(_w_log)
-                enqueued = (
-                    new_rows.groupBy(F.spark_partition_id().alias("partition"))
-                    .count()
-                    .collect()
-                )
-                t = _trace("materialize:new_rows", t)
-                f_frontier = pool.submit(_w_frontier)
-                f_seen = pool.submit(_w_seen)
-                f_log.result()
-                frontier2 = f_frontier.result()
-                f_seen.result()
-            # zero-count stages have no rows (a groupBy of zero rows)
-            by_stage: dict[str, int] = {}
-            for stage, part, n in sorted(
-                [(c["stage"], c["partition"], c["count"]) for c in counts]
-                + [("enqueued", c["partition"], c["count"]) for c in enqueued]
-            ):
-                by_stage[stage] = by_stage.get(stage, 0) + n
-                metric_rows.append((r, part, stage, n))
-            if not self._bucketed:
-                seen_paths.append(os.path.join(rd, "seen_delta"))
-            t = _trace("commit_writes+metrics(parallel)", t)
-            if self._bloom:
-                bloom2 = self._bloom.add(new_rows.select("url_hash"), bloom_state)
-                bloom_state = self._write_state(root, r + 1, "bloom", bloom2)
-
-            # seen-delta compaction: fold the O(rounds) delta dirs into one
-            # url_hash-distributed base every seen_compact_every rounds so
-            # each round reads O(1) seen dirs (Iceberg compaction analogue;
-            # the bucketed backend appends into one table — nothing to fold).
-            if not self._bucketed and len(seen_paths) > cfg.seen_compact_every:
-                base_df = spark.read.parquet(*seen_paths).select(
-                    "url_hash", "url", "round"
-                )
-                self._write_state(
-                    root, r + 1, "seen_base", base_df, by_url_hash=True
-                )
-                seen_paths = [os.path.join(rd, "seen_base")]
-
-            # 'auto' backend migration: once the seen set is big enough that
-            # its per-round anti-join Exchange dominates, fold all deltas
-            # into the bucketed table (a one-time compaction-priced job) and
-            # continue storage-partitioned. Committed atomically with this
-            # round's manifest; a crash in between resumes on parquet and
-            # simply re-migrates (the table create is an overwrite).
-            if (
-                not self._bucketed
-                and cfg.state_backend != "parquet"
-                and (
-                    cfg.state_backend == "bucketed"  # resumed parquet-phase
-                    or total_enqueued >= cfg.bucketed_switch_rows
-                )
-            ):
-                base_df = spark.read.parquet(*seen_paths).select(
-                    "url_hash", "url", "round"
-                )
-                self._bucketed = True
-                self._seen_write(root, 0, base_df)
-                seen_paths = []
-
-            # bucketed-table file compaction: fresh per-bucket files at a
-            # versioned path every seen_compact_every rounds; the old dir is
-            # deleted only after the manifest pointing at the new one commits.
-            old_seen_dir = None
-            if self._bucketed:
-                self._since_compact += 1
-                if self._since_compact >= cfg.seen_compact_every:
-                    old_seen_dir = self._seen_compact(root, r + 1)
-                    self._since_compact = 0
-
-            n_new = by_stage.get("enqueued", 0)
-            n_fetched = by_stage.get("fetched", 0)
-            if cfg.ordering == "bfs":
-                next_seq += n_new
-            else:
-                next_seq += n_new * cfg.seq_partitions  # stride-safe upper bound
-            total_fetched += n_fetched
-            total_enqueued += n_new
-            frontier_count = (
-                by_stage.get("waiting", 0)
-                + by_stage.get("deferred", 0)
-                + by_stage.get("retried", 0)
-                + n_new
+            self._write_state(
+                self._root, st.r + 1, "seen_base", base_df, by_url_hash=True
             )
+            st.seen_paths = [os.path.join(rd, "seen_base")]
 
-            self._commit_round(
-                root, r + 1,
-                {
-                    "round": r + 1,
-                    "next_seq": next_seq,
-                    "total_fetched": total_fetched,
-                    "total_enqueued": total_enqueued,
-                    "frontier_count": frontier_count,
-                    "seen_paths": [os.path.relpath(p, root) for p in seen_paths],
-                    "state_backend": cfg.state_backend,
-                    "bucketed_active": self._bucketed,
-                    "seen_table_path": (
-                        os.path.relpath(self._seen_tbl_path, root)
-                        if self._bucketed
-                        else None
-                    ),
-                    "stages": by_stage,
-                },
+        # 'auto' backend migration: once the seen set is big enough that
+        # its per-round anti-join Exchange dominates, fold all deltas
+        # into the bucketed table (a one-time compaction-priced job) and
+        # continue storage-partitioned. Committed atomically with this
+        # round's manifest; a crash in between resumes on parquet and
+        # simply re-migrates (the table create is an overwrite).
+        if (
+            not self._bucketed
+            and cfg.state_backend != "parquet"
+            and (
+                cfg.state_backend == "bucketed"  # resumed parquet-phase
+                or st.total_enqueued >= cfg.bucketed_switch_rows
             )
+        ):
+            base_df = self.spark.read.parquet(*st.seen_paths).select(
+                "url_hash", "url", "round"
+            )
+            self._bucketed = True
+            self._seen_write(self._root, 0, base_df)
+            st.seen_paths = []
 
-            if old_seen_dir is not None:
-                import shutil
+        # bucketed-table file compaction: fresh per-bucket files at a
+        # versioned path every seen_compact_every rounds; the old dir is
+        # deleted only after the manifest pointing at the new one commits.
+        if self._bucketed:
+            self._since_compact += 1
+            if self._since_compact >= cfg.seen_compact_every:
+                self._since_compact = 0
+                return self._seen_compact(self._root, st.r + 1)
+        return None
 
-                shutil.rmtree(old_seen_dir, ignore_errors=True)
-
-            # expire STATE of rounds older than the keep window: frontier /
-            # seen_delta / seen_base / bloom snapshots are superseded by the
-            # just-committed round (minus live seen refs); fetched_log,
-            # extracted and MANIFEST.json stay — they are the crawl's output.
-            if cfg.expire_state_rounds is not None:
-                import shutil
-
-                live = set(seen_paths)
-                keep_from = (r + 1) - cfg.expire_state_rounds
-                for name in os.listdir(root):
-                    if not name.startswith("round="):
-                        continue
-                    if int(name.split("=")[1]) >= keep_from:
-                        continue
-                    for state in (
-                        "frontier", "seen_delta", "seen_base", "bloom",
-                        "links_staged", "admitted_staged",
-                    ):
-                        p = os.path.join(root, name, state)
-                        if p not in live and os.path.isdir(p):
-                            shutil.rmtree(p, ignore_errors=True)
-
-            rb.unpersist()
-            admitted.unpersist()
-            processed.unpersist()
-            new_rows.unpersist()
-            deferred.unpersist()
-            frontier = frontier2
-            r += 1
-            rounds_run += 1
-            crawl_wall += time.time() - _round_t0
-
-            if cfg.strict and by_stage.get("perm_error", 0) > 0:
-                raise CrawlError(
-                    f"permanent fetch errors in round {r - 1}: "
-                    f"{by_stage.get('perm_error')} (reference aborts the crawl)"
-                )
-
-        # include logs from pre-resume rounds so the result covers the crawl
-        all_log_dirs = sorted(
-            os.path.join(root, name, "fetched_log")
-            for name in os.listdir(root)
-            if name.startswith("round=")
-            and os.path.isdir(os.path.join(root, name, "fetched_log"))
+    def _advance(
+        self, st: _RoundState, by_stage: dict[str, int], phases: dict[str, float]
+    ) -> dict:
+        """Fold the round's stage totals into the counters; returns the
+        MANIFEST of round r+1."""
+        cfg = self.cfg
+        n_new = by_stage.get("enqueued", 0)
+        if cfg.ordering == "bfs":
+            st.next_seq += n_new
+        else:
+            st.next_seq += n_new * cfg.seq_partitions  # stride-safe upper bound
+        st.total_fetched += by_stage.get("fetched", 0)
+        st.total_enqueued += n_new
+        st.frontier_count = (
+            by_stage.get("waiting", 0)
+            + by_stage.get("deferred", 0)
+            + by_stage.get("retried", 0)
+            + n_new
         )
+        return {
+            "round": st.r + 1,
+            "next_seq": st.next_seq,
+            "total_fetched": st.total_fetched,
+            "total_enqueued": st.total_enqueued,
+            "frontier_count": st.frontier_count,
+            "seen_paths": [os.path.relpath(p, self._root) for p in st.seen_paths],
+            "state_backend": cfg.state_backend,
+            "bucketed_active": self._bucketed,
+            "seen_table_path": (
+                os.path.relpath(self._seen_tbl_path, self._root) if self._bucketed else None
+            ),
+            "stages": by_stage,
+            "phases": phases,
+        }
+
+    def _expire(self, st: _RoundState, old_seen_dir: str | None) -> None:
+        """After round r+1's MANIFEST commit: delete the superseded seen
+        table dir and the STATE of rounds older than the keep window —
+        frontier / seen_delta / seen_base / bloom / staged snapshots are
+        superseded by the committed round (minus live seen refs);
+        fetched_log, extracted and MANIFEST.json stay — they are the
+        crawl's output. Deleting before the commit would break a resume
+        from the previous MANIFEST."""
+        if old_seen_dir is not None:
+            shutil.rmtree(old_seen_dir, ignore_errors=True)
+        if self.cfg.expire_state_rounds is None:
+            return
+        live = set(st.seen_paths)
+        keep_from = (st.r + 1) - self.cfg.expire_state_rounds
+        for d in _entries(self._root):
+            if _round_of(d) >= keep_from:
+                continue
+            for state in (
+                "frontier", "seen_delta", "seen_base", "bloom",
+                "links_staged", "admitted_staged",
+            ):
+                p = os.path.join(d, state)
+                if p not in live and os.path.isdir(p):
+                    shutil.rmtree(p, ignore_errors=True)
+
+    def _result(
+        self, st: _RoundState, rounds_run: int, crawl_wall: float
+    ) -> CrawlResult:
+        # include logs from pre-resume rounds so the result covers the crawl
+        def outputs(name: str) -> list[str]:
+            return [
+                os.path.join(d, name)
+                for d in _entries(self._root)
+                if os.path.isdir(os.path.join(d, name))
+            ]
+
+        log_dirs = outputs("fetched_log")
         fetched_log = (
-            self.spark.read.parquet(*all_log_dirs)
-            if all_log_dirs
+            self.spark.read.parquet(*log_dirs)
+            if log_dirs
             else self.spark.createDataFrame([], schemas.FETCHED_LOG)
         )
         metrics = self.spark.createDataFrame(
-            metric_rows, schema="round int, partition int, stage string, n long"
+            st.metric_rows, schema="round int, partition int, stage string, n long"
         )
         extracted = None
-        if cfg.scrape_spec:
-            ex_dirs = sorted(
-                os.path.join(root, name, "extracted")
-                for name in os.listdir(root)
-                if name.startswith("round=")
-                and os.path.isdir(os.path.join(root, name, "extracted"))
-            )
+        if self.cfg.scrape_spec:
+            ex_dirs = outputs("extracted")
             if ex_dirs:
                 extracted = self.spark.read.parquet(*ex_dirs)
         return CrawlResult(
             rounds=rounds_run,
-            pages_fetched=total_fetched,
-            urls_enqueued=total_enqueued,
+            pages_fetched=st.total_fetched,
+            urls_enqueued=st.total_enqueued,
             fetched_log=fetched_log,
             metrics=metrics,
             extracted=extracted,
-            state_dir=root,
+            state_dir=self._root,
             crawl_wall_sec=round(crawl_wall, 3),
         )
 

@@ -355,8 +355,10 @@ def anchor_text_edges(pages, url_col: str = "url", html_col: str = "html"):
     shuffle until the consumer aggregates (then near-uniform url keys)."""
     from pyspark.sql import functions as F
 
-    from ant_spark.functions.urlnorm import normalize_udf as norm
+    from ant_spark.functions.urlnorm import normalize_udf, once_per_row
 
+    # filtered on dst below: one normalize eval per anchor, not two
+    norm = once_per_row(normalize_udf)
     anchors = make_anchors_udf()
     pair = F.explode(anchors(F.col(url_col), F.col(html_col))).alias("_l")
     return (

@@ -297,3 +297,14 @@ def make_normalize_udf(strip_tracking_params: bool = False):
         return urls.map(one, na_action="ignore")
 
     return normalize_strip_udf
+
+
+def once_per_row(udf):
+    """A copy of scalar pandas UDF ``udf`` that a plan evaluates once per
+    row even when a filter reads its output. The optimizer pushes a filter
+    below a deterministic projection by inlining the projected expression,
+    so filtering on a UDF's result puts a second ArrowEvalPython node over
+    the same rows; it never inlines a nondeterministic expression. The copy
+    is marked nondeterministic for that reason only: its values are the
+    same as ``udf``'s."""
+    return pandas_udf(udf.func, udf.returnType).asNondeterministic()

@@ -224,27 +224,21 @@ def with_robots(
     robots: DataFrame,
     ua: str,
     path_col: Column,
-    join_strategy: str = "auto",
 ) -> DataFrame:
     """Join robots onto the frontier and add ``robots_allowed`` +
     ``crawl_delay`` columns (reference J2: LRU lookup → dimension join).
 
-    ``join_strategy='auto'`` (default) lets Catalyst/AQE pick: small robots
-    dims broadcast (the common case — one row per host, verified by
-    tools/explain_audit.py), while a 10^8-host robots table falls back to a
-    shuffle join instead of OOMing the driver; at that scale bucket both
-    tables by ``host`` in storage for a shuffle-free join.
-    ``'broadcast'`` forces the hint.
+    Catalyst/AQE picks the join: small robots dims broadcast (the common
+    case — one row per host, verified by tools/explain_audit.py), while a
+    10^8-host robots table falls back to a shuffle join instead of OOMing
+    the driver; at that scale bucket both tables by ``host`` in storage for
+    a shuffle-free join.
     """
     rb = robots.select(
         F.col("host").alias("_r_host"),
         F.col("status").alias("_r_status"),
         F.col("body").alias("_r_body"),
     )
-    if join_strategy == "broadcast":
-        rb = F.broadcast(rb)
-    elif join_strategy != "auto":
-        raise ValueError(f"unknown join_strategy {join_strategy!r}")
     robots_udf = make_robots_udf(ua)
     out = (
         frontier.join(rb, frontier["host"] == rb["_r_host"], "left")

@@ -380,7 +380,7 @@ def _w_resume_priority_ttl(spark, tmp):
 def _check_stage_counters(res, n_seeds):
     """Each round's counters are per-partition rows (partition >= 0) that
     add up to the round's MANIFEST stages, its status-200 log rows and its
-    growth of total_enqueued."""
+    growth of total_enqueued. Every MANIFEST also times each phase."""
     rows = res.metrics.collect()
     assert rows and all(m["partition"] >= 0 for m in rows), rows
     per_round = {}
@@ -393,6 +393,11 @@ def _check_stage_counters(res, n_seeds):
         if name.startswith("round=") and os.path.exists(path):
             with open(path) as f:
                 manifests[int(name.split("=")[1])] = json.load(f)
+    phases = {"robots_admit", "fetch_parse", "discover_dedupe", "commit",
+              "housekeep"}
+    for r, man in manifests.items():
+        assert set(man["phases"]) == phases, (r, man["phases"])
+        assert all(s >= 0 for s in man["phases"].values()), (r, man["phases"])
     ok_rows = Counter(
         r["round"] for r in res.fetched_log.filter("status = 200").collect()
     )
