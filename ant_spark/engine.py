@@ -53,6 +53,7 @@ from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ant_spark import schemas
 from ant_spark.functions.parse import make_parse_udf
@@ -324,6 +325,9 @@ class _RoundState:
     total_enqueued: int
     seen_paths: list[str]
     bloom_state: DataFrame | None
+    # a fresh crawl's seed rows of the seen set, held in memory until
+    # round 1's commit writes them into its seen delta (parquet backends)
+    seed_seen: DataFrame | None = None
     metric_rows: list[tuple] = field(default_factory=list)  # whole crawl
     cached: list[DataFrame] = field(default_factory=list)
 
@@ -370,8 +374,7 @@ class Engine:
         self._norm_udf = make_normalize_udf(self.cfg.strip_tracking_params)
         # discovered links are filtered on the normalized url
         self._link_norm_udf = once_per_row(self._norm_udf)
-        self._robots_has_delay: bool | None = None
-        self._robots_empty: bool | None = None
+        self._robots_probe: tuple[bool, bool] | None = None
         self._robots_cache: DataFrame | None = None  # TTL mode per-host cache
         self._max_delay_budget: int | None = None
         if self.cfg.dedupe.startswith("bloom"):
@@ -436,10 +439,17 @@ class Engine:
         _bucketed_table(spark, ranks, name, "url_hash", buckets, path)
         return spark.table(name)
 
-    def _robots_is_empty(self) -> bool:
-        if self._robots_empty is None:
-            self._robots_empty = self.robots.limit(1).count() == 0
-        return self._robots_empty
+    def _robots_flags(self) -> tuple[bool, bool]:
+        """``(empty, has_delay)`` of the robots dim: no rows at all, and some
+        body mentions a crawl-delay. One tiny agg per Engine."""
+        if self._robots_probe is None:
+            body = F.lower(F.coalesce(F.col("body"), F.lit("")))
+            row = self.robots.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.max(body.contains("crawl-delay")).alias("delay"),
+            ).collect()[0]
+            self._robots_probe = (row["n"] == 0, bool(row["delay"]))
+        return self._robots_probe
 
     def _robots_for_round(self, r: int) -> DataFrame:
         """The robots dim the round's broadcast join should see.
@@ -500,16 +510,7 @@ class Engine:
             return False
         if cfg.default_host_budget < UNLIMITED_BUDGET:
             return False
-        if self._robots_has_delay is None:
-            self._robots_has_delay = (
-                self.robots.filter(
-                    F.lower(F.coalesce(F.col("body"), F.lit(""))).contains("crawl-delay")
-                )
-                .limit(1)
-                .count()
-                > 0
-            )
-        return not self._robots_has_delay
+        return not self._robots_flags()[1]
 
     def _politeness_budget_cap(self) -> int:
         """A FOLDABLE upper bound on any LIMITED row's budget, computed once
@@ -524,7 +525,7 @@ class Engine:
             cands.append(int(cfg.default_host_budget))
         for n in (cfg.host_rates or {}).values():
             cands.append(int(math.floor(float(n) * cfg.round_seconds)))
-        if not self._robots_is_empty():
+        if not self._robots_flags()[0]:
             if self._max_delay_budget is None:
                 from ant_spark.operators.robots import make_delay_udf
 
@@ -569,7 +570,10 @@ class Engine:
 
     def _write_state(
         self, root: str, r: int, name: str, df: DataFrame, by_url_hash: bool = False
-    ) -> DataFrame:
+    ) -> str:
+        """Write ``df`` as state ``name`` of round ``r``; returns its path.
+        Engine-written parquet is read back with its known schema: an
+        inferred one costs a footer-reading Spark job per read."""
         path = os.path.join(self._round_dir(root, r), name)
         if by_url_hash:
             # hash-distribute state by url_hash (at cluster scale: Iceberg
@@ -578,7 +582,7 @@ class Engine:
             # parallel up to spark.sql.shuffle.partitions.
             df = df.repartition(F.col("url_hash"))
         df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        return path
 
     def _seen_write(self, root: str, r: int, delta: DataFrame) -> None:
         """Commit a seen delta: parquet dir per round, or an append into the
@@ -601,7 +605,7 @@ class Engine:
         old path (still on disk). Returns the old path for post-commit
         deletion."""
         old_path = self._seen_tbl_path
-        df = self.spark.read.parquet(old_path).select("url_hash", "url", "round")
+        df = self.spark.read.schema(schemas.SEEN).parquet(old_path)
         self._seen_tbl_path = os.path.join(root, f"seen_tbl_r{r:05d}")
         self._seen_write(root, 0, df)  # a round-0 write creates the table
         return old_path
@@ -624,15 +628,19 @@ class Engine:
             f"LOCATION '{self._seen_tbl_path}'"
         )
 
-    def _seen_read(self, r: int, seen_paths: list[str]) -> DataFrame:
-        """The membership set visible to round ``r``. Bucketed mode filters
-        ``round <= r``: an append orphaned by a crash between the table
-        append and the manifest commit carries round r+1, so the first
+    def _seen_read(self, st: _RoundState) -> DataFrame:
+        """The membership set visible to round ``st.r``. Bucketed mode
+        filters ``round <= r``: an append orphaned by a crash between the
+        table append and the manifest commit carries round r+1, so the first
         resumed round excludes it; once that round commits its own
-        (identical, deterministic) delta the orphan is a harmless subset."""
+        (identical, deterministic) delta the orphan is a harmless subset.
+        The first round of a fresh parquet-backed crawl reads the seeds from
+        the cached seed frontier."""
         if self._bucketed:
-            return self.spark.table(self._seen_tbl).filter(F.col("round") <= r)
-        return self.spark.read.parquet(*seen_paths)
+            return self.spark.table(self._seen_tbl).filter(F.col("round") <= st.r)
+        if st.seed_seen is not None:
+            return st.seed_seen
+        return self.spark.read.schema(schemas.SEEN).parquet(*st.seen_paths)
 
     # ------------------------------------------------------------------
 
@@ -664,45 +672,54 @@ class Engine:
         time; the phases that run actions carry the compute."""
         cfg = self.cfg
         st = self._bootstrap(seeds, resume)
-        rounds_run = 0
-        crawl_wall = 0.0
-        while st.frontier_count and (
-            cfg.max_rounds is None or rounds_run < cfg.max_rounds
-        ):
-            laps = [("", time.perf_counter())]
-            rb, waiting, deferred, admitted = self._robots_admit(st)
-            laps.append(("robots_admit", time.perf_counter()))
-            processed = self._fetch_parse(st, admitted)
-            laps.append(("fetch_parse", time.perf_counter()))
-            new_rows, redirect_finals = self._discover_dedupe(st, processed)
-            laps.append(("discover_dedupe", time.perf_counter()))
-            by_stage = self._commit(
-                st, rb, waiting, deferred, processed, new_rows, redirect_finals
-            )
-            laps.append(("commit", time.perf_counter()))
-            old_seen_dir = self._housekeep(st)
-            laps.append(("housekeep", time.perf_counter()))
-            phases = {
-                name: round(t1 - t0, 4)
-                for (_, t0), (name, t1) in zip(laps, laps[1:])
-            }
-            self._commit_round(
-                self._root, st.r + 1, self._advance(st, by_stage, phases)
-            )
-            self._expire(st, old_seen_dir)
-            for df in st.cached:
-                df.unpersist()
-            st.cached = []
-            st.r += 1
-            rounds_run += 1
-            crawl_wall += time.perf_counter() - laps[0][1]
-
-            if cfg.strict and by_stage.get("perm_error", 0) > 0:
-                raise CrawlError(
-                    f"permanent fetch errors in round {st.r - 1}: "
-                    f"{by_stage.get('perm_error')} (reference aborts the crawl)"
+        try:
+            rounds_run = 0
+            crawl_wall = 0.0
+            while st.frontier_count and (
+                cfg.max_rounds is None or rounds_run < cfg.max_rounds
+            ):
+                laps = [("", time.perf_counter())]
+                rb, waiting, deferred, admitted = self._robots_admit(st)
+                laps.append(("robots_admit", time.perf_counter()))
+                processed = self._fetch_parse(st, admitted)
+                laps.append(("fetch_parse", time.perf_counter()))
+                new_rows, redirect_finals = self._discover_dedupe(st, processed)
+                laps.append(("discover_dedupe", time.perf_counter()))
+                by_stage = self._commit(
+                    st, rb, waiting, deferred, processed, new_rows, redirect_finals
                 )
-        return self._result(st, rounds_run, crawl_wall)
+                laps.append(("commit", time.perf_counter()))
+                old_seen_dir = self._housekeep(st)
+                laps.append(("housekeep", time.perf_counter()))
+                phases = {
+                    name: round(t1 - t0, 4)
+                    for (_, t0), (name, t1) in zip(laps, laps[1:])
+                }
+                self._commit_round(
+                    self._root, st.r + 1, self._advance(st, by_stage, phases)
+                )
+                self._expire(st, old_seen_dir)
+                self._release(st)
+                st.r += 1
+                rounds_run += 1
+                crawl_wall += time.perf_counter() - laps[0][1]
+
+                if cfg.strict and by_stage.get("perm_error", 0) > 0:
+                    raise CrawlError(
+                        f"permanent fetch errors in round {st.r - 1}: "
+                        f"{by_stage.get('perm_error')} (reference aborts the crawl)"
+                    )
+            return self._result(st, rounds_run, crawl_wall)
+        finally:
+            self._release(st)
+
+    @staticmethod
+    def _release(st: _RoundState) -> None:
+        """Unpersist the frames cached for the running round (or, before
+        the first round, the seed frontier)."""
+        for df in st.cached:
+            df.unpersist()
+        st.cached = []
 
     # ------------------------------------------------------------------
     # crawl phases: _bootstrap once, then per round _robots_admit →
@@ -859,7 +876,7 @@ class Engine:
         )
 
     def _seed(self, root: str, seeds) -> _RoundState:
-        """Round 0 from the seeds: frontier and seen state written."""
+        """Round 0 from the seeds: the frontier, cached and counted."""
         cfg = self.cfg
         if isinstance(seeds, DataFrame):
             # bulk seed path: a DataFrame with a normalized `url` column —
@@ -928,15 +945,11 @@ class Engine:
                 # matcher runs BEFORE dedupe/enqueue (engine.go:201,338-349)
                 frontier = frontier.filter(cfg.matcher(F.col("url")))
             seq_stride = None
-        # round-0 state, shared by both seed paths; bulk seeds are
-        # hash-distributed on url_hash like every later frontier
-        frontier = self._write_state(
-            root, 0, "frontier", frontier, by_url_hash=seq_stride is not None
-        )
-        self._seen_write(
-            root, 0,
-            frontier.select("url_hash", "url", F.lit(0).alias("round")),
-        )
+        # Round 0 writes no state: it never commits a MANIFEST (a crash
+        # before round 1's commit re-seeds), so the seed frontier stays in
+        # memory. The agg below fills its cache; round 1's commit writes
+        # the seeds into its seen delta and bloom state.
+        frontier = frontier.persist()
         agg = frontier.agg(
             F.count("*").alias("n"), F.max("seq").alias("mx")
         ).collect()[0]
@@ -949,22 +962,29 @@ class Engine:
             # must not let discovered links reuse survivors' seqs (seq
             # uniqueness drives split_by_budget/global_limit anti-joins)
             next_seq = int(agg["mx"]) + 1 if agg["mx"] is not None else 0
-        bloom_state = None
-        if self._bloom:
-            bloom_state = self._bloom.add(frontier, self._bloom.empty_state(self.spark))
-            bloom_state = self._write_state(root, 0, "bloom", bloom_state)
-        return _RoundState(
+        seed_seen = frontier.select("url_hash", "url", F.lit(0).alias("round"))
+        if self._bucketed:
+            # the storage-partitioned anti-join reads the seen table from
+            # round 1 on: create it with the seeds
+            self._seen_write(root, 0, seed_seen)
+        st = _RoundState(
             r=0,
             frontier=frontier,
             frontier_count=frontier_count,
             next_seq=next_seq,
             total_fetched=0,
             total_enqueued=frontier_count,
-            seen_paths=(
-                [] if self._bucketed else [os.path.join(self._round_dir(root, 0), "seen_delta")]
-            ),
-            bloom_state=bloom_state,
+            seen_paths=[],
+            bloom_state=None,
+            seed_seen=None if self._bucketed else seed_seen,
+            cached=[frontier],
         )
+        if self._bloom:
+            st.bloom_state = self._bloom.add(
+                frontier, self._bloom.empty_state(self.spark)
+            ).persist()
+            st.cached.append(st.bloom_state)
+        return st
 
     def _robots_admit(
         self, st: _RoundState
@@ -980,7 +1000,7 @@ class Engine:
         waiting = st.frontier.filter(F.col("not_before") > round_ts)
 
         # robots (broadcast join + vectorized allow test)
-        if self._robots_is_empty():
+        if self._robots_flags()[0]:
             # no robots anywhere ⇒ allow-all; skip the join + UDFs
             rb = eligible.withColumn(
                 "crawl_delay", F.lit(None).cast("double")
@@ -1224,7 +1244,7 @@ class Engine:
                     "left",
                 ).drop("_pj_hash", "_pj_url")
 
-        seen = self._seen_read(st.r, st.seen_paths)
+        seen = self._seen_read(st)
         if exact:
             new_links = exact_new(links, seen)
             _explain(
@@ -1348,14 +1368,14 @@ class Engine:
         delta, fetched_log (and extracted) and bloom state. Returns the
         stage totals; per-partition rows go to ``st.metric_rows``.
 
-        The counters come from the two actions that materialize the
-        round's caches. First one collect() counts every stage of rb,
-        processed (filled by this job), waiting and deferred: one union,
-        then ONE groupBy — a groupBy per branch would give each branch its
+        The counters come from the ONE action that materializes the
+        round's caches: a collect() that counts every stage of rb,
+        processed, new_rows (enqueued), waiting and deferred — one union,
+        then ONE groupBy; a groupBy per branch would give each branch its
         own shuffle. Then the three independent writes run as CONCURRENT
-        Spark jobs (one session, separate threads); the log write needs
-        only `processed`, so it overlaps the new_rows count, which
-        materializes new_rows before the frontier and seen writes read it."""
+        Spark jobs (one session, separate threads) over the filled caches.
+        Round 1 of a fresh crawl also writes the seeds' seen rows, which
+        round 0 kept in memory."""
         cfg = self.cfg
         r = st.r
         root = self._root
@@ -1366,6 +1386,7 @@ class Engine:
         counts = (
             _stage_rows(rb, rb_stages)
             .unionByName(_stage_rows(processed, status))
+            .unionByName(_stage_rows(new_rows, {"enqueued": F.lit(True)}))
             .unionByName(_stage_rows(waiting, {"waiting": F.lit(True)}))
             .unionByName(_stage_rows(deferred, {"deferred": F.lit(True)}))
             .groupBy("stage", "partition")
@@ -1405,6 +1426,9 @@ class Engine:
         seen_delta = new_rows.select(
             "url_hash", "url", F.lit(r + 1).alias("round")
         )
+        if st.seed_seen is not None:
+            seen_delta = st.seed_seen.unionByName(seen_delta)
+            st.seed_seen = None
         if redirect_finals is not None:
             # the chain's landing url becomes seen too: a later direct
             # link to it is the same content the log already carries
@@ -1427,23 +1451,17 @@ class Engine:
 
         with ThreadPoolExecutor(max_workers=3) as pool:
             f_log = pool.submit(_w_log)
-            enqueued = (
-                new_rows.groupBy(F.spark_partition_id().alias("partition"))
-                .count()
-                .collect()
-            )
             f_frontier = pool.submit(
                 self._write_state, root, r + 1, "frontier", new_frontier, True
             )
             f_seen = pool.submit(self._seen_write, root, r + 1, seen_delta)
             f_log.result()
-            frontier2 = f_frontier.result()
+            frontier_path = f_frontier.result()
             f_seen.result()
         # zero-count stages have no rows (a groupBy of zero rows)
         by_stage: dict[str, int] = {}
         for stage, part, n in sorted(
-            [(c["stage"], c["partition"], c["count"]) for c in counts]
-            + [("enqueued", c["partition"], c["count"]) for c in enqueued]
+            (c["stage"], c["partition"], c["count"]) for c in counts
         ):
             by_stage[stage] = by_stage.get(stage, 0) + n
             st.metric_rows.append((r, part, stage, n))
@@ -1451,8 +1469,12 @@ class Engine:
             st.seen_paths.append(os.path.join(rd, "seen_delta"))
         if self._bloom:
             bloom2 = self._bloom.add(new_rows.select("url_hash"), st.bloom_state)
-            st.bloom_state = self._write_state(root, r + 1, "bloom", bloom2)
-        st.frontier = frontier2
+            st.bloom_state = self.spark.read.schema(bloom2.schema).parquet(
+                self._write_state(root, r + 1, "bloom", bloom2)
+            )
+        st.frontier = self.spark.read.schema(new_frontier.schema).parquet(
+            frontier_path
+        )
         return by_stage
 
     def _housekeep(self, st: _RoundState) -> str | None:
@@ -1467,9 +1489,7 @@ class Engine:
         # each round reads O(1) seen dirs (Iceberg compaction analogue;
         # the bucketed backend appends into one table — nothing to fold).
         if not self._bucketed and len(st.seen_paths) > cfg.seen_compact_every:
-            base_df = self.spark.read.parquet(*st.seen_paths).select(
-                "url_hash", "url", "round"
-            )
+            base_df = self.spark.read.schema(schemas.SEEN).parquet(*st.seen_paths)
             self._write_state(
                 self._root, st.r + 1, "seen_base", base_df, by_url_hash=True
             )
@@ -1489,9 +1509,7 @@ class Engine:
                 or st.total_enqueued >= cfg.bucketed_switch_rows
             )
         ):
-            base_df = self.spark.read.parquet(*st.seen_paths).select(
-                "url_hash", "url", "round"
-            )
+            base_df = self.spark.read.schema(schemas.SEEN).parquet(*st.seen_paths)
             self._bucketed = True
             self._seen_write(self._root, 0, base_df)
             st.seen_paths = []
@@ -1577,11 +1595,16 @@ class Engine:
                 if os.path.isdir(os.path.join(d, name))
             ]
 
+        log_schema = schemas.FETCHED_LOG
+        if self._has_redirects:
+            log_schema = StructType(
+                list(log_schema.fields) + [StructField("final_url", StringType())]
+            )
         log_dirs = outputs("fetched_log")
         fetched_log = (
-            self.spark.read.parquet(*log_dirs)
+            self.spark.read.schema(log_schema).parquet(*log_dirs)
             if log_dirs
-            else self.spark.createDataFrame([], schemas.FETCHED_LOG)
+            else self.spark.createDataFrame([], log_schema)
         )
         metrics = self.spark.createDataFrame(
             st.metric_rows, schema="round int, partition int, stage string, n long"

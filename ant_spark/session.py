@@ -23,6 +23,10 @@ ENGINE_CONF: dict[str, str] = {
     # handful of tasks, capping the parse UDF's CPU parallelism. 16MB keeps
     # CPU-bound Arrow-UDF stages wide while still bounding tiny-task count.
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16MB",
+    # Let AQE coalesce the partitions of persisted plans too (off by
+    # default): otherwise every read of a cached crawl frame runs one task
+    # per shuffle partition however few rows it holds.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Runtime bloom filter on the probe side of large joins — directly
     # benefits the seen-set anti-join (reference dedupe.go:70-89 analogue).
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",

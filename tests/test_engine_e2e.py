@@ -377,6 +377,83 @@ def _w_resume_priority_ttl(spark, tmp):
     assert len({r["url"] for r in rows}) == len(rows)
 
 
+def _w_seeds_in_round1_seen(spark, tmp):
+    """Round 0 writes no state: the seeds are held in memory and enter
+    round 1's seen delta. A seed linked from another seed (first round) or
+    from a later page (second round) is never enqueued again."""
+    base = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
+
+    def page(path, links):
+        html = "".join(f'<a href="{h}">{h}</a>' for h in links)
+        return {
+            "url": f"http://s.test{path}", "warc_ts": base,
+            "html": f"<html><body>{html}</body></html>".encode(),
+            "text": "".join(links), "lang": "en", "status": 200,
+            "ok_after_attempt": None,
+        }
+
+    pages_pdf = pd.DataFrame([
+        page("/", ["/b.html", "/c.html"]),
+        page("/b.html", ["/"]),
+        page("/c.html", ["/", "/b.html", "/d.html"]),
+        page("/d.html", ["/"]),
+    ])
+    pages = spark.createDataFrame(pages_pdf, schema=schemas.PAGES)
+    seeds = ["http://s.test/", "http://s.test/b.html"]
+    ckpt = str(tmp / "ck")
+    res = Engine(spark, pages, None, CrawlConfig(
+        checkpoint_dir=ckpt, state_backend="parquet", expire_state_rounds=None,
+    )).run(seeds)
+    urls = [r["url"] for r in res.fetched_log.collect()]
+    assert sorted(urls) == sorted(pages_pdf.url)  # each page exactly once
+    assert res.urls_enqueued == 4
+    assert not os.path.exists(os.path.join(ckpt, "round=00000"))
+    delta = spark.read.parquet(os.path.join(ckpt, "round=00001", "seen_delta"))
+    rows = {(r["url"], r["round"]) for r in delta.collect()}
+    assert {(u, 0) for u in seeds} <= rows
+    assert ("http://s.test/c.html", 1) in rows
+
+
+class _Killed(RuntimeError):
+    pass
+
+
+class _KilledBeforeManifest(Engine):
+    """Dies at its first MANIFEST commit: round 1's state, log and seen
+    writes are on disk, its MANIFEST is not."""
+
+    def _commit_round(self, root, r, manifest):
+        raise _Killed(r)
+
+
+def _w_kill_after_seed(spark, tmp):
+    """Killed after seeding, before round 1's MANIFEST: with no MANIFEST a
+    resume re-seeds, and every page is still fetched exactly once, in the
+    same (url, seq, round) order as an unbroken crawl — in both backends."""
+    cfg = GraphConfig(n_pages=40, n_hosts=2, crawl_delay_hosts=0,
+                      robots_disallow_hosts=0, flaky_every=0)
+    pages_pdf, _, seeds = generate(cfg)
+    pages = spark.createDataFrame(pages_pdf, schema=schemas.PAGES)
+    for backend in ("parquet", "bucketed"):
+        ckpt = str(tmp / backend)
+        ecfg = dict(checkpoint_dir=ckpt, state_backend=backend,
+                    state_partitions=4)
+        with pytest.raises(_Killed):
+            _KilledBeforeManifest(spark, pages, None, CrawlConfig(**ecfg)).run(seeds)
+        assert os.path.isdir(os.path.join(ckpt, "round=00001", "fetched_log"))
+        assert not os.path.exists(os.path.join(ckpt, "round=00001", "MANIFEST.json"))
+        assert not os.path.exists(os.path.join(ckpt, "round=00000"))
+        res = Engine(spark, pages, None, CrawlConfig(**ecfg)).run(seeds, resume=True)
+        log = [(r["url"], r["seq"], r["round"]) for r in res.fetched_log.collect()]
+        assert sorted({u for u, _, _ in log}) == sorted(pages_pdf.url), backend
+        assert len(log) == len(pages_pdf), backend  # exactly once
+        unbroken = Engine(spark, pages, None, CrawlConfig(
+            state_backend=backend, state_partitions=4)).run(seeds)
+        want = sorted((r["url"], r["seq"], r["round"])
+                      for r in unbroken.fetched_log.collect())
+        assert sorted(log) == want, backend
+
+
 def _check_stage_counters(res, n_seeds):
     """Each round's counters are per-partition rows (partition >= 0) that
     add up to the round's MANIFEST stages, its status-200 log rows and its
@@ -421,12 +498,14 @@ _WORKERS = {
     "bucketed_compaction": _w_bucketed_compaction,
     "crash_window": _w_crash_window,
     "resume_priority_ttl": _w_resume_priority_ttl,
+    "seeds_in_round1_seen": _w_seeds_in_round1_seen,
+    "kill_after_seed": _w_kill_after_seed,
 }
 
 
 @pytest.fixture(scope="module")
 def e2e(spark, tmp_path_factory):
-    """Run all 11 independent crawl sequences concurrently; each test below
+    """Run all 13 independent crawl sequences concurrently; each test below
     owns one future and re-raises its worker's failure (full traceback), so
     a broken sequence fails ITS test, not the fixture."""
     from concurrent.futures import ThreadPoolExecutor
@@ -487,3 +566,11 @@ def test_bucketed_both_crash_between_stage_and_commit(e2e):
 
 def test_resume_with_priority_join_and_robots_ttl(e2e):
     e2e["resume_priority_ttl"].result()
+
+
+def test_seeds_enter_round1_seen_delta(e2e):
+    e2e["seeds_in_round1_seen"].result()
+
+
+def test_kill_after_seed_resumes_exactly_once(e2e):
+    e2e["kill_after_seed"].result()

@@ -168,7 +168,9 @@ def test_parse_stage_sized_to_cores(spark, tmp_path, pages_table):
         spark, pages, None,
         CrawlConfig(render_fn=_recording_renderer(str(rec)), **cfg),
     ).run(seeds)
-    frontier = res.state_dir + "/round=00000/frontier"
+    # round 0 writes no state; round 1's frontier is one file
+    assert not os.path.exists(res.state_dir + "/round=00000")
+    frontier = res.state_dir + "/round=00001/frontier"
     assert len([f for f in os.listdir(frontier) if f.endswith(".parquet")]) == 1
     assert res.pages_fetched == 48
     want = min(spark.sparkContext.defaultParallelism, res.pages_fetched)
