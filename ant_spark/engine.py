@@ -76,7 +76,9 @@ def count_exchanges(plan: str) -> int:
     """Exchange nodes (shuffle, broadcast or reused) in an
     ``explain("formatted")`` plan. The formatted plan names every node
     twice, once in the tree and once as a numbered details header; only
-    the headers are counted."""
+    the headers are counted. The Exchanges of a cached frame's plan (under
+    an ``InMemoryRelation``) count too, though a cache read runs none of
+    them; ``plan_audit.bucketed_join_problems`` walks the tree instead."""
     return len(re.findall(r"^\(\d+\) \w*Exchange\b", plan, re.M))
 
 
@@ -255,14 +257,15 @@ class CrawlConfig:
     # compaction (default — lowest fixed cost per round at sandbox scale).
     # 'bucketed': the seen set lives in ONE external table CLUSTERED BY
     # url_hash (the plain-Spark stand-in for an Iceberg bucket(N, url_hash)
-    # table); candidate links are staged into a same-bucketed table each
-    # round so the exact anti-join is storage-partitioned — NO Exchange on
-    # the seen side. At a 10^10-URL seen set that Exchange is the round's
-    # dominant cost, so 'bucketed' is the cluster-scale mode.
+    # table); each round the candidate links are shuffled into the same
+    # bucketing in memory, so the exact anti-join is storage-partitioned —
+    # NO Exchange on the seen side. At a 10^10-URL seen set that Exchange is
+    # the round's dominant cost, so 'bucketed' is the cluster-scale mode.
     # 'auto' starts on parquet deltas (lowest fixed cost for BFS ramp-up)
     # and migrates the seen set into the bucketed table once it crosses
-    # bucketed_switch_rows — small crawls never pay the staging overhead,
-    # wide frontiers get the Exchange-free anti-join without opting in.
+    # bucketed_switch_rows — small crawls never pay the per-round table
+    # append, wide frontiers get the seen-side-Exchange-free anti-join
+    # without opting in.
     state_backend: str = "auto"  # auto | parquet | bucketed
     # Pages-side storage bucketing for the FETCH join (the engine's biggest
     # join: frontier LEFT OUTER ⋈ pages on url, html-heavy). A left outer
@@ -273,20 +276,19 @@ class CrawlConfig:
     # round's dominant cost. Set ``pages_table`` to
     # the name of a session table CLUSTERED BY (url) (Iceberg
     # bucket(N, url) analogue; see Engine.create_pages_table): each round
-    # the admitted frontier is staged into a table bucketed the same way
-    # (a shuffle-free write of the tiny side), and the fetch join becomes a
-    # storage-partitioned sort-merge join with ZERO Exchanges — the pages
-    # scan is read in place (tools/explain_audit.py checks 6 and 10 are the
-    # plan proof; BENCH.md records the measured A/B). ``fetch_buckets``
-    # must match the table's bucket count.
+    # the admitted frontier (the tiny, html-free side) is shuffled in memory
+    # into the same bucketing, and the fetch join becomes a
+    # storage-partitioned sort-merge join whose pages scan is read in place
+    # with no Exchange (tools/explain_audit.py checks 6 and 10 are the plan
+    # proof). ``fetch_buckets`` must match the table's bucket count.
     pages_table: str | None = None
     fetch_buckets: int = 32
-    # 'auto' migration threshold: the bucketed mode pays ~1.5s/round of
-    # candidate-staging overhead to delete the seen-side Exchange, so it
-    # should engage once that Exchange is the bigger cost. Local A/B puts
-    # the single-node crossover above 240k rows (in-RAM shuffles are nearly
-    # free); on a real cluster network shuffle makes it pay far earlier —
-    # tune per deployment.
+    # 'auto' migration threshold: the bucketed mode pays a per-round table
+    # append (plus periodic file compaction) to delete the seen-side
+    # Exchange, so it should engage once that Exchange is the bigger cost.
+    # Local A/B puts the single-node crossover above 240k rows (in-RAM
+    # shuffles are nearly free); on a real cluster network shuffle makes
+    # it pay far earlier — tune per deployment.
     bucketed_switch_rows: int = 1_000_000
     # Compact the append-only seen deltas into one base dir whenever more
     # than this many delta dirs accumulate (reference sweeper analogue,
@@ -398,9 +400,10 @@ class Engine:
     ) -> DataFrame:
         """Write the page corpus as a url-bucketed external table — the
         plain-Spark stand-in for an Iceberg ``bucket(N, url)`` table (same
-        idiom as the seen/links staging tables). One-time cost; every fetch
-        join afterwards reads the html-bearing side in place with no
-        Exchange. Pass the table name as ``CrawlConfig.pages_table`` with
+        idiom as the bucketed seen table). One-time cost; every fetch join
+        afterwards shuffles only the admitted frontier into this bucketing
+        and reads the html-bearing side in place with no Exchange. Pass the
+        table name as ``CrawlConfig.pages_table`` with
         ``fetch_buckets=buckets``.
 
         A ``redirect_to`` column is collapsed HERE (operators/redirects):
@@ -426,11 +429,12 @@ class Engine:
         external table — the corpus-scale form of ``CrawlConfig.
         priority_join`` (10^10-row PageRank tables that no driver map or
         broadcast can carry). With ``priority_join_broadcast=False`` and
-        ``state_backend='bucketed'`` the engine joins this table against
-        the same-bucketed staged links each round as a storage-partitioned
-        sort-merge join: the rank side is read in place with NO Exchange
-        (the fetch-join idiom, queue.go:12-49 priority seam at frontier
-        scale). ``buckets`` must equal ``CrawlConfig.state_partitions``."""
+        ``state_backend='bucketed'`` the engine shuffles each round's
+        links into the same bucketing in memory and joins this table as a
+        storage-partitioned sort-merge join: the rank side is read in place
+        with NO Exchange (the fetch-join idiom, queue.go:12-49 priority seam
+        at frontier scale). ``buckets`` must equal
+        ``CrawlConfig.state_partitions``."""
         ranks = rank_df.select(
             url_hash(F.col("url")).alias("url_hash"),
             "url",
@@ -735,12 +739,9 @@ class Engine:
         if cfg.state_backend not in ("auto", "parquet", "bucketed"):
             raise ValueError(f"unknown state_backend {cfg.state_backend!r}")
         self._bucketed = cfg.state_backend == "bucketed"
-        if cfg.state_backend != "parquet" or cfg.pages_table is not None:
-            dig = hashlib.md5(root.encode()).hexdigest()[:10]
-            self._adm_tbl = f"ant_adm_{dig}"
         if cfg.state_backend != "parquet":
+            dig = hashlib.md5(root.encode()).hexdigest()[:10]
             self._seen_tbl = f"ant_seen_{dig}"
-            self._links_tbl = f"ant_links_{dig}"
             self._seen_tbl_path = os.path.join(root, "seen_tbl_r00000")
             self._since_compact = 0
         if not resume:
@@ -758,12 +759,9 @@ class Engine:
                 )
             if cfg.state_backend != "parquet":
                 spark.sql(f"DROP TABLE IF EXISTS {self._seen_tbl}")
-                spark.sql(f"DROP TABLE IF EXISTS {self._links_tbl}")
                 stale += _entries(root, "seen_tbl")
             for path in stale:
                 shutil.rmtree(path, ignore_errors=True)
-            if cfg.pages_table is not None:
-                spark.sql(f"DROP TABLE IF EXISTS {self._adm_tbl}")
 
         self._pages_side = self._fetch_pages()
         start = self.latest_round(root) if resume else None
@@ -772,12 +770,13 @@ class Engine:
         # Corpus-scale priority signal (priority_join_broadcast=False in the
         # bucketed exact-dedupe mode): project the rank table ONCE, keeping
         # its stored url_hash column so the storage bucketing survives the
-        # projection — the per-round join against the staged (same-bucketed)
-        # links table is then a storage-partitioned SMJ: the huge rank side
-        # is read in place with ZERO Exchange (the fetch-join/seen-anti-join
-        # idiom; see Engine.create_rank_table). Recomputing url_hash(url)
-        # here would be semantically equal but a DIFFERENT expression, so
-        # Catalyst would no longer recognize the table's partitioning.
+        # projection — the per-round join against the links, shuffled into
+        # the same bucketing, is then a storage-partitioned SMJ: the huge
+        # rank side is read in place with no Exchange (the fetch-join/
+        # seen-anti-join idiom; see Engine.create_rank_table). Recomputing
+        # url_hash(url) here would be semantically equal but a DIFFERENT
+        # expression, so Catalyst would no longer recognize the table's
+        # partitioning.
         self._pj_bucketed = None
         if (
             cfg.priority_join is not None
@@ -835,9 +834,9 @@ class Engine:
         # broadcast, and the frontier side streams. Above the threshold the
         # default mode shuffles both sides on `url` — html included.
         # Cluster-scale mode (cfg.pages_table): the corpus is a url-bucketed
-        # table and each round's admitted frontier is staged into the same
-        # bucketing, so without a broadcast the join is a
-        # storage-partitioned SMJ with ZERO Exchanges
+        # table and each round's admitted frontier is shuffled into the
+        # same bucketing, so without a broadcast the join is a
+        # storage-partitioned SMJ that never moves the pages scan
         # (tools/explain_audit.py checks 6 and 10).
         return pages_src.select(*page_cols)
 
@@ -1069,22 +1068,11 @@ class Engine:
             # the budget windows run once for it, not once per action
             deferred = deferred.persist()
             st.cached.append(deferred)
-        if cfg.pages_table is not None:
-            # stage the admitted frontier into a table bucketed like the
-            # pages corpus; only the tiny frontier side is written. The
-            # staged read doubles as the round's materialization, so no
-            # .persist() needed.
-            _bucketed_table(
-                self.spark, admitted, self._adm_tbl, "url", cfg.fetch_buckets,
-                os.path.join(self._round_dir(self._root, st.r + 1), "admitted_staged"),
-            )
-            admitted = self.spark.table(self._adm_tbl)
-        elif not pol_off:
+            # the same holds for admitted; with politeness off it is a
+            # cheap projection of the persisted rb cache, and a second
+            # persist would only double-fill memory
             admitted = admitted.persist()
             st.cached.append(admitted)
-        # else: admitted is a cheap projection of the already-persisted
-        # rb cache — a second persist would just double-fill memory and
-        # add a cache pass per round.
         return rb, waiting, deferred, admitted
 
     def _fetch_parse(self, st: _RoundState, admitted: DataFrame) -> DataFrame:
@@ -1100,15 +1088,17 @@ class Engine:
         # bucket however few rows it holds). A hash repartition of the
         # html-free admitted rows costs one tiny shuffle (when the pages
         # side does not broadcast, the join's own shuffle on url replaces
-        # it); in pages_table mode coalesce keeps the storage-partitioned
-        # join Exchange-free.
+        # it). In pages_table mode that shuffle hashes url into the
+        # table's buckets (murmur3-pmod IS the bucket function), so the
+        # pages scan joins in place, and coalesce then sizes the stage.
         n_udf = min(self.spark.sparkContext.defaultParallelism, st.frontier_count)
         if cfg.pages_table is None:
             to_fetch = admitted.repartition(n_udf, F.col("url_hash"))
             fetched = to_fetch.join(pages, to_fetch["url"] == pages["_p_url"], "left")
         else:
-            fetched = admitted.join(
-                pages, admitted["url"] == pages["_p_url"], "left"
+            to_fetch = admitted.repartition(cfg.fetch_buckets, F.col("url"))
+            fetched = to_fetch.join(
+                pages, to_fetch["url"] == pages["_p_url"], "left"
             ).coalesce(n_udf)
         _explain(
             "ANT_SPARK_EXPLAIN_FETCH",
@@ -1213,36 +1203,29 @@ class Engine:
         if cfg.max_depth is not None:
             links = links.filter(F.col("parent_depth") + 1 <= cfg.max_depth)
         links = links.withColumn("url_hash", url_hash(F.col("url")))
+        exact = cfg.dedupe == "exact" or self._bloom is None
+        if self._bucketed and exact:
+            # shuffle the (small) per-round candidates into the seen
+            # table's bucketing: this one Exchange serves the window
+            # below, the exact anti-join (storage-partitioned — the huge
+            # seen side is read in place) and the bucketed rank join.
+            links = links.repartition(cfg.state_partitions, F.col("url_hash"))
         links = first_occurrence(
             links, ["url_hash", "url"], ["parent_seq", "link_idx"]
         )
-
-        exact = cfg.dedupe == "exact" or self._bloom is None
-        if self._bucketed and exact:
-            # stage candidates into a table bucketed like `seen`: the
-            # exact anti-join becomes storage-partitioned — the (huge)
-            # seen side is read in place with NO Exchange; only the
-            # (small) per-round candidate set pays a bucket shuffle,
-            # folded into this write.
-            _bucketed_table(
-                self.spark, links.drop("raw_url"), self._links_tbl, "url_hash",
-                cfg.state_partitions,
-                os.path.join(self._round_dir(self._root, st.r + 1), "links_staged"),
-            )
-            links = self.spark.table(self._links_tbl)
-            if self._pj_bucketed is not None:
-                # URL-level rank at corpus scale: both sides bucketed
-                # on url_hash → storage-partitioned SMJ, no Exchange on
-                # the (10^10-row) rank side; url equality rides along
-                # for hash-collision safety. The joined priority flows
-                # through dedupe + seq assignment to the final select.
-                pj = self._pj_bucketed
-                links = links.join(
-                    pj,
-                    (links["url_hash"] == pj["_pj_hash"])
-                    & (links["url"] == pj["_pj_url"]),
-                    "left",
-                ).drop("_pj_hash", "_pj_url")
+        if self._pj_bucketed is not None:
+            # URL-level rank at corpus scale (bucketed exact mode only):
+            # both sides bucketed on url_hash → storage-partitioned SMJ,
+            # no Exchange on the (10^10-row) rank side; url equality
+            # rides along for hash-collision safety. The joined priority
+            # flows through dedupe + seq assignment to the final select.
+            pj = self._pj_bucketed
+            links = links.join(
+                pj,
+                (links["url_hash"] == pj["_pj_hash"])
+                & (links["url"] == pj["_pj_url"]),
+                "left",
+            ).drop("_pj_hash", "_pj_url")
 
         seen = self._seen_read(st)
         if exact:
@@ -1334,8 +1317,8 @@ class Engine:
         # priority_fn/default value. Catalyst broadcasts a small
         # rank table; at corpus scale set priority_join_broadcast=
         # False with state_backend='bucketed' and a create_rank_table
-        # table — the join then runs upstream against the staged
-        # bucketed links (storage-partitioned SMJ, zero Exchange).
+        # table — the join then runs upstream against the links shuffled
+        # into its bucketing (storage-partitioned SMJ, rank side in place).
         pj = cfg.priority_join.select(
             url_hash(F.col("url")).alias("_pj_hash"),
             F.col("url").alias("_pj_url"),
@@ -1562,11 +1545,11 @@ class Engine:
     def _expire(self, st: _RoundState, old_seen_dir: str | None) -> None:
         """After round r+1's MANIFEST commit: delete the superseded seen
         table dir and the STATE of rounds older than the keep window —
-        frontier / seen_delta / seen_base / bloom / staged snapshots are
-        superseded by the committed round (minus live seen refs);
-        fetched_log, extracted and MANIFEST.json stay — they are the
-        crawl's output. Deleting before the commit would break a resume
-        from the previous MANIFEST."""
+        frontier / seen_delta / seen_base / bloom snapshots are superseded
+        by the committed round (minus live seen refs); fetched_log,
+        extracted and MANIFEST.json stay — they are the crawl's output.
+        Deleting before the commit would break a resume from the previous
+        MANIFEST."""
         if old_seen_dir is not None:
             shutil.rmtree(old_seen_dir, ignore_errors=True)
         if self.cfg.expire_state_rounds is None:
@@ -1576,10 +1559,7 @@ class Engine:
         for d in _entries(self._root):
             if _round_of(d) >= keep_from:
                 continue
-            for state in (
-                "frontier", "seen_delta", "seen_base", "bloom",
-                "links_staged", "admitted_staged",
-            ):
+            for state in ("frontier", "seen_delta", "seen_base", "bloom"):
                 p = os.path.join(d, state)
                 if p not in live and os.path.isdir(p):
                     shutil.rmtree(p, ignore_errors=True)

@@ -139,6 +139,20 @@ BLOOM_STATE = StructType(
     ]
 )
 
+
+def _zero_state(spark, n_buckets: int, n_bytes: int) -> DataFrame:
+    """A filter state of ``n_buckets`` all-zero ``n_bytes`` rows, built by
+    the executors: a createDataFrame of the zeros would ship them inside
+    the tasks. The length reads ``id`` (``id & 0``; the optimizer rewrites
+    ``id * 0`` to 0) so that it cannot fold the zeros into a plan literal."""
+    zeros = F.repeat(F.lit("00"), (F.col("id").bitwiseAND(0) + n_bytes).cast("int"))
+    return spark.range(n_buckets).select(
+        F.col("id").cast("int").alias("bucket"),
+        F.unhex(zeros).alias("bits"),
+        F.lit(0).cast("long").alias("n_items"),
+    )
+
+
 _TEST_OUT = StructType(
     [
         StructField("url_hash", LongType(), False),
@@ -162,15 +176,7 @@ class BloomSidecar:
         self.k = k
 
     def empty_state(self, spark) -> DataFrame:
-        zeros = bytes(self.m_bits // 8)
-        pdf = pd.DataFrame(
-            {
-                "bucket": np.arange(self.n_buckets, dtype=np.int32),
-                "bits": [zeros] * self.n_buckets,
-                "n_items": np.zeros(self.n_buckets, dtype=np.int64),
-            }
-        )
-        return spark.createDataFrame(pdf, schema=BLOOM_STATE)
+        return _zero_state(spark, self.n_buckets, self.m_bits // 8)
 
     def _bucket(self, df: DataFrame, col: str = "url_hash") -> DataFrame:
         return df.withColumn(
@@ -266,15 +272,7 @@ class CuckooSidecar:
         self.n_slots = n_cb * _CUCKOO_SLOTS
 
     def empty_state(self, spark) -> DataFrame:
-        zeros = bytes(self.n_slots * 2)
-        pdf = pd.DataFrame(
-            {
-                "bucket": np.arange(self.n_buckets, dtype=np.int32),
-                "bits": [zeros] * self.n_buckets,
-                "n_items": np.zeros(self.n_buckets, dtype=np.int64),
-            }
-        )
-        return spark.createDataFrame(pdf, schema=BLOOM_STATE)
+        return _zero_state(spark, self.n_buckets, self.n_slots * 2)
 
     def _index_pair(self, hashes: np.ndarray, fps: np.ndarray):
         i1 = (_mix64(hashes ^ np.uint64(0xDEADBEEF)) % np.uint64(self.n_cbuckets)).astype(np.int64)

@@ -30,7 +30,7 @@ Scale shape: the redirect subset of a web corpus is a small fraction of
 rows (and html-free), so the closure is ``max_redirects`` equi-joins over
 that dim-sized subset plus ONE join against the full corpus — run once per
 crawl (or once at ``create_pages_table`` staging time, keeping the
-bucketed zero-Exchange fetch join intact: the stored table is already
+bucketed fetch join's pages scan in place: the stored table is already
 collapsed). Nothing per-round, nothing driver-side except the bounded hop
 loop's empty-check.
 

@@ -52,6 +52,11 @@ ENGINE_CONF: dict[str, str] = {
     # only when it changed (worker_daemon.py): the stock daemon re-reads
     # every archive on the worker path at the start of each Python task.
     "spark.python.daemon.module": "ant_spark.worker_daemon",
+    # PySpark's DataFrame call-site capture wraps every Column function
+    # call with a session lookup, a conf read, a stack walk and two JVM
+    # calls — about half the py4j round trips of building a crawl round's
+    # plans. Errors then carry no DataFrame call-site context.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # Keep scheduling deterministic-ish and cheap in local mode.
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.session.timeZone": "UTC",

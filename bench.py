@@ -79,7 +79,8 @@ def main() -> None:
 
     # --- cluster-scale round shape, first-class benched: the SAME crawl
     # through pages_table + state_backend='bucketed' — BOTH big joins
-    # (fetch and seen anti-join) storage-partitioned with zero Exchanges
+    # (fetch and seen anti-join) storage-partitioned: only the frontier and
+    # the links are shuffled, never the pages or seen table
     # (tools/explain_audit.py check 10 is the plan proof; this records its
     # wall-clock round-over-round so a regression in the 100 TB mode shows
     # up in BENCH_r{N}). One-time corpus staging cost reported separately.

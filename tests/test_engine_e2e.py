@@ -213,10 +213,10 @@ def _w_bucketed_state(spark, tmp):
 
 def _w_bucketed_pages(spark, tmp):
     """cfg.pages_table: the fetch join reads a url-bucketed page corpus
-    with the admitted frontier staged into the same bucketing — plan is a
-    0-Exchange storage-partitioned SMJ (tools/explain_audit.py checks 6 and
-    10); semantics must match the plain join exactly, including BFS seq
-    parity and resume."""
+    with the admitted frontier shuffled into the same bucketing — plan is
+    a storage-partitioned SMJ that reads the pages scan in place
+    (tools/explain_audit.py checks 6 and 10); semantics must match the
+    plain join exactly, including BFS seq parity and resume."""
     pages, robots, seeds, pages_pdf = _example(spark)
     Engine.create_pages_table(
         spark, pages, "t_pages_bkt", str(tmp / "pages_tbl"), buckets=4
@@ -295,14 +295,14 @@ def _w_bucketed_compaction(spark, tmp):
 
 def _w_crash_window(spark, tmp):
     """The full cluster-scale mode (pages_table fetch bucketing AND bucketed
-    seen backend — zero Exchanges on both big joins) killed BETWEEN a
-    round's staged writes and its manifest commit: the crashed round leaves
-    admitted_staged/links_staged dirs, an orphan seen-table append tagged
-    with the uncommitted round, and an uncommitted fetched_log. Resume must
-    restart from the last MANIFEST, deterministically re-run the round over
-    the orphans (overwriting the staged tables; the seen read filters
-    round <= committed so the orphan append is invisible until the
-    identical delta recommits over it) and stay exactly-once."""
+    seen backend — both big joins read their bucketed table in place)
+    killed BETWEEN a round's writes and its manifest commit: the crashed
+    round leaves an orphan seen-table append tagged with the uncommitted
+    round and an uncommitted fetched_log. Resume must restart from the
+    last MANIFEST, deterministically re-run the round over the orphans
+    (the seen read filters round <= committed so the orphan append is
+    invisible until the identical delta recommits over it) and stay
+    exactly-once."""
     cfg = GraphConfig(n_pages=60, n_hosts=3, crawl_delay_hosts=0,
                       robots_disallow_hosts=0, flaky_every=0)
     pages_pdf, robots_pdf, seeds = generate(cfg)
@@ -318,13 +318,17 @@ def _w_crash_window(spark, tmp):
     eng = Engine(spark, None, None, CrawlConfig(max_rounds=3, **ecfg))
     eng.run(seeds)
     r_last, _ = eng.latest_round(ckpt)
-    # simulate the crash window: all of round r_last's state (staged
-    # bucketed tables, seen append, fetched_log) is on disk, but the
-    # manifest never committed
+    # simulate the crash window: all of round r_last's state (seen
+    # append, fetched_log) is on disk, but the manifest never committed
     os.remove(os.path.join(ckpt, f"round={r_last:05d}", "MANIFEST.json"))
-    assert os.path.isdir(
-        os.path.join(ckpt, f"round={r_last:05d}", "admitted_staged")
-    )  # the orphan staged fetch table the resumed round must overwrite
+    _, manifest = eng.latest_round(ckpt)
+    seen_tbl = spark.read.schema(schemas.SEEN).parquet(
+        os.path.join(ckpt, manifest["seen_table_path"])
+    )
+    # the orphan seen append the resumed round's seen read must not see
+    assert seen_tbl.filter(f"round = {r_last}").count() > 0
+    # and the uncommitted round's log, which the resumed round overwrites
+    assert os.path.isdir(os.path.join(ckpt, f"round={r_last:05d}", "fetched_log"))
 
     res = Engine(spark, None, None, CrawlConfig(max_rounds=50, **ecfg)).run(
         seeds, resume=True)

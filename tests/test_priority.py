@@ -210,17 +210,19 @@ def _w_bulk_seed(spark):
 def test_priority_join_bucketed_zero_exchange(spark, tmp_path):
     """Corpus-scale rank path (priority_join_broadcast=False + bucketed
     state): the rank table written via Engine.create_rank_table joins the
-    staged links as a storage-partitioned SMJ — crawl order matches the
-    broadcast path exactly, and with broadcast disabled every round's
-    dedupe+rank plan has ZERO Exchange nodes (the huge rank side is read
-    in place — queue.go:12-49 priority seam at 10^10-frontier shape)."""
+    links as a storage-partitioned SMJ — crawl order matches the broadcast
+    path exactly, and with broadcast disabled every round's dedupe+rank
+    plan reads the rank and seen scans in place, bucketed, and shuffles
+    only the links, once, into the tables' 8 url_hash buckets (the huge
+    rank side never moves — queue.go:12-49 priority seam at
+    10^10-frontier shape)."""
     import io
     import os
-    import re
     from contextlib import redirect_stdout
 
     from ant_spark.functions.parse import make_links_udf
     from ant_spark.operators.graphops import pagerank, rank_priority_table
+    from ant_spark.plan_audit import bucketed_join_problems, tagged_plans
     from ant_spark.sources.webgraph import example_hub_site
 
     pages_pdf, _, seeds = example_hub_site()
@@ -261,8 +263,11 @@ def test_priority_join_bucketed_zero_exchange(spark, tmp_path):
         for r in res.fetched_log.orderBy("round").collect()
     ]
     assert order == ["/", "hub.html", "x.html", "p1.html", "p2.html"]
-    n_ex = [int(m) for m in re.findall(r"Exchanges=(\d+)", plans)]
-    assert n_ex and all(x == 0 for x in n_ex), n_ex
+    rounds = tagged_plans(plans, "dedupe-plan")
+    assert rounds
+    for plan in rounds:
+        for table in ("t_rank_bkt", "ant_seen_"):
+            assert bucketed_join_problems(plan, table, "url_hash", 8) == []
     assert "_pj_hash" in plans and "SortMergeJoin LeftOuter" in plans
 
 

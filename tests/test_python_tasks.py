@@ -3,7 +3,8 @@
 ``worker_daemon.patch_zipimporter``: the per-task ``invalidate_caches()`` of
 PySpark's worker re-reads an import archive only when it changed. The
 engine sizes the stage that runs the parse and normalize UDFs from
-``defaultParallelism`` and the frontier count, not from the storage layout.
+``defaultParallelism`` and the frontier count, not from the storage layout,
+and runs them once per fetched page.
 """
 
 from __future__ import annotations
@@ -175,3 +176,51 @@ def test_parse_stage_sized_to_cores(spark, tmp_path, pages_table):
     assert res.pages_fetched == 48
     want = min(spark.sparkContext.defaultParallelism, res.pages_fetched)
     assert len(os.listdir(rec)) == want
+
+
+def _digest_renderer(out_dir: str):
+    """Render kernel that returns html unchanged and records one line, the
+    html's digest, per call."""
+
+    def render(html):
+        import hashlib
+
+        with open(os.path.join(out_dir, str(os.getpid())), "a") as f:
+            f.write(hashlib.sha1(html).hexdigest() + "\n")
+        return html
+
+    return render
+
+
+@pytest.mark.parametrize("bucketed", [False, True])
+def test_parse_stage_runs_once_per_fetched_page(spark, tmp_path, bucketed):
+    """Each fetched page crosses the parse-stage UDFs exactly once over a
+    multi-round crawl: the cached fetch+parse frame is never recomputed by
+    the round's counting action, its writes or the next round."""
+    import hashlib
+    from collections import Counter
+
+    pages_pdf, _, seeds = generate(
+        GraphConfig(n_pages=80, n_hosts=4, crawl_delay_hosts=0)
+    )
+    pages = spark.createDataFrame(pages_pdf, schema=schemas.PAGES)
+    cfg = dict(max_rounds=3, checkpoint_dir=str(tmp_path / "ck"))
+    if bucketed:
+        Engine.create_pages_table(
+            spark, pages, "pt_once", str(tmp_path / "pt"), buckets=4
+        )
+        cfg.update(pages_table="pt_once", fetch_buckets=4,
+                   state_backend="bucketed", state_partitions=4)
+    rec = tmp_path / "calls"
+    rec.mkdir()
+    res = Engine(
+        spark, pages, None,
+        CrawlConfig(render_fn=_digest_renderer(str(rec)), **cfg),
+    ).run(seeds)
+    calls = Counter(
+        line for f in os.listdir(rec) for line in (rec / f).read_text().split()
+    )
+    html = dict(zip(pages_pdf.url, pages_pdf.html))
+    fetched = [r["url"] for r in res.fetched_log.collect()]
+    assert res.pages_fetched == len(fetched) > 0
+    assert calls == Counter(hashlib.sha1(html[u]).hexdigest() for u in fetched)

@@ -220,7 +220,9 @@ _DEFAULT_TAIL = """Per-round metric breakdown and the per-sf operator timings ar
   ~1.5s — the bucketed win is STRUCTURAL: at a 10^10-URL seen set the
   eliminated seen-side Exchange is hundreds of GB per round (storage-
   partitioned Iceberg analogue; a 2M-row join measured 3.3s→1.0s).
-  `python tools/explain_audit.py` check 10 asserts the 0-Exchange plans.
+  `python tools/explain_audit.py` check 10 now asserts that the seen scan
+  is never exchanged (the staging write is gone: the links are shuffled
+  once, in memory, into the seen table's buckets).
 - **seen compaction + state expiry**: per-round seen scan is O(1) dirs
   (delta dirs folded every `seen_compact_every` rounds) and round state
   older than `expire_state_rounds` is deleted (logs/manifests kept).

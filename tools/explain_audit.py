@@ -8,8 +8,10 @@ Checks (ARCHITECTURE.md §6):
   4. text/similarity operators stay inside WholeStageCodegen with no
      Python eval (BatchEvalPython/ArrowEvalPython) in their plans;
   5-10. engine round plans (numbered inline below) — among them, with
-     broadcast disabled, the bucketed fetch join (6) and the full
-     pages_table + bucketed-state round (10) run with 0 Exchanges.
+     broadcast disabled, the bucketed fetch join (6), the bucketed rank
+     join (8) and the full pages_table + bucketed-state round (10) read
+     the bucketed table in place and shuffle only the other join side,
+     once, into the table's bucket layout.
 
 Usage: python tools/explain_audit.py [sf_dir]
 """
@@ -180,10 +182,22 @@ def main() -> None:
 
     # 6. bucketed fetch mode: the html-bearing pages scan must never be
     # exchanged — with broadcast disabled (the 100 TB shape where neither
-    # side broadcasts) the fetch join must be a storage-partitioned SMJ
-    # over two bucketed scans with ZERO Exchange nodes.
+    # side broadcasts) the fetch join reads the bucketed pages scan in
+    # place and shuffles only the admitted frontier, once, into the
+    # table's 4 url buckets (ant_spark/plan_audit.py).
     import re
     import tempfile as _tf
+
+    from ant_spark.plan_audit import bucketed_join_problems, tagged_plans
+
+    def joins_in_place(out, tag, table, key, buckets):
+        """Whether every ``tag`` plan in ``out`` joins ``table`` in place
+        (printing each problem), and how many plans there were."""
+        plans = tagged_plans(out, tag)
+        probs = [bucketed_join_problems(p, table, key, buckets) for p in plans]
+        for msg in (m for ps in probs for m in ps):
+            print(f"  {tag}: {msg}")
+        return bool(plans) and not any(probs), len(plans)
 
     with no_broadcast_plans(spark, "ANT_SPARK_EXPLAIN_FETCH") as buf:
         tbl_dir = _tf.mkdtemp(prefix="audit_pages_tbl_")
@@ -195,16 +209,12 @@ def main() -> None:
             CrawlConfig(max_rounds=3, pages_table="audit_pages_bkt",
                         fetch_buckets=4),
         ).run(seeds)
-    fetch_out = buf.getvalue()
-    n_ex = [int(m) for m in re.findall(r"Exchanges=(\d+)", fetch_out)]
-    ok6 = (
-        bool(n_ex)
-        and all(x == 0 for x in n_ex)
-        and "SortMergeJoin" in fetch_out
-        and "Bucketed: true" in fetch_out
+    ok6, n6 = joins_in_place(
+        buf.getvalue(), "fetch-plan", "audit_pages_bkt", "url", 4
     )
-    print(f"{'PASS' if ok6 else 'FAIL'}  bucketed_fetch_no_exchange "
-          f"(fetch-join Exchanges per round: {n_ex}, SMJ over bucketed scans)")
+    print(f"{'PASS' if ok6 else 'FAIL'}  bucketed_fetch_scan_in_place "
+          f"({n6} fetch plans: pages scan bucketed and never exchanged, "
+          f"frontier shuffled once into its 4 url buckets)")
     results.append(ok6)
 
     # 7. priority_join rounds: the URL-level rank table must ride as a
@@ -243,10 +253,10 @@ def main() -> None:
 
     # 8. priority_join at corpus scale (priority_join_broadcast=False +
     # bucketed state): with broadcast disabled entirely, the rank-table
-    # join must run as a storage-partitioned SortMergeJoin stacked on the
-    # bucketed anti-join — ZERO Exchange nodes in every round's dedupe
-    # plan (the 10^10-row rank side is read in place; queue.go:12-49
-    # priority seam at frontier scale).
+    # join and the anti-join above it read the bucketed rank and seen
+    # scans in place; the links are shuffled once, into the 8 url_hash
+    # buckets both tables share (the 10^10-row rank side never moves;
+    # queue.go:12-49 priority seam at frontier scale).
     with no_broadcast_plans(spark, "ANT_SPARK_EXPLAIN_DEDUPE") as buf:
         rank_dir = _tf.mkdtemp(prefix="audit_rank_tbl_")
         rtab = Engine.create_rank_table(
@@ -263,17 +273,18 @@ def main() -> None:
             ),
         ).run(hseeds)
     pjb_out = buf.getvalue()
-    n_ex8 = [int(m) for m in re.findall(r"Exchanges=(\d+)", pjb_out)]
+    ok_rank, n8 = joins_in_place(
+        pjb_out, "dedupe-plan", "audit_rank_bkt", "url_hash", 8
+    )
+    ok_seen, _ = joins_in_place(pjb_out, "dedupe-plan", "ant_seen_", "url_hash", 8)
     ok8 = (
-        bool(n_ex8)
-        and all(x == 0 for x in n_ex8)
-        and "_pj_hash" in pjb_out
+        ok_rank and ok_seen
         and "SortMergeJoin LeftOuter" in pjb_out
         and "SortMergeJoin LeftAnti" in pjb_out
     )
-    print(f"{'PASS' if ok8 else 'FAIL'}  priority_join_bucketed_no_exchange "
-          f"(dedupe+rank-join Exchanges per round: {n_ex8}, SMJ over "
-          f"bucketed rank table)")
+    print(f"{'PASS' if ok8 else 'FAIL'}  priority_join_bucketed_scan_in_place "
+          f"({n8} dedupe plans: rank and seen scans bucketed and never "
+          f"exchanged, links shuffled once into 8 url_hash buckets)")
     results.append(ok8)
 
     # 9. redirect-chain closure (operators/redirects.py): the hop LOOP
@@ -323,8 +334,10 @@ def main() -> None:
     results.append(ok9)
 
     # 10. the full 100 TB round shape: pages_table AND the bucketed seen
-    # state, broadcast disabled — BOTH big joins storage-partitioned, so
-    # every round's fetch plan AND dedupe plan show ZERO Exchanges.
+    # state, broadcast disabled — in every round BOTH big joins read their
+    # bucketed table in place: the fetch plan shuffles only the frontier
+    # (4 url buckets), the dedupe plan only the links (32 url_hash
+    # buckets, the default state_partitions).
     with no_broadcast_plans(
         spark, "ANT_SPARK_EXPLAIN_FETCH", "ANT_SPARK_EXPLAIN_DEDUPE"
     ) as buf:
@@ -334,14 +347,16 @@ def main() -> None:
                         fetch_buckets=4, state_backend="bucketed"),
         ).run(seeds)
     both_out = buf.getvalue()
-    fetch_ex = [int(m) for m in re.findall(r"\[fetch-plan[^\n]*Exchanges=(\d+)", both_out)]
-    dedupe_ex = [int(m) for m in re.findall(r"\[dedupe-plan[^\n]*Exchanges=(\d+)", both_out)]
-    ok10 = (
-        bool(fetch_ex) and bool(dedupe_ex)
-        and all(x == 0 for x in fetch_ex + dedupe_ex)
+    ok_fetch, n_fetch = joins_in_place(
+        both_out, "fetch-plan", "audit_pages_bkt", "url", 4
     )
-    print(f"{'PASS' if ok10 else 'FAIL'}  bucketed_round_no_exchange "
-          f"(fetch-join Exchanges per round: {fetch_ex}, dedupe: {dedupe_ex})")
+    ok_dedupe, n_dedupe = joins_in_place(
+        both_out, "dedupe-plan", "ant_seen_", "url_hash", 32
+    )
+    ok10 = ok_fetch and ok_dedupe
+    print(f"{'PASS' if ok10 else 'FAIL'}  bucketed_round_scans_in_place "
+          f"({n_fetch} fetch and {n_dedupe} dedupe plans: pages and seen "
+          f"scans never exchanged, one bucket shuffle on the other side)")
     results.append(ok10)
 
     print(f"\n{'ALL PASS' if all(results) else 'AUDIT FAILURES'}")

@@ -13,7 +13,9 @@ Three golden-fixture crawls cover the engine's paths, each under a
 - ``polite``: ``Crawl-delay: 0.5`` robots, ``host_rates``, two
   ``pattern_rates`` and ``global_rate`` (the budget windows);
 - ``bucketed``: ``pages_table`` with ``state_backend="bucketed"`` (the
-  staged fetch and links tables).
+  fetch join against the bucketed pages table and the anti-join against
+  the bucketed seen table, each with its other side shuffled into the
+  table's buckets).
 
 Usage:
     python tools/round_plan_dump.py /tmp/plan_now.txt
@@ -24,7 +26,7 @@ Usage:
 The second argument selects which repo's ant_spark to import (defaults to
 this tool's parent repo), so the SAME scrubber runs for both versions.
 Scrubbed: expr ids (#123), plan/node ids, python UDF names, checkpoint
-tmp paths, per-checkpoint table names (``ant_adm_<md5>``), UUIDs.
+tmp paths, the per-checkpoint seen table name (``ant_seen_<md5>``), UUIDs.
 """
 
 from __future__ import annotations
@@ -44,7 +46,7 @@ def _scrub(out: str) -> str:
     out = re.sub(r"pythonUDF\d+", "pythonUDFN", out)
     out = re.sub(r"parse_udf\(\w*", "parse_udf(", out)
     out = re.sub(r"plan_id=\d+", "plan_id=N", out)
-    out = re.sub(r"ant_(adm|seen|links)_[0-9a-f]+", r"ant_\1_TBL", out)
+    out = re.sub(r"ant_seen_[0-9a-f]+", "ant_seen_TBL", out)
     out = re.sub(r"ant_spark_[A-Za-z0-9_]+", "ant_spark_TMP", out)
     out = re.sub(r"rpd_[A-Za-z0-9_]+", "rpd_TMP", out)
     return re.sub(
